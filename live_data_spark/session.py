@@ -7,9 +7,12 @@ operator in the package inherits them.
 
 Scale notes (100 TB posture):
 - AQE on: runtime partition coalescing, skew-join splitting, dynamic
-  broadcast decisions replace any hand-tuned shuffle counts.
-- ``spark.sql.shuffle.partitions`` is only the *initial* number; AQE
-  coalesces it down. On a real cluster set it ~2-3x total cores.
+  broadcast decisions for batch queries.
+- ``spark.sql.shuffle.partitions`` is only the *initial* number for a batch
+  query; AQE coalesces it down. On a real cluster set it ~2-3x total cores.
+  AQE cannot coalesce a stateful streaming exchange: there the count is the
+  number of state stores, so ``streaming/jobs.py`` starts every stream with
+  it capped at one per core (see its state-partition notes).
 - Session timezone pinned to UTC so parquet TIMESTAMP (isAdjustedToUTC=false)
   values are stable regardless of host TZ (SURVEY.md §7.2a).
 - Arrow enabled for the few Pandas-UDF paths (similarity/multimodal).

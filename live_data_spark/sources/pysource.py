@@ -326,6 +326,8 @@ def pysource_stream_batch_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import tempfile
 
+    from live_data_spark.streaming.jobs import run_available_now
+
     register_synthetic_docs(spark)
     register_synthetic_docs_stream(spark)
 
@@ -334,18 +336,13 @@ def pysource_stream_batch_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         # one availableNow invocation consumes ONE simple-reader batch;
         # ceil(n/batch) drains exhaust the declared doc space
         for _ in range(-(-PYSOURCE_PARITY_N // PYSOURCE_PARITY_BATCH)):
-            q = (
+            stream = (
                 spark.readStream.format("synthetic_docs_stream")
                 .option("n", PYSOURCE_PARITY_N)
                 .option("batch_size", PYSOURCE_PARITY_BATCH)
                 .load()
-                .writeStream.format("parquet")
-                .option("path", sink)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
             )
-            q.awaitTermination()
+            run_available_now(stream, sink, ckpt)
         streamed = spark.read.parquet(sink)
         batch = (
             spark.read.format("synthetic_docs").option("n", PYSOURCE_PARITY_N).load()

@@ -19,12 +19,25 @@ State & scale notes: every stateful op here carries a watermark so state is
 bounded (late data beyond it is dropped — the contract that makes 100 TB of
 history irrelevant to executor memory). Sinks are parquet-file sinks with
 checkpointed WALs: restart-safe, exactly-once per file commit.
+
+State partitions: a stateful operator keeps one state store per
+``spark.sql.shuffle.partitions`` partition and loads and commits every one
+of them each micro-batch; AQE cannot coalesce a stateful exchange. Every
+query therefore starts through ``_drain_available_now``, which caps the
+count at ``defaultParallelism`` (one state partition per core). The count
+is frozen at a checkpoint's first start: Spark records it in the offset
+log and a restart reuses it. On a cluster, ``defaultParallelism`` counts
+the cores of the executors registered at that first start; a cluster that
+grows later does not re-partition the state (a fresh checkpoint re-sizes).
 """
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery, StreamingQueryListener
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -341,7 +354,10 @@ def funnel_tracker(events: DataFrame, steps: tuple[str, ...] = ("view", "click",
 
 
 def error_context_join(
-    events: DataFrame, window: str = "5 minutes", watermark: str = "10 minutes"
+    events: DataFrame,
+    window: str = "5 minutes",
+    watermark: str = "10 minutes",
+    how: str = "inner",
 ) -> DataFrame:
     """Stream-stream interval join: each error paired with the same user's
     events in the preceding ``window`` — streaming twin of the batch
@@ -353,7 +369,8 @@ def error_context_join(
     (watermark + window) for BOTH sides — an unbounded-condition
     stream-stream join would keep every row forever. Inner join emits a
     pair as soon as both rows have arrived; the watermark only governs
-    state cleanup and late-data cutoff.
+    state cleanup and late-data cutoff. ``how="leftOuter"`` is
+    ``error_context_join_outer``.
     """
     errors = (
         events.where(F.col("event_type") == "error")
@@ -370,6 +387,7 @@ def error_context_join(
         F.expr(
             f"user_id = err_user AND ts >= err_ts - interval {window} AND ts < err_ts"
         ),
+        how,
     ).select(
         "error_id",
         F.col("err_user").alias("user_id"),
@@ -404,30 +422,7 @@ def error_context_join_outer(
     advances only on its OWN rows. A quiet error side (or quiet context
     side) freezes eviction for the whole join; monitor both.
     """
-    errors = (
-        events.where(F.col("event_type") == "error")
-        .select(
-            F.col("event_id").alias("error_id"),
-            F.col("user_id").alias("err_user"),
-            F.col("ts").alias("err_ts"),
-        )
-        .withWatermark("err_ts", watermark)
-    )
-    ctx = events.where(F.col("event_type") != "error").withWatermark("ts", watermark)
-    return errors.join(
-        ctx,
-        F.expr(
-            f"user_id = err_user AND ts >= err_ts - interval {window} AND ts < err_ts"
-        ),
-        "leftOuter",
-    ).select(
-        "error_id",
-        F.col("err_user").alias("user_id"),
-        "err_ts",
-        F.col("event_id").alias("context_event_id"),
-        F.col("ts").alias("context_ts"),
-        F.col("event_type").alias("context_type"),
-    )
+    return error_context_join(events, window, watermark, "leftOuter")
 
 
 def run_available_now_update(result: DataFrame, sink_dir: str, checkpoint_dir: str) -> None:
@@ -445,17 +440,44 @@ def run_available_now_update(result: DataFrame, sink_dir: str, checkpoint_dir: s
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.withColumn("__batch_id", F.lit(batch_id)).write.mode("append").parquet(sink_dir)
 
-    q = (
-        result.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_available_now(result, checkpoint_dir, batch_fn=write_batch, output_mode="update")
 
 
 # -- sinks / runners ---------------------------------------------------------
+
+
+def _drain_available_now(
+    result: DataFrame,
+    checkpoint_dir: str,
+    sink_dir: str | None = None,
+    batch_fn: Callable[[DataFrame, int], None] | None = None,
+    output_mode: str = "append",
+) -> StreamingQuery:
+    """Start ``result`` as an AvailableNow query into a parquet sink at
+    ``sink_dir`` (or ``foreachBatch(batch_fn)``) and wait for it to drain.
+    Every stream in the package starts here (tests/test_stream_hygiene.py).
+    The query clones the session inside ``start()``, so the state-partition
+    cap (module notes) is set only around it; ``foreachBatch`` bodies run
+    in the clone and see the capped count too."""
+    writer = (
+        result.writeStream.option("checkpointLocation", checkpoint_dir)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+    )
+    if batch_fn is None:
+        writer = writer.format("parquet").option("path", sink_dir)
+    else:
+        writer = writer.foreachBatch(batch_fn)
+    spark = result.sparkSession
+    key = "spark.sql.shuffle.partitions"
+    session_value = spark.conf.get(key)
+    spark.conf.set(key, str(min(int(session_value), spark.sparkContext.defaultParallelism)))
+    try:
+        q = writer.start()
+    finally:
+        spark.conf.set(key, session_value)
+    q.awaitTermination()
+    return q
 
 
 def run_available_now(
@@ -467,15 +489,22 @@ def run_available_now(
     the checkpoint WAL carries source offsets + operator state across
     invocations, so successive calls process only new files.
     """
-    q = (
-        result.writeStream.format("parquet")
-        .option("path", sink_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_available_now(result, checkpoint_dir, sink_dir, output_mode=output_mode)
+
+
+class _ProgressLog(StreamingQueryListener):
+    """Every progress event; ``StreamingQuery.recentProgress`` keeps only
+    the last ``spark.sql.streaming.numRecentProgressUpdates``."""
+
+    def __init__(self) -> None:
+        self.progress: list = []
+
+    def onQueryProgress(self, event) -> None:
+        self.progress.append(event.progress)
+
+    def onQueryStarted(self, event) -> None: ...
+
+    def onQueryTerminated(self, event) -> None: ...
 
 
 def run_available_now_observed(
@@ -494,32 +523,30 @@ def run_available_now_observed(
     ``StreamingQueryProgress.observedMetrics`` — row counts / null rates
     per micro-batch with NO second pass and no foreachBatch detour. At
     100 TB this is how an ingest pipeline emits freshness/volume
-    telemetry: the numbers ride the write job, and a monitoring listener
-    (StreamingQueryListener in production) reads progress events instead
-    of querying the sink. Returns the per-batch metric dicts, batch
-    order preserved, empty batches included (their aggregates evaluate
-    over zero rows).
+    telemetry: the numbers ride the write job, and a StreamingQueryListener
+    reads progress events instead of querying the sink (as here: the
+    query's own progress buffer is capped). Returns every batch's metric
+    dict in batch order, empty batches included (their aggregates
+    evaluate over zero rows).
     """
     observed = result.observe(
         "write_metrics", *[F.expr(e).alias(k) for k, e in metrics.items()]
     )
-    q = (
-        observed.writeStream.format("parquet")
-        .option("path", sink_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    out: list[dict] = []
-    for p in q.recentProgress:
-        om = (p.get("observedMetrics") or {}).get("write_metrics")
-        if om is not None:
-            # progress JSON parses the metrics row as a Row in some
-            # PySpark versions, a plain dict in others
-            out.append(om.asDict() if hasattr(om, "asDict") else dict(om))
-    return out
+    spark = result.sparkSession
+    log = _ProgressLog()
+    spark.streams.addListener(log)
+    try:
+        q = _drain_available_now(observed, checkpoint_dir, sink_dir, output_mode=output_mode)
+        # listeners hear progress asynchronously: let the bus catch up
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    finally:
+        spark.streams.removeListener(log)
+    # one listener-bus queue delivers a query's progress in batch order
+    return [
+        p.observedMetrics["write_metrics"].asDict()
+        for p in log.progress
+        if str(p.runId) == q.runId and "write_metrics" in p.observedMetrics
+    ]
 
 
 def landing_append_stream(
@@ -543,15 +570,7 @@ def landing_append_stream(
         .option("timestampNTZFormat", "yyyy-MM-dd HH:mm:ss[.SSSSSS]")
         .csv(landing_dir)
     )
-    q = (
-        stream.writeStream.format("parquet")
-        .option("path", raw_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(stream, raw_dir, checkpoint_dir)
 
 
 def spacesaving_insert(
@@ -729,15 +748,8 @@ def incremental_dedup_stream(
         finally:
             cls.unpersist()
 
-    q = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .parquet(landing_dir)
-        .writeStream.foreachBatch(classify_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    stream = spark.readStream.schema(DOCS_SCHEMA).parquet(landing_dir)
+    _drain_available_now(stream, checkpoint_dir, batch_fn=classify_batch)
 
 
 # -- streaming upsert sink (keyed keep-latest store) -------------------------
@@ -818,15 +830,8 @@ def upsert_events_stream(
     def work(batch_df: DataFrame, batch_id: int) -> None:
         merge_upsert_batch(batch_df, store_dir, unique_key, recency_key)
 
-    q = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .parquet(landing_dir)
-        .writeStream.foreachBatch(work)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    stream = spark.readStream.schema(EVENTS_SCHEMA).parquet(landing_dir)
+    _drain_available_now(stream, checkpoint_dir, batch_fn=work)
 
 
 def countmin_update_stream(
@@ -859,14 +864,8 @@ def countmin_update_stream(
             "append"
         ).parquet(cells_dir)
 
-    q = (
-        read_events_stream(spark, landing_dir)
-        .writeStream.foreachBatch(add_partials)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    stream = read_events_stream(spark, landing_dir)
+    _drain_available_now(stream, checkpoint_dir, batch_fn=add_partials)
 
 
 def countmin_cells_state(spark: SparkSession, cells_dir: str) -> DataFrame:
@@ -951,12 +950,5 @@ def snapshot_scd2_stream(
             new_state = snapshot_merge(current, latest, unique_key, updated_at)
         _write_generation(sess, Path(snapshot_root), new_state)
 
-    q = (
-        spark.readStream.schema(schema)
-        .parquet(landing_dir)
-        .writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    stream = spark.readStream.schema(schema).parquet(landing_dir)
+    _drain_available_now(stream, checkpoint_dir, batch_fn=merge_batch)

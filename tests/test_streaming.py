@@ -9,7 +9,9 @@ incremental append (two drops → two micro-batch runs → exactly-once).
 
 from __future__ import annotations
 
+import contextlib
 import datetime as dt
+import json
 
 import pytest
 from pyspark.sql import functions as F
@@ -138,6 +140,144 @@ def test_user_running_totals_state_survives_restart(spark, tmp_path):
     # 50+4 value); user 0 saw no new events → no new emission, latest
     # stays at the run-1 totals
     assert t2 == {0: (5, 50.0), 1: (9, 54.0)}
+
+
+SHUFFLE = "spark.sql.shuffle.partitions"
+
+
+@contextlib.contextmanager
+def _session_conf(spark, key, value):
+    before = spark.conf.get(key)
+    spark.conf.set(key, str(value))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, before)
+
+
+def _land(spark, src, name, first_min, last_min, sentinels=False):
+    """One file drop: an event every 2 minutes over [first_min, last_min),
+    5 users; ``sentinels`` adds one far-future event per user so append
+    mode emits every real window."""
+    rows = [(m, m % 5, ["click", "view", "buy"][m % 3], (m % 7) + 0.5)
+            for m in range(first_min, last_min, 2)]
+    if sentinels:
+        rows += [(SENTINEL_MIN, uid, "sentinel", 0.0) for uid in range(5)]
+    df = _mk_events(spark, rows).withColumn("event_id", F.col("event_id") + first_min * 1000)
+    df.write.parquet(str(src / name))
+
+
+def _drain_rollup_and_totals(spark, src, out):
+    events = lambda: jobs.read_events_stream(spark, f"{src}/*")  # noqa: E731
+    jobs.run_available_now(
+        jobs.hourly_rollup(events()), str(out / "rollup"), str(out / "rollup_ckpt")
+    )
+    jobs.run_available_now_update(
+        jobs.user_running_totals(events()), str(out / "totals"), str(out / "totals_ckpt")
+    )
+
+
+def _state_layout(ckpt):
+    """(shuffle partitions in the latest offset-log entry, state partition dirs)"""
+    offsets = max((ckpt / "offsets").glob("[0-9]*"), key=lambda f: int(f.name))
+    conf = json.loads(offsets.read_text().splitlines()[1])["conf"]
+    dirs = [d for d in (ckpt / "state" / "0").iterdir() if d.name.isdigit()]
+    return int(conf[SHUFFLE]), len(dirs)
+
+
+def _assert_sinks_match_batch(spark, src, out):
+    landed = spark.read.schema(jobs.EVENTS_SCHEMA).parquet(f"{src}/*")
+    # the sentinel windows are the (intentionally) unflushed ones
+    want = jobs.hourly_rollup(landed.where(F.col("event_type") != "sentinel"))
+    got = spark.read.parquet(str(out / "rollup")).select(*want.columns)
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+    want_totals = {
+        r["user_id"]: (r["n"], r["v"])
+        for r in landed.groupBy("user_id")
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("v"))
+        .collect()
+    }
+    emitted = sorted(spark.read.parquet(str(out / "totals")).collect(), key=lambda r: r["__batch_id"])
+    latest = {r["user_id"]: (r["n_events"], r["total_value"]) for r in emitted}
+    assert latest == want_totals
+
+
+def test_stream_state_partitions_capped_at_parallelism(spark, tmp_path):
+    """A session at 32 shuffle partitions starts its stateful streams
+    with at most one state partition per core: the offset log records
+    min(32, defaultParallelism), that many state stores exist, results
+    equal the batch twins over two landed slices, and the session keeps
+    its own count for batch work."""
+    cap = min(32, spark.sparkContext.defaultParallelism)
+    src = tmp_path / "ev"
+    with _session_conf(spark, SHUFFLE, 32):
+        _land(spark, src, "s1", 0, 180)
+        _drain_rollup_and_totals(spark, src, tmp_path)
+        _land(spark, src, "s2", 180, 400, sentinels=True)
+        _drain_rollup_and_totals(spark, src, tmp_path)
+        assert spark.conf.get(SHUFFLE) == "32"
+    for q in ("rollup", "totals"):
+        assert _state_layout(tmp_path / f"{q}_ckpt") == (cap, cap), q
+    _assert_sinks_match_batch(spark, src, tmp_path)
+
+
+def test_stream_restart_keeps_its_first_state_partition_count(spark, tmp_path, monkeypatch):
+    """A checkpoint first started at 32 state partitions (a 32-core host)
+    resumes at 32 on a smaller one: Spark restores the count from the
+    offset log and the state stays addressable, results unchanged."""
+    from pyspark import SparkContext
+
+    src = tmp_path / "ev"
+    with _session_conf(spark, SHUFFLE, 32):
+        _land(spark, src, "s1", 0, 180)
+        with monkeypatch.context() as m:
+            m.setattr(SparkContext, "defaultParallelism", property(lambda self: 32))
+            _drain_rollup_and_totals(spark, src, tmp_path)
+        _land(spark, src, "s2", 180, 400, sentinels=True)
+        _drain_rollup_and_totals(spark, src, tmp_path)
+    for q in ("rollup", "totals"):
+        assert _state_layout(tmp_path / f"{q}_ckpt") == (32, 32), q
+    _assert_sinks_match_batch(spark, src, tmp_path)
+
+
+def test_stream_keeps_a_lower_session_partition_count(spark, tmp_path):
+    src = tmp_path / "ev"
+    _land(spark, src, "s1", 0, 400, sentinels=True)
+    with _session_conf(spark, SHUFFLE, 1):
+        _drain_rollup_and_totals(spark, src, tmp_path)
+    for q in ("rollup", "totals"):
+        assert _state_layout(tmp_path / f"{q}_ckpt") == (1, 1), q
+    _assert_sinks_match_batch(spark, src, tmp_path)
+
+
+def test_stream_start_restores_session_partitions_when_start_raises(spark, tmp_path, monkeypatch):
+    """The cap is visible inside ``start()`` only: the session's value
+    comes back when ``start()`` raises, both from Spark (complete mode
+    without an aggregate is rejected at start) and from any other error."""
+    from pyspark.errors import AnalysisException
+    from pyspark.sql.streaming import DataStreamWriter
+
+    src = tmp_path / "ev"
+    _land(spark, src, "s1", 0, 10)
+    stream = jobs.read_events_stream(spark, f"{src}/*")
+    with _session_conf(spark, SHUFFLE, 32):
+        with pytest.raises(AnalysisException):
+            jobs.run_available_now(
+                stream, str(tmp_path / "sink"), str(tmp_path / "ckpt"), output_mode="complete"
+            )
+        assert spark.conf.get(SHUFFLE) == "32"
+
+        seen = []
+
+        def failing_start(self, *args, **kwargs):
+            seen.append(spark.conf.get(SHUFFLE))
+            raise RuntimeError("start failed")
+
+        monkeypatch.setattr(DataStreamWriter, "start", failing_start)
+        with pytest.raises(RuntimeError, match="start failed"):
+            jobs.run_available_now(stream, str(tmp_path / "sink2"), str(tmp_path / "ckpt2"))
+        assert seen == [str(min(32, spark.sparkContext.defaultParallelism))]
+        assert spark.conf.get(SHUFFLE) == "32"
 
 
 def test_landing_append_stream_exactly_once(spark, tmp_path):
@@ -885,6 +1025,24 @@ def test_observed_stream_metrics_ride_micro_batches(spark, events_dir, tmp_path)
     sunk = spark.read.parquet(str(sink))
     assert sum(m["n_rows"] for m in got) == sunk.count()
     assert sum(m["n_buy"] or 0 for m in got) == sunk.where("event_type = 'buy'").count()
+
+
+def test_observed_stream_metrics_cover_every_batch_past_progress_retention(spark, tmp_path):
+    """The query's own progress buffer keeps only the last
+    ``numRecentProgressUpdates`` batches; the observed metrics must still
+    cover every batch of a longer drain."""
+    src = tmp_path / "ev"
+    for i in range(4):  # one file per drop → one micro-batch each
+        drop = _mk_events(spark, [(m, 0, "click", 1.0) for m in range(i + 1)])
+        drop.coalesce(1).write.parquet(str(src / f"f{i}"))
+    with _session_conf(spark, "spark.sql.streaming.numRecentProgressUpdates", 2):
+        got = jobs.run_available_now_observed(
+            jobs.read_events_stream(spark, f"{src}/*", max_files_per_trigger=1),
+            str(tmp_path / "sink"),
+            str(tmp_path / "ckpt"),
+            {"n_rows": "count(1)"},
+        )
+    assert sorted(m["n_rows"] for m in got) == [1, 2, 3, 4]
 
 
 def test_snapshot_scd2_stream_versions_and_replays_idempotently(spark, tmp_path):
