@@ -11,39 +11,44 @@ Reference: airflow/dags/refresh_source_data.py (task graph at SURVEY.md
   get_*_data            → MockDataSpark seed/refresh             (O2)
   get_files_list        → walk generated dir, skip static
                           products on refresh                    (O6)
-  stage_file.expand     → gzip into stage dir                    (S4, O3)
-  copy_file.expand      → schema-enforced TSV read → APPEND      (S5, X3)
+  stage_file.expand     → gzip into stage/<run>/                 (S4, O3)
+  copy_file.expand      → checkpointed landing stream per table:
+                          schema-enforced TSV read → APPEND      (S5, X3)
   remove_staged/clean   → directory cleanup                      (S9, S10)
 
 The XCom hops (O4) are plain Python values; dynamic task mapping (O3) is
 a loop — Spark parallelizes within each load, which is where the work is.
 
-Scale: each COPY is `read.csv(schema).write.mode("append")` — at 100 TB
-the landing files arrive partitioned and the append is a parallel
-file-commit, no shuffle at all. Raw tables are plain parquet dirs;
-downstream models prune columns against them.
+Scale: each COPY is an AvailableNow drain into a parquet file sink — at
+100 TB the landing files arrive partitioned and the append is a parallel
+file-commit, no shuffle at all. Raw tables are plain parquet dirs (the
+sink's ``_spark_metadata`` log lists the committed files); downstream
+models prune columns against them.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
 from live_data_spark.bikeshop.generator import MockDataSpark
-from live_data_spark.bikeshop.schema import RAW_SCHEMAS, RAW_TABLES
-from live_data_spark.sources.files import clean_dir, read_tsv, stage_files, write_tsv
+from live_data_spark.bikeshop.schema import RAW_SCHEMAS
+from live_data_spark.sources.files import clean_dir, stage_files, write_tsv
+from live_data_spark.streaming.jobs import landing_append_stream
 
 
 @dataclass
 class BikeShopPipeline:
-    """One runner = one DAG; ``run()`` = one (serialized) DAG run (O5)."""
+    """One root = one DAG; ``run()`` = one (serialized) DAG run (O5). All
+    state lives under the root, so a fresh runner per run (Airflow's fresh
+    process per DAG run) continues where the last one stopped, and a
+    retried run re-stages its batch under the same file names."""
 
     spark: SparkSession
-    root: str  # working root: raw/, generated/, stage/ live under it
+    root: str  # working root: raw/, generated/, stage/, checkpoints/, runs/
     seed: int = 42
-    runs_completed: int = field(default=0, init=False)
 
     @property
     def raw_dir(self) -> Path:
@@ -56,6 +61,11 @@ class BikeShopPipeline:
     @property
     def stage_dir(self) -> Path:
         return Path(self.root) / "stage"
+
+    @property
+    def runs_completed(self) -> int:
+        """DAG runs whose every COPY committed: one marker file each."""
+        return len(list((Path(self.root) / "runs").glob("*")))
 
     # -- individual tasks --------------------------------------------------
 
@@ -85,13 +95,14 @@ class BikeShopPipeline:
         (sample_table.sql:3-5). Deterministic hash-sample (Bernoulli is
         engine-nondeterministic — dialect.deterministic_sample rationale);
         the string UUID key is hashed to an integer first. LIMIT keeps
-        the pool bounded exactly like the reference.
+        the pool bounded exactly like the reference; ordering by (bucket,
+        id) first makes the pick independent of the raw files' layout.
         """
         from pyspark.sql import functions as F
 
         c = self.read_raw("customers")
         h = F.pmod(F.xxhash64("id", F.lit(self.seed)), F.lit(100))
-        return c.where(h < 5).limit(50).select("id")
+        return c.where(h < 5).orderBy(h, "id").limit(50).select("id")
 
     def generate(self, initial: bool) -> list[str]:
         """O2: initial seed vs refresh batch; writes TSVs (S3) and returns
@@ -101,17 +112,18 @@ class BikeShopPipeline:
         # deterministic analog: base + run index)
         import datetime as _dt
 
+        batch = self.runs_completed
         gen = MockDataSpark(
             self.spark,
-            seed=self.seed + self.runs_completed,
-            loaded_at=_dt.datetime(2026, 8, 13) + _dt.timedelta(minutes=self.runs_completed),
+            seed=self.seed + batch,
+            loaded_at=_dt.datetime(2026, 8, 13) + _dt.timedelta(minutes=batch),
         )
         if initial:
             frames = gen.seed_initial()
         else:
             frames = gen.refresh(
                 self.get_existing_customers(),
-                batch=self.runs_completed,
+                batch=batch,
                 products=self.read_raw("products"),
             )
         for table, df in frames.items():
@@ -119,9 +131,13 @@ class BikeShopPipeline:
         return sorted(frames)  # products absent on refresh → O6 for free
 
     def copy_into(self, table: str) -> int:
-        """S5/X3: COPY INTO — staged gz TSV, explicit schema, APPEND."""
-        df = read_tsv(self.spark, str(self.stage_dir / table), RAW_SCHEMAS[table])
-        df.write.mode("append").parquet(str(self.raw_dir / table))
+        """S5/X3: COPY INTO — staged gz TSVs, explicit schema, APPEND,
+        through the table's landing stream; its checkpoint skips every file
+        already loaded. The glob over run dirs keeps the source path fixed."""
+        staged = self.stage_dir / "*" / table
+        checkpoint = Path(self.root) / "checkpoints" / table
+        landing_append_stream(self.spark, str(staged), str(self.raw_dir / table),
+                              str(checkpoint), RAW_SCHEMAS[table])
         return self.read_raw(table).count()
 
     # -- the DAG -----------------------------------------------------------
@@ -129,13 +145,16 @@ class BikeShopPipeline:
     def run(self) -> dict[str, int]:
         """One DAG run; returns per-table row counts after the load."""
         self.check_conn()
-        initial = not all(self.table_exists(t) for t in RAW_TABLES)
+        batch = self.runs_completed
+        initial = batch == 0
         if initial:
             self.create_tables()
+        clean_dir(str(self.stage_dir))  # a failed run's leftovers
         tables = self.generate(initial)
-        stage_files(str(self.generated_dir), str(self.stage_dir))
+        stage_files(str(self.generated_dir), str(self.stage_dir / str(batch)))
         counts = {t: self.copy_into(t) for t in tables}
+        (Path(self.root) / "runs").mkdir(exist_ok=True)
+        (Path(self.root) / "runs" / str(batch)).touch()
         clean_dir(str(self.stage_dir))
         clean_dir(str(self.generated_dir))
-        self.runs_completed += 1
         return counts

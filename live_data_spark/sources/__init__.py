@@ -1,5 +1,5 @@
-"""File sources & sinks: typed CSV/TSV readers, staged ingestion helpers."""
+"""File sources & sinks: the staged-TSV format and writer, stage PUT, typed readers."""
 
-from live_data_spark.sources.files import read_tsv, stage_files, write_tsv
+from live_data_spark.sources.files import stage_files, write_tsv
 
-__all__ = ["read_tsv", "stage_files", "write_tsv"]
+__all__ = ["stage_files", "write_tsv"]

@@ -1,12 +1,13 @@
 """Typed file readers/writers — the reference's CSV transport layer.
 
-Reference surface (SURVEY.md §2.1): S1 comma-CSV seed read, S2/S3
-tab-separated read/write (mock_data.py:27,36,111-114), S4 stage PUT
-(stage_files.sql — files land gzip-compressed in a stage directory), S5
-``COPY INTO`` (copy_data.sql:1-2 — tab-delim, skip_header=1, append).
+Reference surface (SURVEY.md §2.1): S2/S3 tab-separated read/write
+(mock_data.py:36,111-114), S4 stage PUT (stage_files.sql — files land
+gzip-compressed in a stage directory), S5 ``COPY INTO`` (copy_data.sql:1-2
+— tab-delim, skip_header=1, append; ``streaming/jobs.py``'s landing stream).
 
-Spark mapping: explicit-schema ``spark.read.csv`` (never inference for raw
-data, SURVEY §1.3); gzip is transparent to Spark's CSV reader, matching
+Spark mapping: ``TSV_OPTIONS`` is the one staged-file format; the COPY
+stream reads it with an explicit schema (never inference for raw data,
+SURVEY §1.3); gzip is transparent to Spark's CSV reader, matching
 Snowflake's auto-gzip stage behavior. Timestamps parse RFC-3339-ish with
 ``timestampNTZFormat`` so `timestamp_ntz` columns round-trip exactly.
 """
@@ -22,24 +23,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 _TS_NTZ_FMT = "yyyy-MM-dd HH:mm:ss[.SSSSSS]"
-
-
-def read_csv(
-    spark: SparkSession, path: str, schema: StructType, sep: str = ",", header: bool = True
-) -> DataFrame:
-    """S1/S2: schema-enforced CSV read (mock_data.py:27,36)."""
-    return (
-        spark.read.schema(schema)
-        .option("header", header)
-        .option("sep", sep)
-        .option("timestampNTZFormat", _TS_NTZ_FMT)
-        .csv(path)
-    )
-
-
-def read_tsv(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
-    """S2/S5: tab-separated read, the staged-file format (copy_data.sql:2)."""
-    return read_csv(spark, path, schema, sep="\t")
+# the staged-file format (copy_data.sql:2): header row, tab-delimited
+TSV_OPTIONS = {"header": True, "sep": "\t", "timestampNTZFormat": _TS_NTZ_FMT}
 
 
 def write_tsv(df: DataFrame, path: str) -> None:
@@ -49,13 +34,7 @@ def write_tsv(df: DataFrame, path: str) -> None:
     (the reference writes one file because it is single-process; partfiles
     are the distributed equivalent and the readers accept directories).
     """
-    (
-        df.write.mode("overwrite")
-        .option("header", True)
-        .option("sep", "\t")
-        .option("timestampNTZFormat", _TS_NTZ_FMT)
-        .csv(path)
-    )
+    df.write.mode("overwrite").options(**TSV_OPTIONS).csv(path)
 
 
 def read_jsonl(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
@@ -83,7 +62,9 @@ def stage_files(generated_dir: str, stage_dir: str, gzip_files: bool = True) -> 
     """S4: PUT generated files into the stage (stage_files.sql:1).
 
     Snowflake's PUT auto-gzips on upload; we mirror that so the ingest
-    reader exercises the compressed path. Returns staged table dirs.
+    reader exercises the compressed path. Parts are named by their sorted
+    index, so re-staging a batch reproduces its file names and the COPY
+    load history skips what it already loaded. Returns staged table dirs.
     """
     staged = []
     stage = Path(stage_dir)
@@ -93,12 +74,13 @@ def stage_files(generated_dir: str, stage_dir: str, gzip_files: bool = True) -> 
             continue
         dest = stage / table_dir.name
         dest.mkdir(parents=True, exist_ok=True)
-        for part in table_dir.glob("*.csv"):
+        for i, part in enumerate(sorted(table_dir.glob("*.csv"))):
+            name = f"part-{i:05d}.csv"
             if gzip_files:
-                with open(part, "rb") as fin, gzip.open(dest / (part.name + ".gz"), "wb") as fout:
+                with open(part, "rb") as fin, gzip.open(dest / (name + ".gz"), "wb") as fout:
                     shutil.copyfileobj(fin, fout)
             else:
-                shutil.copy2(part, dest / part.name)
+                shutil.copy2(part, dest / name)
         staged.append(str(dest))
     return staged
 

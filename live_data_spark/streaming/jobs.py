@@ -2,13 +2,13 @@
 
 Two reference-derived duties plus the events extension surface:
 
-1. **Micro-batch append ingestion** (the reference's every-N-minutes
-   Airflow DAG, SURVEY.md §2.9 O5/X3): ``landing_append_stream`` watches a
-   landing directory of staged TSVs and appends schema-enforced rows to the
-   raw parquet table with exactly-once file tracking — the Spark-native
-   replacement for PUT + COPY INTO on a schedule. ``Trigger.AvailableNow``
-   processes the backlog and stops (the DAG-run analog); a processing-time
-   trigger gives the continuous form.
+1. **COPY INTO** (the reference's every-N-minutes Airflow DAG, SURVEY.md
+   §2.9 O5/X3): ``landing_append_stream`` is the pipeline's only COPY
+   (``BikeShopPipeline.copy_into``). It drains a directory of staged TSVs
+   into the raw parquet table as schema-enforced appends with exactly-once
+   file tracking, so a retried DAG run skips the files already loaded.
+   ``Trigger.AvailableNow`` processes the backlog and stops (the DAG-run
+   analog); a processing-time trigger gives the continuous form.
 
 2. **Event analytics** (BASELINE.json events mandate): windowed rollups,
    session windows, and watermarked dedup — the streaming twins of the
@@ -47,6 +47,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from live_data_spark.sources.files import TSV_OPTIONS
 
 EVENTS_SCHEMA = StructType(
     [
@@ -556,21 +558,16 @@ def landing_append_stream(
     checkpoint_dir: str,
     schema: StructType,
 ) -> None:
-    """Staged-file ingestion as a stream: the PUT + COPY INTO + schedule
-    trio collapsed into one restart-safe micro-batch pipeline (SURVEY §3.2).
+    """COPY INTO as a stream: staged TSVs appended to the raw parquet
+    table as schema-enforced rows (SURVEY §3.2).
 
-    File-source semantics give exactly-once per input file (the reference
-    relies on Snowflake COPY's load-history for the same guarantee); gzip
-    TSVs are read transparently. Append-only sink = X3.
+    File-source semantics give exactly-once per input file: the
+    checkpoint's file log is the load history, as Snowflake COPY's is for
+    the reference. Gzip TSVs are read transparently. Append-only sink = X3.
     """
-    stream = (
-        spark.readStream.schema(schema)
-        .option("header", True)
-        .option("sep", "\t")
-        .option("timestampNTZFormat", "yyyy-MM-dd HH:mm:ss[.SSSSSS]")
-        .csv(landing_dir)
-    )
-    run_available_now(stream, raw_dir, checkpoint_dir)
+    stream = spark.readStream.schema(schema).options(**TSV_OPTIONS).csv(landing_dir)
+    # not run_available_now: perfbench times that as the event rollup stream
+    _drain_available_now(stream, checkpoint_dir, raw_dir)
 
 
 def spacesaving_insert(

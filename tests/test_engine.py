@@ -75,6 +75,86 @@ def test_refresh_includes_returning_customers(spark, pipeline_root):
     assert returning.count() > 0
 
 
+def test_returning_customer_pool_ignores_file_layout(spark, tmp_path):
+    """The LIMIT 50 pick is ordered first, so the same raw customers give
+    the same returning-customer pool stored as one file or as seven."""
+    from live_data_spark.bikeshop.generator import MockDataSpark
+
+    customers = MockDataSpark(spark, seed=3).customers(3000, batch=0)
+    pools = []
+    for n_files in (1, 7):
+        root = tmp_path / f"files_{n_files}"
+        customers.repartition(n_files).write.parquet(str(root / "raw" / "customers"))
+        pool = BikeShopPipeline(spark, str(root)).get_existing_customers()
+        pools.append({r.id for r in pool.collect()})
+    assert len(pools[0]) == 50
+    assert pools[0] == pools[1]
+
+
+# -- restart: Airflow starts every DAG run in a fresh process ---------------
+
+ALLOWED_TEST_FAILURES = {"unique_customer_id[source:bike_shop.orders]"}
+
+
+def _fail_orders_copy(monkeypatch):
+    """Make every runner's orders COPY raise before it loads anything."""
+    copy_into = BikeShopPipeline.copy_into
+
+    def copy_or_fail(self, table):
+        if table == "orders":
+            raise RuntimeError("injected COPY failure")
+        return copy_into(self, table)
+
+    monkeypatch.setattr(BikeShopPipeline, "copy_into", copy_or_fail)
+
+
+def _raw_ids(spark, root, table) -> tuple[int, int]:
+    """(rows, distinct ids) of a raw table."""
+    ids = spark.read.parquet(str(root / "raw" / table)).select("id")
+    return ids.count(), ids.distinct().count()
+
+
+def test_fresh_runner_per_run_loads_each_batch_once(spark, tmp_path):
+    for _ in range(3):
+        BikeShopPipeline(spark, str(tmp_path)).run()
+    assert _raw_ids(spark, tmp_path, "customers") == (3000, 3000)
+    assert _raw_ids(spark, tmp_path, "orders") == (3000, 3000)
+    assert _raw_ids(spark, tmp_path, "products") == (97, 97)
+
+
+def test_runs_completed_counts_only_completed_runs(spark, tmp_path, monkeypatch):
+    assert BikeShopPipeline(spark, str(tmp_path)).runs_completed == 0
+    BikeShopPipeline(spark, str(tmp_path)).run()
+    _fail_orders_copy(monkeypatch)
+    with pytest.raises(RuntimeError, match="injected COPY failure"):
+        BikeShopPipeline(spark, str(tmp_path)).run()
+    assert BikeShopPipeline(spark, str(tmp_path)).runs_completed == 1
+
+
+def test_retry_after_failed_copy_loads_each_batch_once(spark, tmp_path, monkeypatch):
+    """Run 2 fails at its orders COPY after customers and order_products
+    committed; the retry, by a fresh runner, re-stages the same files, so
+    the committed tables skip them and the rest load once."""
+    BikeShopPipeline(spark, str(tmp_path)).run()
+    _fail_orders_copy(monkeypatch)
+    with pytest.raises(RuntimeError, match="injected COPY failure"):
+        BikeShopPipeline(spark, str(tmp_path)).run()
+    monkeypatch.undo()
+    BikeShopPipeline(spark, str(tmp_path)).run()
+    counts = BikeShopPipeline(spark, str(tmp_path)).run()
+    assert counts["customers"] == counts["orders"] == 3000
+    for table in RAW_TABLES:
+        rows, distinct = _raw_ids(spark, tmp_path, table)
+        assert rows == distinct, f"{table}: {rows - distinct} duplicate ids"
+    proj = build_project(
+        spark, warehouse_dir=str(tmp_path / "warehouse"), raw_root=str(tmp_path / "raw")
+    )
+    proj.run()
+    results = proj.run_tests()
+    failed = {f"{r.test_name}[{r.model}]" for r in results if not r.passed}
+    assert results and failed <= ALLOWED_TEST_FAILURES, failed
+
+
 def test_generator_deterministic(spark, tmp_path):
     from live_data_spark.bikeshop.generator import MockDataSpark
 

@@ -11,7 +11,8 @@ Default-deny, like tests/test_plan_hygiene.py: every ``.start(...)`` and
 ``.toTable(...)`` call (the two ``DataStreamWriter`` methods that start a
 query) fails here unless its enclosing function is allow-listed with a
 reason. A new streaming job that builds its own ``writeStream`` chain fails
-without anyone having to remember to pin it.
+without anyone having to remember to pin it. The same parse keeps the
+bike-shop DAG on one COPY path: no batch append write in ``bikeshop/``.
 """
 
 from __future__ import annotations
@@ -63,3 +64,29 @@ def test_streams_start_only_in_the_runner():
     )
     # the sweep must see the runner itself, or it is scanning nothing
     assert START_OK <= found, START_OK - found
+
+
+def _append_writes(tree: ast.AST):
+    """Line of every ``.mode("append")`` call in ``tree``."""
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "mode"
+            and any(isinstance(a, ast.Constant) and a.value == "append" for a in node.args)
+        ):
+            yield node.lineno
+
+
+def test_bikeshop_appends_only_through_the_copy_stream():
+    """The DAG's one COPY is the checkpointed landing stream, whose file
+    log skips already-loaded files on a retried run; a batch append in the
+    bike-shop package would be a second COPY path without that guard."""
+    paths = sorted((PACKAGE / "bikeshop").rglob("*.py"))
+    assert paths
+    offenders = [
+        f"{p.relative_to(PACKAGE).as_posix()}:{line}"
+        for p in paths
+        for line in _append_writes(ast.parse(p.read_text()))
+    ]
+    assert not offenders, f"batch append in the bike-shop package: {offenders}"
