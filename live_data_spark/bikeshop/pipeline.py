@@ -16,8 +16,13 @@ Reference: airflow/dags/refresh_source_data.py (task graph at SURVEY.md
                           schema-enforced TSV read → APPEND      (S5, X3)
   remove_staged/clean   → directory cleanup                      (S9, S10)
 
-The XCom hops (O4) are plain Python values; dynamic task mapping (O3) is
-a loop — Spark parallelizes within each load, which is where the work is.
+The XCom hops (O4) are plain Python values. Dynamic task mapping (O3) is
+``session.run_actions``: the per-table TSV writes, and then the per-table
+COPYs, run concurrently on driver threads, as ``stage_file.expand`` and
+``copy_file.expand`` run as parallel task instances. A 1000-row batch
+leaves Spark's cores idle while one table's small jobs wait on the driver;
+overlapping the tables fills them. The run marker is written only after
+every COPY committed; a failed COPY fails the run once its siblings end.
 
 Scale: each COPY is an AvailableNow drain into a parquet file sink — at
 100 TB the landing files arrive partitioned and the append is a parallel
@@ -29,12 +34,14 @@ models prune columns against them.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import partial
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
 from live_data_spark.bikeshop.generator import MockDataSpark
 from live_data_spark.bikeshop.schema import RAW_SCHEMAS
+from live_data_spark.session import run_actions
 from live_data_spark.sources.files import clean_dir, stage_files, write_tsv
 from live_data_spark.streaming.jobs import landing_append_stream
 
@@ -126,8 +133,8 @@ class BikeShopPipeline:
                 batch=batch,
                 products=self.read_raw("products"),
             )
-        for table, df in frames.items():
-            write_tsv(df, str(self.generated_dir / table))
+        run_actions(self.spark, [partial(write_tsv, df, str(self.generated_dir / table))
+                                 for table, df in frames.items()])
         return sorted(frames)  # products absent on refresh → O6 for free
 
     def copy_into(self, table: str) -> int:
@@ -152,7 +159,8 @@ class BikeShopPipeline:
         clean_dir(str(self.stage_dir))  # a failed run's leftovers
         tables = self.generate(initial)
         stage_files(str(self.generated_dir), str(self.stage_dir / str(batch)))
-        counts = {t: self.copy_into(t) for t in tables}
+        counts = dict(zip(tables, run_actions(self.spark, [partial(self.copy_into, t)
+                                                           for t in tables])))
         (Path(self.root) / "runs").mkdir(exist_ok=True)
         (Path(self.root) / "runs" / str(batch)).touch()
         clean_dir(str(self.stage_dir))

@@ -21,17 +21,30 @@ explicit materialization barrier: parquet written once, downstream reads
 prune columns/partitions against real files. At 100 TB choose ``table``
 for fan-in hubs (read many times) and ``view`` for 1:1 cleanups — same
 judgment calls as the reference made (staging=view, mart=table).
+
+Concurrency (dbt's ``threads``): planning — model functions, ``ref`` and
+``source`` resolution, cycle detection, data-test plans — runs on the
+calling thread. ``run()`` hands each write to an ``ActionPool`` thread as
+soon as the model is planned, and ``run_tests()`` runs every test's query
+on one, so independent tables and tests overlap. A ``ref`` to a table
+whose write is still running waits for it, which keeps table → table
+chains in order.
 """
 
 from __future__ import annotations
 
 import shutil
+import threading
 from collections.abc import Callable
+from concurrent.futures import Future, wait
 from dataclasses import dataclass, field
+from functools import partial
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
+
+from live_data_spark.session import ActionPool, run_actions
 
 
 @dataclass(frozen=True)
@@ -117,8 +130,11 @@ class Project:
         self.env = env  # namespace prefix (generate_schema_name passthrough)
         self._sources: dict[tuple[str, str], SourceDef] = {}
         self._models: dict[str, ModelDef] = {}
-        self._built: dict[str, DataFrame] = {}
-        self._building: list[str] = []  # cycle-detection stack
+        # single-flight memo: name -> its DataFrame, pending while it writes
+        self._built: dict[str, Future] = {}
+        self._unwritten: dict[str, Callable[[], None]] = {}  # planned, not started
+        self._lock = threading.Lock()
+        self._local = threading.local()  # per-thread cycle-detection stack
         self._tests: list = []  # populated via plans.testing
         self.metrics: dict[str, dict] = {}  # model -> observed write metrics
         self._obs_seq = 0  # Observation names must be fresh per attach
@@ -267,66 +283,129 @@ class Project:
         Views memoize the lazy plan; tables materialize to parquet under
         ``warehouse_dir/<env>_<schema>/<name>`` and return the read-back
         scan (the materialization barrier downstream models consume).
+
+        The model is planned on this thread. Its write runs on the first
+        thread that asks for it after planning: here, unless ``run()``
+        already handed it to a pool thread, in which case this waits.
         """
-        if name in self._built:
-            return self._built[name]
+        built = self._plan(name)
+        with self._lock:
+            write = self._unwritten.pop(name, None)
+        if write is not None:
+            write()
+        return built.result()
+
+    @property
+    def _building(self) -> list[str]:
+        """This thread's stack of models being planned."""
+        if not hasattr(self._local, "stack"):
+            self._local.stack = []
+        return self._local.stack
+
+    def _plan(self, name: str) -> Future:
+        """Plan ``name`` once (single-flight): the first caller runs its
+        model function on this thread; a write model's actions wait in
+        ``_unwritten`` for a thread to start them."""
         if name not in self._models:
             raise KeyError(f"model {name!r} not registered")
-        if name in self._building:
-            cycle = " -> ".join([*self._building, name])
+        building = self._building
+        if name in building:
+            # checked before the memo: this thread would wait on itself
+            cycle = " -> ".join([*building, name])
             raise ValueError(f"dependency cycle: {cycle}")
+        with self._lock:
+            if name in self._built:
+                return self._built[name]
+            built = self._built[name] = Future()
 
         mdef = self._models[name]
-        self._building.append(name)
+        building.append(name)
         try:
             df = mdef.fn(BuildContext(self, name))
+            write = None
+            if mdef.materialized == "view":
+                df.createOrReplaceTempView(name)
+            elif mdef.materialized != "ephemeral":
+                write = self._writer(mdef, df)
+        except BaseException as e:
+            self._forget(name, built, e)
+            raise
         finally:
-            self._building.pop()
+            building.pop()
 
-        if mdef.materialized == "ephemeral":
-            # dbt ephemeral: the model is never a relation — every ref()
-            # interpolates it as a CTE into the consumer. Spark's laziness
-            # makes that literal: the memoized DataFrame IS the unexecuted
-            # subplan, and Catalyst inlines it into each downstream plan
-            # (no temp view, no warehouse path, nothing addressable by
-            # name in SQL — exactly dbt's contract).
-            self._built[name] = df
-            return df
-        if mdef.materialized == "table":
-            out = self._table_path(mdef)
-            cols = df.columns
-            df, obs = self._attach_observation(mdef, df)
-            writer = df.write.mode("overwrite")
-            if mdef.partition_by:
-                writer = writer.partitionBy(*mdef.partition_by)
-            writer.parquet(str(out))
-            self._harvest_observation(mdef, obs)
+        if write is None:
+            # a view or ephemeral model is its plan. dbt ephemeral: the
+            # model is never a relation — every ref() interpolates it as a
+            # CTE into the consumer. Spark's laziness makes that literal:
+            # the memoized DataFrame IS the unexecuted subplan, and
+            # Catalyst inlines it into each downstream plan (no temp view,
+            # no warehouse path, nothing addressable by name in SQL —
+            # exactly dbt's contract).
+            built.set_result(df)
+        else:
+            with self._lock:
+                self._unwritten[name] = partial(self._materialize, name, built, write)
+        return built
+
+    def _materialize(self, name: str, built: Future, write: Callable[[], DataFrame]) -> None:
+        try:
+            df = write()
+            # both materializations are queryable by name, like dbt relations
+            df.createOrReplaceTempView(name)
+        except BaseException as e:
+            self._forget(name, built, e)
+            raise
+        built.set_result(df)
+
+    def _forget(self, name: str, built: Future, error: BaseException) -> None:
+        """A failed build leaves no memo, so a later build plans afresh;
+        threads already waiting get the error."""
+        with self._lock:
+            self._built.pop(name, None)
+        built.set_exception(error)
+
+    def _writer(self, mdef: ModelDef, df: DataFrame) -> Callable[[], DataFrame]:
+        """Plan a write materialization of ``df`` on this thread. The
+        returned thunk runs its Spark actions and returns the read-back
+        relation. An incremental model's high watermark is read here: the
+        filter it sets must be on the plan."""
+        out = self._table_path(mdef)
+        cols = df.columns
+
+        def read_back() -> DataFrame:
             # hive layout moves partition columns last on read-back;
             # re-select so the model's declared column order is the contract
-            df = self.spark.read.parquet(str(out)).select(*cols)
-        elif mdef.materialized == "table_bucketed":
-            out = self._table_path(mdef)
-            cols = df.columns
-            cat_name = f"{self.env}_{mdef.schema}_{mdef.name}"
-            self.spark.sql(f"DROP TABLE IF EXISTS {cat_name}")
-            shutil.rmtree(out, ignore_errors=True)
+            return self.spark.read.parquet(str(out)).select(*cols)
+
+        if mdef.materialized == "table":
             df, obs = self._attach_observation(mdef, df)
-            (
-                df.write.mode("overwrite")
-                .bucketBy(mdef.n_buckets, *mdef.bucket_by)
-                .sortBy(*mdef.bucket_by)
-                .option("path", str(out))
-                .saveAsTable(cat_name)
-            )
-            self._harvest_observation(mdef, obs)
-            # read via the catalog — spark.read.parquet(path) would lose the
-            # bucket spec and re-shuffle on join
-            df = self.spark.table(cat_name).select(*cols)
+
+            def write() -> DataFrame:
+                self._write_parquet(mdef, df, "overwrite", out)
+                return read_back()
+
+        elif mdef.materialized == "table_bucketed":
+            cat_name = f"{self.env}_{mdef.schema}_{mdef.name}"
+            df, obs = self._attach_observation(mdef, df)
+
+            def write() -> DataFrame:
+                self.spark.sql(f"DROP TABLE IF EXISTS {cat_name}")
+                shutil.rmtree(out, ignore_errors=True)
+                (
+                    df.write.mode("overwrite")
+                    .bucketBy(mdef.n_buckets, *mdef.bucket_by)
+                    .sortBy(*mdef.bucket_by)
+                    .option("path", str(out))
+                    .saveAsTable(cat_name)
+                )
+                # read via the catalog — spark.read.parquet(path) would lose
+                # the bucket spec and re-shuffle on join
+                return self.spark.table(cat_name).select(*cols)
+
         elif mdef.materialized == "incremental":
             from pyspark.sql import functions as F
 
-            out = self._table_path(mdef)
-            cols = df.columns
+            mode = "overwrite"
             if (out / "_SUCCESS").exists():
                 existing = self.spark.read.parquet(str(out))
                 hwm = existing.agg(F.max(mdef.incremental_key)).collect()[0][0]
@@ -334,27 +413,19 @@ class Project:
                     # the filter lands on the lazy plan → pushed through
                     # to the model's source scans (row-group pruning)
                     df = df.where(F.col(mdef.incremental_key) > F.lit(hwm))
-                # observed frame = the increment being appended, so
-                # metrics describe THIS build's written rows
-                df, obs = self._attach_observation(mdef, df)
-                writer = df.write.mode("append")
-                if mdef.partition_by:
-                    writer = writer.partitionBy(*mdef.partition_by)
-                writer.parquet(str(out))
-            else:
-                df, obs = self._attach_observation(mdef, df)
-                writer = df.write.mode("overwrite")
-                if mdef.partition_by:
-                    writer = writer.partitionBy(*mdef.partition_by)
-                writer.parquet(str(out))
-            self._harvest_observation(mdef, obs)
-            df = self.spark.read.parquet(str(out)).select(*cols)
-        elif mdef.materialized == "incremental_merge":
+                mode = "append"
+            # observed frame = the increment being appended, so
+            # metrics describe THIS build's written rows
+            df, obs = self._attach_observation(mdef, df)
+
+            def write() -> DataFrame:
+                self._write_parquet(mdef, df, mode, out)
+                return read_back()
+
+        else:  # incremental_merge
             from pyspark.sql import Window
             from pyspark.sql import functions as F
 
-            out = self._table_path(mdef)
-            cols = df.columns
             # heal a swap a prior build may have left interrupted (the
             # table then lives in the backup dir; the _SUCCESS probe
             # below would otherwise silently reinitialize from this
@@ -382,27 +453,36 @@ class Project:
                     .drop("__rn", "__src")
                 )
                 tmp = out.parent / f"{out.name}.__merge_tmp"
-                shutil.rmtree(tmp, ignore_errors=True)
                 # observed frame = the full post-merge table (that IS the
                 # frame this write evaluates)
                 latest, obs = self._attach_observation(mdef, latest)
-                writer = latest.write.mode("overwrite")
-                if mdef.partition_by:
-                    writer = writer.partitionBy(*mdef.partition_by)
-                writer.parquet(str(tmp))
-                swap_dir(tmp, out)
+
+                def write() -> DataFrame:
+                    shutil.rmtree(tmp, ignore_errors=True)
+                    self._write_parquet(mdef, latest, "overwrite", tmp)
+                    swap_dir(tmp, out)
+                    return read_back()
+
             else:
                 df, obs = self._attach_observation(mdef, df)
-                writer = df.write.mode("overwrite")
-                if mdef.partition_by:
-                    writer = writer.partitionBy(*mdef.partition_by)
-                writer.parquet(str(out))
+
+                def write() -> DataFrame:
+                    self._write_parquet(mdef, df, "overwrite", out)
+                    return read_back()
+
+        def write_and_harvest() -> DataFrame:
+            written = write()
             self._harvest_observation(mdef, obs)
-            df = self.spark.read.parquet(str(out)).select(*cols)
-        # both materializations are queryable by name, like dbt relations
-        df.createOrReplaceTempView(name)
-        self._built[name] = df
-        return df
+            return written
+
+        return write_and_harvest
+
+    @staticmethod
+    def _write_parquet(mdef: ModelDef, df: DataFrame, mode: str, path: Path) -> None:
+        writer = df.write.mode(mode)
+        if mdef.partition_by:
+            writer = writer.partitionBy(*mdef.partition_by)
+        writer.parquet(str(path))
 
     def _attach_observation(self, mdef: ModelDef, df: DataFrame):
         """Wrap the about-to-be-written frame with ``df.observe`` metrics.
@@ -465,11 +545,28 @@ class Project:
         Like ``dbt run``, ephemeral models are not run as nodes — they
         build implicitly (lazily) inside whichever consumers ref them.
         An explicit ``select`` can still name one to get its plan.
+
+        Models are planned here, in order; each write starts on an
+        ``ActionPool`` thread once its model is planned (dbt ``threads``,
+        at most ``defaultParallelism``). Every write ends before this
+        returns or raises, and the first failure in model order wins.
         """
         names = select or [
             n for n, m in self._models.items() if m.materialized != "ephemeral"
         ]
-        return {n: self.build(n) for n in names}
+        pending, error = [], None
+        with ActionPool(self.spark) as pool:
+            for n in names:
+                try:
+                    planned = self._plan(n)
+                except Exception as e:  # noqa: BLE001 - raised after the writes end
+                    error = e
+                    break
+                pending.append(pool.submit(self.build, n) if n in self._unwritten else planned)
+        results = [f.result() for f in pending]  # an earlier model's failure comes first
+        if error is not None:
+            raise error
+        return dict(zip(names, results))
 
     def run_tests(self, select: list[str] | None = None, store_failures: bool = False):
         """Run declared data tests; see plans.testing for semantics.
@@ -479,17 +576,24 @@ class Project:
         so failures are queryable tables, not just log samples.
         Severity gating is the caller's job via ``TestResult.blocking``
         (dbt: ``warn`` reports, only ``error`` fails the run).
+
+        Every test's violation query is planned here first; the queries
+        then run on an ``ActionPool`` and the results come back in
+        declaration order.
         """
         failures_dir = f"{self.warehouse_dir}/test_failures" if store_failures else None
-        results = []
-        for t in self._tests:
-            if select and t.model not in select:
-                continue
-            results.append(t.run(self, store_failures_dir=failures_dir))
-        return results
+        tests = [t for t in self._tests if not select or t.model in select]
+        plans = [t.build(self) for t in tests]
+        return run_actions(self.spark, [
+            partial(t.run, self, failures_dir, violations=v) for t, v in zip(tests, plans)
+        ])
 
     def invalidate(self) -> None:
-        """Drop memoized builds (e.g., after raw tables received a batch)."""
+        """Drop memoized builds (e.g., after raw tables received a batch),
+        once every write in flight has ended."""
+        with self._lock:
+            pending = list(self._built.values())
+        wait(pending)
         for name in self._built:
             self.spark.catalog.dropTempView(name)
         self._built.clear()

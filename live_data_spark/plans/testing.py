@@ -75,8 +75,17 @@ class GenericTest:
     def build(self, project: "Project") -> DataFrame:
         raise NotImplementedError
 
-    def run(self, project: "Project", store_failures_dir: str | None = None) -> TestResult:
-        violations = self.build(project)
+    def run(
+        self,
+        project: "Project",
+        store_failures_dir: str | None = None,
+        violations: DataFrame | None = None,
+    ) -> TestResult:
+        """Evaluate the test; ``violations`` is its plan when the caller
+        already built it (``Project.run_tests`` plans on its own thread and
+        runs the actions on a pool)."""
+        if violations is None:
+            violations = self.build(project)
         # count via limited collect: a passing test touches no extra data,
         # a failing one materializes at most the sample
         sample = violations.limit(MAX_FAILURE_SAMPLE + 1).collect()

@@ -16,13 +16,23 @@ Scale notes (100 TB posture):
 - Session timezone pinned to UTC so parquet TIMESTAMP (isAdjustedToUTC=false)
   values are stable regardless of host TZ (SURVEY.md §7.2a).
 - Arrow enabled for the few Pandas-UDF paths (similarity/multimodal).
+
+Concurrent actions: a small job (the reference DAG's 1000-row batches) is
+bound by driver latency, not cluster work, so independent actions overlap
+on driver threads (``ActionPool``/``run_actions``). Plans are built on the
+calling thread; only actions go to the pool, at most ``defaultParallelism``
+threads wide. Each thread inherits the caller's job group, so
+``cancelJobGroup`` and per-group job accounting cover its jobs.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable, Sequence
+from concurrent.futures import Future, ThreadPoolExecutor
 
 from pyspark.sql import SparkSession
+from pyspark.util import inheritable_thread_target
 
 DEFAULT_APP_NAME = "live_data_spark"
 
@@ -66,3 +76,42 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+class ActionPool:
+    """Driver threads for independent Spark actions: at most
+    ``defaultParallelism``, and no more than the callables submitted.
+
+    ``submit`` wraps its callable in ``inheritable_thread_target`` at
+    submission, so the callable runs with the submitting thread's local
+    properties (job group, description, scheduler pool) and session tags;
+    a plain thread would start its jobs in no group. Leaving the ``with``
+    block waits for every submitted callable.
+    """
+
+    def __init__(self, spark: SparkSession):
+        self._spark = spark
+        self._threads = ThreadPoolExecutor(
+            max_workers=spark.sparkContext.defaultParallelism, thread_name_prefix="spark-action"
+        )
+
+    def submit(self, fn: Callable, *args) -> Future:
+        inherit = inheritable_thread_target(self._spark)
+        # without pinned threads (PYSPARK_PIN_THREAD=false) it returns the
+        # session itself: Python threads then share JVM threads
+        return self._threads.submit(inherit(fn) if callable(inherit) else fn, *args)
+
+    def __enter__(self) -> "ActionPool":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self._threads.shutdown(wait=True)
+
+
+def run_actions(spark: SparkSession, thunks: Sequence[Callable[[], object]]) -> list:
+    """Call every thunk on an ``ActionPool``; results come back in input
+    order. All thunks run to the end even when one fails, and then the
+    first failure in input order is raised."""
+    with ActionPool(spark) as pool:
+        futures = [pool.submit(t) for t in thunks]
+    return [f.result() for f in futures]

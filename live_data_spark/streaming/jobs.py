@@ -33,6 +33,7 @@ grows later does not re-partition the state (a fresh checkpoint re-sizes).
 
 from __future__ import annotations
 
+import threading
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -447,6 +448,8 @@ def run_available_now_update(result: DataFrame, sink_dir: str, checkpoint_dir: s
 
 # -- sinks / runners ---------------------------------------------------------
 
+_STREAM_START = threading.Lock()  # the state-partition conf swap around start()
+
 
 def _drain_available_now(
     result: DataFrame,
@@ -460,7 +463,14 @@ def _drain_available_now(
     Every stream in the package starts here (tests/test_stream_hygiene.py).
     The query clones the session inside ``start()``, so the state-partition
     cap (module notes) is set only around it; ``foreachBatch`` bodies run
-    in the clone and see the capped count too."""
+    in the clone and see the capped count too.
+
+    Streams may start on several threads at once (the pipeline's COPYs do).
+    The conf swap and ``start()`` therefore run under one module lock, so
+    the session always gets its own value back; the drain runs outside it.
+    The session conf is shared, so a batch query planned on another thread
+    inside that window sees the capped partition count. That changes only
+    how many shuffle partitions it starts from, never its results."""
     writer = (
         result.writeStream.option("checkpointLocation", checkpoint_dir)
         .outputMode(output_mode)
@@ -472,12 +482,13 @@ def _drain_available_now(
         writer = writer.foreachBatch(batch_fn)
     spark = result.sparkSession
     key = "spark.sql.shuffle.partitions"
-    session_value = spark.conf.get(key)
-    spark.conf.set(key, str(min(int(session_value), spark.sparkContext.defaultParallelism)))
-    try:
-        q = writer.start()
-    finally:
-        spark.conf.set(key, session_value)
+    with _STREAM_START:
+        session_value = spark.conf.get(key)
+        spark.conf.set(key, str(min(int(session_value), spark.sparkContext.defaultParallelism)))
+        try:
+            q = writer.start()
+        finally:
+            spark.conf.set(key, session_value)
     q.awaitTermination()
     return q
 

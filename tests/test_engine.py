@@ -129,6 +129,8 @@ def test_runs_completed_counts_only_completed_runs(spark, tmp_path, monkeypatch)
     with pytest.raises(RuntimeError, match="injected COPY failure"):
         BikeShopPipeline(spark, str(tmp_path)).run()
     assert BikeShopPipeline(spark, str(tmp_path)).runs_completed == 1
+    # the failed run's other COPYs ran to the end before it raised
+    assert _raw_ids(spark, tmp_path, "customers") == (2000, 2000)
 
 
 def test_retry_after_failed_copy_loads_each_batch_once(spark, tmp_path, monkeypatch):
@@ -807,3 +809,280 @@ def test_scripts_import_standalone():
             cwd="/",  # no repo cwd: imports must not lean on it
         )
         assert r.returncode == 0, f"{script.name}: {r.stderr[-800:]}"
+
+
+# -- concurrent actions: plans on the caller, actions on driver threads -----
+
+
+def _within(seconds, fn):
+    """``fn()`` on a daemon thread: a deadlock fails the test after
+    ``seconds`` instead of hanging the suite."""
+    import threading
+
+    out = {}
+
+    def call():
+        try:
+            out["value"] = fn()
+        except BaseException as e:  # noqa: BLE001 - re-raised below
+            out["error"] = e
+
+    t = threading.Thread(target=call, daemon=True)
+    t.start()
+    t.join(seconds)
+    assert not t.is_alive(), f"no return within {seconds} s"
+    if "error" in out:
+        raise out["error"]
+    return out["value"]
+
+
+def _late_failure(message):
+    """A Python UDF that fails its task after a second."""
+
+    @F.udf("long")
+    def fail(x):
+        import time
+
+        time.sleep(1)
+        raise ValueError(message)
+
+    return fail
+
+
+def test_run_actions_keeps_input_order_and_raises_the_first_failure_last(spark):
+    """Results come back in input order on at most defaultParallelism
+    threads; a failure is raised only after every sibling ended, and the
+    first failure in input order wins over one that happened earlier."""
+    import threading
+    import time
+
+    from live_data_spark.session import run_actions
+
+    threads, ended = set(), []
+
+    def work(i):
+        time.sleep(0.05 * (8 - i))
+        threads.add(threading.current_thread().name)
+        ended.append(i)
+        return i * i
+
+    n = 2 * spark.sparkContext.defaultParallelism
+    assert run_actions(spark, [lambda i=i: work(i) for i in range(n)]) == [i * i for i in range(n)]
+    assert len(threads) <= spark.sparkContext.defaultParallelism
+
+    def fail(message, after):
+        time.sleep(after)
+        raise RuntimeError(message)
+
+    ended.clear()
+    with pytest.raises(RuntimeError, match="first in order"):
+        run_actions(spark, [
+            lambda: fail("first in order", 0.3),
+            lambda: work(7),
+            lambda: fail("first in time", 0.0),
+        ])
+    assert ended == [7]
+    assert run_actions(spark, []) == []
+
+
+def test_cycle_raises_from_run_without_deadlock(spark, tmp_path):
+    proj = Project(spark, warehouse_dir=str(tmp_path))
+
+    @proj.model(materialized="table")
+    def a(ctx):
+        return ctx.ref("b")
+
+    @proj.model(materialized="table")
+    def b(ctx):
+        return ctx.ref("a")
+
+    with pytest.raises(ValueError, match="cycle"):
+        _within(120, proj.run)
+    # a failed plan leaves no memo behind: the next build plans afresh
+    with pytest.raises(ValueError, match="cycle"):
+        _within(120, lambda: proj.build("b"))
+
+
+def test_build_is_single_flight_across_threads(spark, tmp_path):
+    """More threads than cores build the same models at once, with the
+    interpreter switching threads often: each model function runs once
+    and every thread gets the one memoized relation."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    proj = Project(spark, warehouse_dir=str(tmp_path))
+    calls = []
+
+    @proj.model
+    def base(ctx):
+        calls.append("base")
+        return ctx.spark.range(10)
+
+    @proj.model(materialized="table")
+    def tbl(ctx):
+        calls.append("tbl")
+        return ctx.ref("base").where("id % 2 = 0")
+
+    @proj.model
+    def top(ctx):
+        calls.append("top")
+        return ctx.ref("tbl").where("id > 2")
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(4 * spark.sparkContext.defaultParallelism) as pool:
+            got = _within(120, lambda: list(pool.map(proj.build, ["top", "tbl", "base"] * 8)))
+    finally:
+        sys.setswitchinterval(switch)
+    assert sorted(calls) == ["base", "tbl", "top"]
+    for name in ("top", "tbl", "base"):
+        assert len({id(df) for n, df in zip(["top", "tbl", "base"] * 8, got) if n == name}) == 1
+    assert sorted(r.id for r in got[0].collect()) == [4, 6, 8]
+
+
+def test_table_chain_writes_in_order(spark, tmp_path):
+    """table → table → table: each ref waits for its upstream's write, so
+    every model reads back what the one before it wrote."""
+    proj = Project(spark, warehouse_dir=str(tmp_path))
+
+    @proj.model(materialized="table")
+    def t1(ctx):
+        return ctx.spark.range(5).withColumn("v", F.col("id") * 2)
+
+    @proj.model(materialized="table")
+    def t2(ctx):
+        return ctx.ref("t1").withColumn("w", F.col("v") + 1)
+
+    @proj.model(materialized="table")
+    def t3(ctx):
+        return ctx.ref("t2").where("w > 3")
+
+    out = _within(120, proj.run)
+    assert sorted(map(tuple, out["t3"].collect())) == [(2, 4, 5), (3, 6, 7), (4, 8, 9)]
+    assert sorted(map(tuple, spark.table("t2").collect()))[0] == (0, 0, 1)
+    written = [(tmp_path / "dev_main" / t / "_SUCCESS").stat().st_mtime_ns for t in ("t1", "t2", "t3")]
+    assert written == sorted(written)
+
+
+def test_fct_write_metrics_match_the_sequential_build(project):
+    """The values a one-thread build observed on this two-run root."""
+    assert project.metrics["fct_order_products"] == {
+        "n_rows": 2966, "n_orphan_products": 0, "n_orphan_orders": 0,
+    }
+
+
+def test_run_tests_returns_the_sequential_results_in_order(project):
+    def key(r):
+        return (r.test_name, r.model, r.passed, r.n_violations, r.sample)
+
+    want = [key(t.run(project)) for t in project._tests]
+    assert [key(r) for r in project.run_tests()] == want
+
+
+def test_failed_write_raises_from_run_after_its_siblings(spark, tmp_path):
+    proj = Project(spark, warehouse_dir=str(tmp_path))
+
+    @proj.model(materialized="table")
+    def first(ctx):
+        return ctx.spark.range(1).select(_late_failure("first model failed")("id").alias("v"))
+
+    @proj.model(materialized="table")
+    def sibling(ctx):
+        return ctx.spark.range(1000).withColumn("v", F.col("id") % 7)
+
+    @proj.model(materialized="table")
+    def last(ctx):
+        return ctx.spark.range(1).select(F.raise_error(F.lit("last model failed")).alias("v"))
+
+    with pytest.raises(Exception, match="first model failed"):
+        _within(120, proj.run)
+    assert (tmp_path / "dev_main" / "sibling" / "_SUCCESS").exists()
+    assert proj.build("sibling").count() == 1000
+
+
+def test_failed_data_test_raises_from_run_tests_after_its_siblings(spark, tmp_path, monkeypatch):
+    from live_data_spark.plans import singular
+    from live_data_spark.plans.testing import GenericTest
+
+    proj = Project(spark, warehouse_dir=str(tmp_path))
+
+    @proj.model
+    def m(ctx):
+        return ctx.spark.range(3)
+
+    ended = []
+    run = GenericTest.run
+
+    def recorded_run(self, *args, **kwargs):
+        result = run(self, *args, **kwargs)
+        ended.append(self.test_name)
+        return result
+
+    monkeypatch.setattr(GenericTest, "run", recorded_run)
+    late = _late_failure("first test failed")
+    proj.add_test(singular("fails_first", "m", lambda p: p.relation("m").select(late("id"))))
+    proj.add_test(not_null("m", "id"))
+    proj.add_test(singular(
+        "fails_last", "m", lambda p: p.relation("m").select(F.raise_error(F.lit("last test failed")))
+    ))
+    with pytest.raises(Exception, match="first test failed"):
+        proj.run_tests()
+    assert ended == ["not_null_id"]
+
+
+def test_pool_threads_keep_the_callers_job_group(spark, tmp_path):
+    """Every Spark job the DAG run, the model build and the data tests
+    start is in the caller's job group, so ``cancelJobGroup`` and per-group
+    job accounting cover the pool threads. Streaming micro-batches are the
+    exception Spark makes itself: they run in a group named by the query's
+    run id."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    class RunIds(StreamingQueryListener):
+        def __init__(self):
+            self.ids = set()
+
+        def onQueryStarted(self, event):
+            self.ids.add(str(event.runId))
+
+        def onQueryProgress(self, event): ...
+
+        def onQueryTerminated(self, event): ...
+
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    group = "concurrent-actions-test"
+
+    def last_job_id():
+        spark.range(1).count()
+        jsc.listenerBus().waitUntilEmpty()
+        return max(sc.statusTracker().getJobIdsForGroup(group))
+
+    streams = RunIds()
+    spark.streams.addListener(streams)
+    saved = jsc.getLocalProperties().clone()
+    sc.setJobGroup(group, "job group propagation")
+    try:
+        first = last_job_id()
+        BikeShopPipeline(spark, str(tmp_path)).run()
+        proj = build_project(
+            spark, warehouse_dir=str(tmp_path / "warehouse"), raw_root=str(tmp_path / "raw")
+        )
+        proj.run()
+        proj.run_tests()
+        last = last_job_id()
+    finally:
+        jsc.setLocalProperties(saved)
+        spark.streams.removeListener(streams)
+
+    store = jsc.statusStore()
+    in_group = set(sc.statusTracker().getJobIdsForGroup(group))
+    elsewhere = {}
+    for job in range(first + 1, last):
+        g = store.job(job).jobGroup()
+        name = g.get() if g.isDefined() else None
+        if job not in in_group and name not in streams.ids:
+            elsewhere[job] = name
+    assert not elsewhere
+    assert streams.ids and len(in_group & set(range(first + 1, last))) > 20

@@ -280,6 +280,40 @@ def test_stream_start_restores_session_partitions_when_start_raises(spark, tmp_p
         assert spark.conf.get(SHUFFLE) == "32"
 
 
+def test_concurrent_stream_starts_keep_the_session_partitions(spark, tmp_path, monkeypatch):
+    """Four streams start on four threads at once (as the pipeline's COPYs
+    do): each offset log records the cap, and the session keeps its own
+    value. A slowed ``start()`` holds each swap open while the next thread
+    arrives, so unguarded swaps would restore a capped value."""
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.sql.streaming import DataStreamWriter
+
+    start = DataStreamWriter.start
+
+    def slow_start(self, *args, **kwargs):
+        time.sleep(0.3)
+        return start(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataStreamWriter, "start", slow_start)
+    src = tmp_path / "ev"
+    _land(spark, src, "s1", 0, 180)
+
+    def drain(i):
+        rollup = jobs.hourly_rollup(jobs.read_events_stream(spark, f"{src}/*"))
+        time.sleep(0.1 * i)
+        jobs.run_available_now(rollup, str(tmp_path / f"sink{i}"), str(tmp_path / f"ckpt{i}"))
+
+    with _session_conf(spark, SHUFFLE, 32):
+        with ThreadPoolExecutor(4) as pool:
+            list(pool.map(drain, range(4)))
+        assert spark.conf.get(SHUFFLE) == "32"
+    cap = min(32, spark.sparkContext.defaultParallelism)
+    for i in range(4):
+        assert _state_layout(tmp_path / f"ckpt{i}") == (cap, cap), i
+
+
 def test_landing_append_stream_exactly_once(spark, tmp_path):
     """Two file drops → two AvailableNow runs → appended exactly once,
     and a re-run with no new files is a no-op (checkpoint offsets)."""
