@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from live_data_spark.bikeshop.generator import MockDataSpark
 from live_data_spark.bikeshop.schema import RAW_SCHEMAS
-from live_data_spark.session import run_actions
+from live_data_spark.session import local_frame, run_actions
 from live_data_spark.sources.files import clean_dir, stage_files, write_tsv
 from live_data_spark.streaming.jobs import landing_append_stream
 
@@ -91,7 +91,7 @@ class BikeShopPipeline:
         declared schema (create_tables.sql + mock_schema.py)."""
         for table, schema in RAW_SCHEMAS.items():
             if not self.table_exists(table):
-                empty = self.spark.createDataFrame([], schema)
+                empty = local_frame(self.spark, [], schema)
                 empty.write.mode("overwrite").parquet(str(self.raw_dir / table))
 
     def read_raw(self, table: str) -> DataFrame:

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from live_data_spark.catalog import load, register, table_rowcount
 from live_data_spark.operators.similarity import as_double, pin_for_iteration
+from live_data_spark.session import local_frame
 
 K_CLUSTERS = 8
 N_ITERS = 5
@@ -308,6 +309,12 @@ def embedding_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     (same-session bench pair): 2.88 → 2.33 s — the profile action is
     now ~instant and the remaining cost is the fit's 5 sequential Lloyd
     rounds (plans/r12/embedding_kmeans_{before,after}.txt).
+
+    The k-row profile goes back to Spark through ``local_frame``: a
+    LocalRelation in cluster order, so collecting it starts no job. The
+    earlier ``createDataFrame(rows).orderBy("cluster")`` built an RDD of
+    pickled rows and sorted it, three jobs (1.3–1.7 s cold on a 4-core
+    host) to return k rows the driver already held.
     """
     e = load(spark, sf_dir, "embeddings").select(
         "vec_id", as_double("embedding").alias("emb")
@@ -346,11 +353,12 @@ def embedding_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         if counts[c]:
             cvec = sums[c] / np.linalg.norm(sums[c])
             rows.append((c, int(counts[c]), float(np.dot(usums[c], cvec) / counts[c])))
-    out = spark.createDataFrame(rows, "cluster int, n_points long, mean_cos double")
+    # no Sort: the rows are in cluster order and a LocalRelation keeps it
+    out = local_frame(spark, rows, "cluster int, n_points long, mean_cos double")
     # F.round (HALF_UP), matching the old plan's rounding exactly
     return out.select(
         "cluster", "n_points", F.round("mean_cos", 4).alias("mean_cos_to_centroid")
-    ).orderBy("cluster")
+    )
 
 
 @register("semdedup_pairs", oracle=None, headline=True, tags=("similarity", "dedup", "clustering"))

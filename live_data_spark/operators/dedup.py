@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from live_data_spark.catalog import broadcast_dim, load, register
 from live_data_spark.operators.text import fingerprint, normalized_text
+from live_data_spark.session import local_frame
 
 # ---------------------------------------------------------------------------
 # 1. Exact dedup — hash-groupBy on content fingerprint.
@@ -667,7 +668,7 @@ def _components_driver(spark: SparkSession, edges: DataFrame) -> DataFrame:
         if m is None or node < m:
             comp_min[root] = node
     rows = sorted((node, comp_min[find(node)]) for node in parent)
-    return spark.createDataFrame(rows, "doc_id long, lbl long")
+    return local_frame(spark, rows, "doc_id long, lbl long")
 
 
 # ---------------------------------------------------------------------------
@@ -1530,11 +1531,9 @@ def dedup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     j = F.col("n_common") / (F.col("n1") + F.col("n2") - F.col("n_common"))
     jac = pairs.where(j >= floor_t).select("doc_id_1", "doc_id_2", j.alias("j"))
 
-    grid = spark.createDataFrame(
-        [(float(t),) for t in CURVE_THRESHOLDS], "threshold double"
-    )
-    # broadcast hint: without it the non-equi inner join with the
-    # stats-less local grid degrades to CartesianProduct
+    grid = local_frame(spark, [(float(t),) for t in CURVE_THRESHOLDS], "threshold double")
+    # broadcast hint: keeps the non-equi inner join a broadcast
+    # nested-loop join over the grid, never a CartesianProduct
     f = F.broadcast(grid).join(jac, jac["j"] >= grid["threshold"])
     # ONE aggregation serves all three counts: explode each pair into
     # role-tagged (is_left, d) rows so n_pairs (Σ is_left), n_docs

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from live_data_spark.catalog import load, register
 from live_data_spark.operators.dedup import _truncate_lineage
+from live_data_spark.session import local_frame
 
 PR_DAMPING = 0.85
 PR_ITERS = 12
@@ -242,7 +243,7 @@ def _pagerank_driver(spark: SparkSession, edges: DataFrame, iters: int) -> DataF
         (int(nodes[i]), int(outdeg[i]), float(pr[i]))
         for i in range(n)
     ]
-    return spark.createDataFrame(out, "part_id long, degree long, pr double")
+    return local_frame(spark, out, "part_id long, degree long, pr double")
 
 
 def _pr_oracle() -> str:

@@ -18,6 +18,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from live_data_spark.catalog import load, register, table_rowcount
+from live_data_spark.session import local_frame
 
 N_QUERIES = 10  # vec_id < 10 form the demo query set
 TOP_K = 5
@@ -1613,8 +1614,8 @@ def embedding_pca_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
          round(float(cum[i]), 4))
         for i in range(len(evals))
     ]
-    return spark.createDataFrame(
-        rows, "component int, eigenvalue double, variance_share double, cumulative_share double"
+    return local_frame(
+        spark, rows, "component int, eigenvalue double, variance_share double, cumulative_share double"
     )
 
 
@@ -1670,9 +1671,7 @@ def embedding_whiten_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         (i + 1, round(float(mu[i]), 6), round(float(cov[i, i]), 6))
         for i in range(len(mu))
     ]
-    return spark.createDataFrame(
-        rows, "component int, mean_after double, var_after double"
-    )
+    return local_frame(spark, rows, "component int, mean_after double, var_after double")
 
 
 # ---------------------------------------------------------------------------
@@ -1981,7 +1980,8 @@ def embedding_mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pool = [(r["vec_id"], r["qrel"], r["emb"]) for r in pool_df.collect()]
     sel = mmr_greedy(pool, MMR_SELECT)
-    return pool_df.sparkSession.createDataFrame(
+    return local_frame(
+        pool_df.sparkSession,
         [
             (i, v, qrel / MMR_Q, qscore / (MMR_Q * MMR_LAM_DEN))
             for i, (v, qrel, qscore) in enumerate(sel)
@@ -2116,7 +2116,7 @@ def build_pq_codebook(spark: SparkSession, sf_dir: str, index_dir: str, version:
         for j in range(books.shape[0])
         for k in range(books.shape[1])
     ]
-    df = spark.createDataFrame(rows, "subspace int, code int, codeword array<double>")
+    df = local_frame(spark, rows, "subspace int, code int, codeword array<double>")
     write_artifact(df, f"{index_dir}/pq_codebook", version)
 
 
@@ -2296,7 +2296,7 @@ def embedding_procrustes_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = [l for l in labels if (l, 0) in by and (l, 1) in by]
     schema = "label int, n_first long, n_second long, dist_before double, dist_after double"
     if not pairs:  # empty corpus / no label present in both halves
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     A = np.stack([by[(l, 0)][0] for l in pairs])
     B = np.stack([by[(l, 1)][0] for l in pairs])
     u, _, vt = np.linalg.svd(A.T @ B)
@@ -2312,7 +2312,7 @@ def embedding_procrustes_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for i, l in enumerate(pairs)
     ]
-    return spark.createDataFrame(out, schema).orderBy("label")
+    return local_frame(spark, out, schema)  # in label order: ``pairs`` is sorted
 
 
 # ---------------------------------------------------------------------------
@@ -2497,7 +2497,7 @@ def embedding_intrinsic_dimension_sampled(spark: SparkSession, sf_dir: str) -> D
         .collect()
     )
     if not anchor_rows:  # empty corpus: declared schema, no numpy work
-        return spark.createDataFrame([], "label int, n_vecs bigint, id_2nn double")
+        return local_frame(spark, [], "label int, n_vecs bigint, id_2nn double")
     A = np.stack([np.asarray(r["emb"], dtype=np.float64) for r in anchor_rows])
     a_ids = np.array([r["vec_id"] for r in anchor_rows], dtype=np.int64)
     a_lbl = np.array([r["label"] for r in anchor_rows], dtype=np.int32)

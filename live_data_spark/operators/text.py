@@ -22,6 +22,7 @@ from live_data_spark.catalog import (
     load,
     register,
 )
+from live_data_spark.session import local_frame
 
 # ---------------------------------------------------------------------------
 # Token counting — whitespace tokenization + a BPE-ish subword estimate.
@@ -2718,7 +2719,7 @@ def text_burrows_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tot = tok.groupBy("source").agg(F.count(F.lit(1)).alias("t"))
     markers = _STOPWORDS.split("|")
-    fw = spark.createDataFrame([(m,) for m in markers], "w string")
+    fw = local_frame(spark, [(m,) for m in markers], "w string")
     cnt = (
         F.broadcast(fw)
         .crossJoin(tot.select("source"))

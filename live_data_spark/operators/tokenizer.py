@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 from live_data_spark.catalog import load, register
 from live_data_spark.operators.dedup import _truncate_lineage, spread
 from live_data_spark.operators.text import normalized_text
+from live_data_spark.session import local_frame
 
 N_MERGES = 24  # merge table size for the catalog entries (tiny demo vocab)
 END_MARK = "</w>"  # end-of-word sentinel so merges can't cross word ends
@@ -245,7 +246,8 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the counting core is anchored by ``bpe_pair_stats``.
     """
     merges = bpe_train(spark, sf_dir)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(i, l, r, c) for i, (l, r, c) in enumerate(merges)],
         "rank int, left string, right string, pair_count long",
     )

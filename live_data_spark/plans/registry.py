@@ -372,17 +372,20 @@ class Project:
         out = self._table_path(mdef)
         cols = df.columns
 
-        def read_back() -> DataFrame:
-            # hive layout moves partition columns last on read-back;
-            # re-select so the model's declared column order is the contract
-            return self.spark.read.parquet(str(out)).select(*cols)
+        def read_back(written: DataFrame) -> DataFrame:
+            # the written frame's schema spares the footer-reading job that
+            # schema inference runs; Spark reads every field as nullable,
+            # as inference would. Hive layout moves partition columns last
+            # on read-back; re-select so the model's declared column order
+            # is the contract
+            return self.spark.read.schema(written.schema).parquet(str(out)).select(*cols)
 
         if mdef.materialized == "table":
             df, obs = self._attach_observation(mdef, df)
 
             def write() -> DataFrame:
                 self._write_parquet(mdef, df, "overwrite", out)
-                return read_back()
+                return read_back(df)
 
         elif mdef.materialized == "table_bucketed":
             cat_name = f"{self.env}_{mdef.schema}_{mdef.name}"
@@ -420,7 +423,7 @@ class Project:
 
             def write() -> DataFrame:
                 self._write_parquet(mdef, df, mode, out)
-                return read_back()
+                return read_back(df)
 
         else:  # incremental_merge
             from pyspark.sql import Window
@@ -461,14 +464,14 @@ class Project:
                     shutil.rmtree(tmp, ignore_errors=True)
                     self._write_parquet(mdef, latest, "overwrite", tmp)
                     swap_dir(tmp, out)
-                    return read_back()
+                    return read_back(latest)
 
             else:
                 df, obs = self._attach_observation(mdef, df)
 
                 def write() -> DataFrame:
                     self._write_parquet(mdef, df, "overwrite", out)
-                    return read_back()
+                    return read_back(df)
 
         def write_and_harvest() -> DataFrame:
             written = write()

@@ -17,6 +17,19 @@ Scale notes (100 TB posture):
   values are stable regardless of host TZ (SURVEY.md §7.2a).
 - Arrow enabled for the few Pandas-UDF paths (similarity/multimodal).
 
+Fixed costs at the Python boundary: the engine runs as a fresh process per
+DAG run, so a cost paid once per session is paid on every run.
+- Small driver-side results (a k-row profile, a threshold grid, an empty
+  table with a declared schema) go through ``local_frame``: the rows become
+  a ``pyarrow.Table`` and Spark holds them as a ``LocalRelation``. Collecting
+  one starts no Spark job and no Python worker; the classic
+  ``createDataFrame(list)`` builds an RDD of pickled rows that costs one job
+  per action (three under an ``orderBy``). A LocalRelation keeps row order,
+  so sort the rows on the driver instead of adding a ``Sort`` over them.
+- Python workers start from ``live_data_spark.worker_daemon``, which puts
+  the installed, bytecode-cached pyspark ahead of Spark's source-only
+  ``pyspark.zip`` when the two are the same version (see that module).
+
 Concurrent actions: a small job (the reference DAG's 1000-row batches) is
 bound by driver latency, not cluster work, so independent actions overlap
 on driver threads (``ActionPool``/``run_actions``). Plans are built on the
@@ -28,10 +41,11 @@ threads wide. Each thread inherits the caller's job group, so
 from __future__ import annotations
 
 import os
-from collections.abc import Callable, Sequence
+from collections.abc import Callable, Iterable, Sequence
 from concurrent.futures import Future, ThreadPoolExecutor
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 from pyspark.util import inheritable_thread_target
 
 DEFAULT_APP_NAME = "live_data_spark"
@@ -64,6 +78,7 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        .config("spark.python.daemon.module", "live_data_spark.worker_daemon")
     )
     if master is not None:
         builder = builder.master(master)
@@ -76,6 +91,30 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[Sequence], schema: str | StructType
+) -> DataFrame:
+    """A small driver-side result as a DataFrame over a ``LocalRelation``.
+
+    ``rows`` are tuples in ``schema`` order (a DDL string or a
+    ``StructType``). They travel to the JVM as one Arrow table and the
+    frame keeps their order; collecting it starts no Spark job and no
+    Python worker. Only for results the driver already holds: the rows
+    sit in the plan, not in executors.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(struct)
+    rows = list(rows)
+    table = pa.Table.from_arrays(
+        [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table)
 
 
 class ActionPool:

@@ -225,6 +225,7 @@ from pyspark.sql import DataFrame, SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from live_data_spark.catalog import register  # noqa: E402
+from live_data_spark.session import local_frame  # noqa: E402
 
 # exactly ceil(n/batch) = 2 micro-batch drains: enough to prove the
 # offset walk (batch 2 resumes from the checkpointed offset), while each
@@ -350,7 +351,7 @@ def pysource_stream_batch_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = parity_report(streamed, batch)
         # materialize before the temp sink disappears (bounded: ≤|langs| rows)
         rows = [tuple(r) for r in out.collect()]
-    return spark.createDataFrame(
-        rows, "lang string, n_stream bigint, n_batch bigint, n_mismatch bigint"
+    return local_frame(
+        spark, rows, "lang string, n_stream bigint, n_batch bigint, n_mismatch bigint"
     )
 

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from live_data_spark.catalog import broadcast_dim, load, register
 from live_data_spark.functions.dialect import money_sum
+from live_data_spark.session import local_frame
 
 _HOURLY_ORACLE = """
 SELECT
@@ -2310,7 +2311,7 @@ def events_value_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).crossJoin(
         F.broadcast(uv.agg(F.count(F.lit(1)).alias("n"), F.sum("v").alias("tot")))
     )
-    cuts = spark.createDataFrame([(c,) for c in PARETO_CUTS], "top_pct int")
+    cuts = local_frame(spark, [(c,) for c in PARETO_CUTS], "top_pct int")
     cut_rank = F.greatest(F.lit(1), F.floor(F.col("n") * F.col("top_pct") / 100.0).cast("bigint"))
     return (
         ranked.crossJoin(F.broadcast(cuts))
@@ -4362,7 +4363,7 @@ def events_experiment_power(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("converted").cast("bigint").alias("c"),
     )
-    grid = spark.createDataFrame([(m,) for m in (0.01, 0.02, 0.05, 0.10)], "mde double")
+    grid = local_frame(spark, [(m,) for m in (0.01, 0.02, 0.05, 0.10)], "mde double")
     p = F.col("c") / F.col("n").cast("double")
     n_req = F.ceil(
         F.pow(F.lit(_POWER_Z_ALPHA + _POWER_Z_BETA), 2)

@@ -50,6 +50,7 @@ from pyspark.sql.types import (
 )
 
 from live_data_spark.sources.files import TSV_OPTIONS
+from live_data_spark.session import local_frame
 
 EVENTS_SCHEMA = StructType(
     [
@@ -730,7 +731,7 @@ def incremental_dedup_stream(
         try:
             history = sess.read.parquet(store_dir).select("fp").distinct()
         except AnalysisException:  # first batch: store not created yet
-            history = sess.createDataFrame([], "fp string")
+            history = local_frame(sess, [], "fp string")
         w = Window.partitionBy("fp")
         cls = (
             b.join(history.withColumn("seen", F.lit(True)), "fp", "left")

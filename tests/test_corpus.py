@@ -60,6 +60,20 @@ def test_corpus_dedup_drops_planted_duplicates(spark, sf_dir, tmp_path):
     assert deduped.count() == kept.count()
 
 
+def test_corpus_table_read_back_schema_equals_the_inferred_one(spark, sf_dir, tmp_path):
+    """As tests/test_engine.py's bike-shop twin: the lang-partitioned
+    ``corpus_clean`` and every other table read back with the schema that
+    footer inference would give."""
+    proj = build_corpus_project(spark, str(tmp_path / "wh"), sf_dir)
+    built = proj.run()
+    tables = [m for m in proj._models.values() if m.materialized == "table"]
+    assert "corpus_clean" in {m.name for m in tables}
+    for mdef in tables:
+        out = str(proj._table_path(mdef))
+        inferred = spark.read.parquet(out).select(*built[mdef.name].columns)
+        assert built[mdef.name].schema == inferred.schema, mdef.name
+
+
 def test_manifest_exports_full_graph(spark, sf_dir, tmp_path):
     """The manifest (dbt docs analog) carries every node, its
     materialization, and post-build dependency edges — JSON-able."""

@@ -261,6 +261,18 @@ def test_table_materialization_persists(project, spark, pipeline_root):
     assert on_disk.count() == project.build("fct_order_products").count()
 
 
+def test_table_read_back_schema_equals_the_inferred_one(project, spark):
+    """Read-back passes the written frame's schema instead of inferring
+    it from a footer (one job per table); the result must be the schema
+    inference gives, nullability and the partition column included."""
+    tables = [m for m in project._models.values() if m.materialized == "table"]
+    assert {m.name for m in tables} >= {"dim_customer", "fct_order_products"}
+    for mdef in tables:
+        out = str(project._table_path(mdef))
+        inferred = spark.read.parquet(out).select(*project.build(mdef.name).columns)
+        assert project.build(mdef.name).schema == inferred.schema, mdef.name
+
+
 def test_fact_partitioned_by_date_and_pruned(project, spark, pipeline_root):
     """The fact writes hive-partitioned by order_date; a date predicate
     must prune at the file listing (PartitionFilters), not post-scan."""

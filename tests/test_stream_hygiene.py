@@ -31,8 +31,9 @@ START_OK: set[tuple[str, str]] = {
 }
 
 
-def _starter_calls(tree: ast.AST):
-    """(enclosing function, line) of every starter call in ``tree``."""
+def _method_calls(tree: ast.AST, methods: set[str]):
+    """(enclosing function, line) of every ``.<method>(...)`` call in
+    ``tree`` whose method is in ``methods``."""
 
     def walk(node: ast.AST, fn: str):
         for child in ast.iter_child_nodes(node):
@@ -42,7 +43,7 @@ def _starter_calls(tree: ast.AST):
             if (
                 isinstance(child, ast.Call)
                 and isinstance(child.func, ast.Attribute)
-                and child.func.attr in STARTERS
+                and child.func.attr in methods
             ):
                 yield fn, child.lineno
             yield from walk(child, scope)
@@ -54,7 +55,7 @@ def test_streams_start_only_in_the_runner():
     found, offenders = set(), []
     for path in sorted(PACKAGE.rglob("*.py")):
         rel = path.relative_to(PACKAGE).as_posix()
-        for fn, line in _starter_calls(ast.parse(path.read_text())):
+        for fn, line in _method_calls(ast.parse(path.read_text()), STARTERS):
             found.add((rel, fn))
             if (rel, fn) not in START_OK:
                 offenders.append(f"{rel}:{line} in {fn}()")
