@@ -1,54 +1,45 @@
 #!/usr/bin/env python
-"""Full-catalog Spark-side perf sweep at sf0.1 — bench.py's wide twin.
+"""Full-catalog Spark-counter sweep at sf0.1 — bench.py's wide twin.
 
-bench.py watches 16 headline queries; this times EVERY catalog entry
-(noop-write materialization, best-of-N steady-state) and records the
-result as a committed artifact (PERF_SF01.json) so per-entry perf is
-visible and regressions are catchable across the whole surface, not
-just the headline set.
+bench.py watches 16 headline queries; this runs EVERY catalog entry once
+and records Spark's stage counters for it in a committed artifact
+(PERF_SF01.json), so a plan change anywhere in the catalog is caught.
 
-Host-variance discipline (SCALE.md "Measured host variance"): absolute
-times drift 2-3× across sessions, so the artifact stores each entry's
-RATIO to the pinned anchor query (dedup_exact, measured best-of-N
-before and after the sweep, min taken) alongside the absolute seconds.
-The tripwire compares ratios, which host load cancels to first order.
+Each entry is one noop write inside one ``perfbench.trace.Tracer`` span,
+in sorted order, in a fresh session that starts with one untraced
+warm-up. The span's counters are the entry's record:
+
+- exact: ``jobs``, ``stages``, ``tasks``, ``shuffle_bytes`` and
+  ``input_bytes``. For a fixed plan, data and core count they repeat
+  run to run whatever else the host is doing, so any change is a change
+  of plan (SHUFFLE_BYTES_VARY names the few entries whose bytes alone
+  do not repeat);
+- informational: ``jvm_cpu_s`` (executor CPU) and ``sec`` (wall). Both
+  move with host load; CPU gets only a loose check, wall none.
+
+Only the entry's first run is recorded. Some entries persist a frame that
+a later run reuses (``catalog.gated_pair_sides``), which changes their
+stage and byte counts; a fixed order in a fresh session makes the first
+run reproducible.
 
 Usage:
-    python scripts/perf_sweep.py            # re-time and REWRITE the artifact
-    python scripts/perf_sweep.py --check    # re-time and COMPARE: exit 1 if any
-                                            # entry's ratio inflated >3x vs the
-                                            # committed artifact (new entries and
-                                            # sub-0.2s noise-floor entries pass)
+    python scripts/perf_sweep.py            # measure and REWRITE the artifact
+    python scripts/perf_sweep.py --check    # measure and COMPARE: exit 1 if an
+                                            # entry's exact counters changed or
+                                            # its jvm_cpu_s more than tripled
+                                            # above the 0.2 s floor
 
-Run `--check` before a round closes; rewrite after deliberate plan work.
-The structural half of the tripwire (artifact exists, covers the whole
-catalog, ratios consistent) runs in pytest (tests/test_perf_artifact.py);
-the re-timing half lives here because a 10-minute sweep does not belong
-in the unit suite.
-
-Contention discipline (SCALE.md §15 adjudication): the sweep REFUSES to
-start while another Spark driver is live on the host (`--force` to
-override) — a concurrent JVM inflates streaming entries' fixed machinery
-latency without scaling the anchor, which false-positives the ratio
-tripwire. Entries tagged "streaming" are additionally exempt from the
-ratio comparison and checked against an absolute stall ceiling instead:
-their wall time is availableNow-drain machinery, not plan work, so a
-ratio-to-anchor is not meaningful signal for them under ANY load.
-
-Quiet-host gate (r11 — encodes SCALE.md §18's manual anchor-gate rule
-after BENCH_r10 slipped through it): the sweep also refuses when the
-pre-JVM 1-minute loadavg is >= 1.5 or the warmup anchor (best-of-4)
-exceeds 0.25 s. r10's steal mode showed loadavg alone is not enough
-(multi-core stages slowed 2-4x on an idle loadavg), and the anchor
-alone is not either (it is single-stage) — both must pass. `--force`
-overrides for deliberate loaded-run diagnostics; a FORCED artifact
-should never be committed.
+The counters depend on the core count (tasks, AQE's coalesced
+partitions), so the artifact records ``parallelism`` and ``--check``
+exits 2 before starting Spark when this host's differs. The structural
+half of the tripwire (artifact exists, covers the catalog, integer
+counters) runs in pytest (tests/test_perf_artifact.py).
 """
 
 from __future__ import annotations
 
 import json
-import subprocess
+import os
 import sys
 import time
 from pathlib import Path
@@ -58,151 +49,136 @@ sys.path.insert(0, str(REPO))
 
 from live_data_spark.catalog import catalog  # noqa: E402
 from live_data_spark.session import get_spark  # noqa: E402
+from perfbench import host  # noqa: E402
+from perfbench.trace import Tracer  # noqa: E402
 
 SF = "/root/testdata/sf0.1"
 ARTIFACT = REPO / "PERF_SF01.json"
-ANCHOR = "dedup_exact"
-RUNS = 2
-# quiet-host gate (see module docstring): both must pass unless --force
-ANCHOR_GATE_SEC = 0.25
-LOADAVG_GATE = 1.5
-TRIP_RATIO = 3.0  # flag an entry whose ratio-to-anchor tripled
-NOISE_FLOOR_SEC = 0.2  # sub-floor entries are scheduling noise, not signal
-STREAMING_STALL_SEC = 60.0  # streaming entries: absolute ceiling, not ratio
+WARMUP = "dedup_exact"  # JVM/codegen + Arrow worker warm-up, untraced
+EXACT = ("jobs", "stages", "tasks", "shuffle_bytes", "input_bytes")
+TRIP_RATIO = 3.0  # flag an entry whose jvm_cpu_s more than tripled...
+CPU_FLOOR_SEC = 0.2  # ...measured from at least this much CPU
+# Entries whose shuffle_bytes differ between sweeps of one tree while
+# their records, stages and tasks do not: the rows inside a map output
+# come out in another order or split, which moves only the compressed
+# size. Spark numbers expressions from one global counter and orders
+# some rewritten expressions by hash, so a plan can flip between two
+# forms that list an Exchange's key columns in either order. Over
+# repeated builds the optimized plan reads two forms for six entries
+# below (all but the three named next), and q20_outsized_suppliers
+# flips in its final adaptive plan. events_health_digest's plan also
+# varies in other ways, and window_spend_deciles_ranged keeps one plan
+# and still varies; neither cause is isolated. Their shuffle_bytes are
+# not compared; every other counter is. Values: lowest and highest seen.
+SHUFFLE_BYTES_VARY = {
+    "corpus_lang_source_entropy": (7_198, 7_484),
+    "dedup_threshold_curve": (4_974_218, 4_975_893),
+    "events_health_digest": (174_979, 177_798),
+    "events_new_vs_returning": (521_355, 547_057),
+    "events_rolling_dau": (1_369_630, 1_378_538),
+    "events_stickiness": (1_297_109, 1_301_302),
+    "privacy_pseudonymize_users": (59_648, 60_631),
+    "q20_outsized_suppliers": (2_313_663, 2_313_697),
+    "window_spend_deciles_ranged": (620_379, 620_409),
+}
+SESSION_CONF = {
+    "spark.ui.showConsoleProgress": "false",
+    # past this many stages the status store drops skipped stages first,
+    # and the tracer then fails on a later job that lists one
+    "spark.ui.retainedStages": str(1 << 20),
+}
 
 
-def other_spark_drivers() -> list[str]:
-    """Command lines of live Spark driver JVMs on this host (ours is not
-    started yet when this runs, so every hit is a foreign driver)."""
-    try:
-        out = subprocess.run(
-            ["ps", "-eo", "args"], capture_output=True, text=True, check=True
-        ).stdout
-    except (OSError, subprocess.CalledProcessError):
-        return []  # no ps — proceed rather than block the sweep
-    return [
-        line.strip()[:120]
-        for line in out.splitlines()
-        if "org.apache.spark.deploy.SparkSubmit" in line
-    ]
+def parallelism() -> int:
+    """The core count a session from ``get_spark`` will run with, read
+    without starting one."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    return host.nproc() if cpus == "*" else int(cpus)
 
 
-def _time(spec, spark, runs: int = RUNS) -> float:
-    best = float("inf")
-    for _ in range(runs):
-        t0 = time.perf_counter()
-        spec.spark(spark, SF).write.format("noop").mode("overwrite").save()
-        best = min(best, time.perf_counter() - t0)
-    return best
+def measure(tracer: Tracer, spark, name: str, spec, sf_dir: str) -> dict:
+    """One noop write of ``spec`` inside one tracer span: its exact
+    counters, ``jvm_cpu_s`` and wall ``sec``. Building the frame is in
+    the span too, so plan-time jobs count."""
+    with tracer.span(name) as span:
+        spec.spark(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    rec = {k: int(span.counters[k]) for k in EXACT}
+    rec["jvm_cpu_s"] = round(span.counters["jvm_cpu_s"], 3)
+    rec["sec"] = round(span.duration, 3)
+    return rec
 
 
-def sweep(force: bool = False) -> dict | None:
-    """Time every entry; None = quiet-host gate refused (nothing timed)."""
-    import os
-
-    # bench.py's steal probe (shared reader): steal share across the
-    # sweep goes into the artifact so future --check adjudications can
-    # tell "plan regressed" from "host was being robbed when written"
-    import bench
-
-    loadavg1 = os.getloadavg()[0]
-    if loadavg1 >= LOADAVG_GATE and not force:
-        print(
-            f"perf_sweep: pre-JVM 1-min loadavg {loadavg1:.2f} >= {LOADAVG_GATE} — "
-            "host busy; wait for quiet or --force (do not commit a forced artifact)."
-        )
-        return None
-    cpu_pre = bench._proc_stat_snapshot()
-    spark = get_spark(extra_conf={"spark.ui.showConsoleProgress": "false"})
+def sweep() -> dict:
+    spark = get_spark(extra_conf=SESSION_CONF)
     spark.sparkContext.setLogLevel("ERROR")
     cat = catalog()
-    # JVM/codegen + Arrow worker warmup (bench.py's recipe)
-    cat[ANCHOR].spark(spark, SF).limit(1).collect()
-
-    anchor_pre = _time(cat[ANCHOR], spark, runs=4)
-    if anchor_pre > ANCHOR_GATE_SEC and not force:
-        print(
-            f"perf_sweep: warmup anchor {anchor_pre:.3f}s > {ANCHOR_GATE_SEC}s — "
-            "host in a degraded window (loadavg can look idle under "
-            "hypervisor steal); wait for quiet or --force."
-        )
-        spark.stop()
-        return None
-    entries: dict[str, float] = {}
+    cat[WARMUP].spark(spark, SF).limit(1).collect()
+    tracer = Tracer(spark)
+    entries: dict[str, dict] = {}
+    t0 = time.perf_counter()
     for i, (name, spec) in enumerate(sorted(cat.items())):
-        entries[name] = round(_time(spec, spark), 3)
-        print(f"[{i + 1}/{len(cat)}] {name}: {entries[name]}s", flush=True)
-    anchor_sec = min(anchor_pre, _time(cat[ANCHOR], spark), entries[ANCHOR])
+        rec = entries[name] = measure(tracer, spark, name, spec, SF)
+        print(
+            f"[{i + 1}/{len(cat)}] {name}: {rec['stages']} stages, "
+            f"{rec['shuffle_bytes']} shuffle B, {rec['jvm_cpu_s']} cpu s, {rec['sec']} s",
+            flush=True,
+        )
     out = {
         "sf": 0.1,
-        "runs_per_entry": RUNS,
-        "anchor": {"query": ANCHOR, "sec": round(anchor_sec, 3)},
-        "host": {
-            "loadavg_pre_jvm": round(loadavg1, 2),
-            "steal_pct_run": bench._steal_pct(cpu_pre, bench._proc_stat_snapshot()),
-        },
-        "entries": {
-            n: {"sec": s, "ratio": round(s / anchor_sec, 2)} for n, s in entries.items()
-        },
+        "parallelism": int(spark.sparkContext.defaultParallelism),
+        "sweep_sec": round(time.perf_counter() - t0, 1),
+        "entries": entries,
     }
     spark.stop()
     return out
 
 
-def flag_entries(base: dict, fresh: dict, streaming: set[str]) -> list[tuple]:
-    """(name, baseline_ratio, fresh_ratio) rows the tripwire flags."""
-    flagged = []
+def flag_entries(base: dict, fresh: dict) -> dict[str, list[str]]:
+    """Entry name -> what moved, for each entry ``fresh`` shares with
+    ``base`` whose exact counters differ (shuffle_bytes skipped for
+    SHUFFLE_BYTES_VARY) or whose jvm_cpu_s exceeds TRIP_RATIO times its
+    recorded value (floored at CPU_FLOOR_SEC)."""
+    flagged = {}
     for name, now in fresh["entries"].items():
-        rec = base["entries"].get(name)
-        if rec is None:  # new since the artifact — rewrite will pick it up
+        was = base["entries"].get(name)
+        if was is None:  # new since the artifact — a rewrite picks it up
             continue
-        if name in streaming:
-            # fixed drain-machinery latency; ratio-to-anchor is not signal.
-            # Only a genuine stall (a hung offset walk) should flag.
-            if now["sec"] > STREAMING_STALL_SEC:
-                flagged.append((name, rec["ratio"], now["ratio"]))
-            continue
-        if now["sec"] < NOISE_FLOOR_SEC and rec["sec"] < NOISE_FLOOR_SEC:
-            continue
-        if rec["ratio"] > 0 and now["ratio"] / rec["ratio"] > TRIP_RATIO:
-            flagged.append((name, rec["ratio"], now["ratio"]))
+        exact = [k for k in EXACT if not (k == "shuffle_bytes" and name in SHUFFLE_BYTES_VARY)]
+        moved = [f"{k} {was[k]} -> {now[k]}" for k in exact if now[k] != was[k]]
+        if now["jvm_cpu_s"] > TRIP_RATIO * max(was["jvm_cpu_s"], CPU_FLOOR_SEC):
+            moved.append(f"jvm_cpu_s {was['jvm_cpu_s']} -> {now['jvm_cpu_s']}")
+        if moved:
+            flagged[name] = moved
     return flagged
 
 
 def main() -> int:
     check = "--check" in sys.argv
     if check:
-        # read the baseline BEFORE the ~10-minute sweep: a missing or
-        # merge-mangled artifact should fail in under a second, not after
+        # read the baseline BEFORE the sweep: a missing artifact or a
+        # different core count should fail in under a second, not after
         base = json.loads(ARTIFACT.read_text())
-    drivers = other_spark_drivers()
-    if drivers and "--force" not in sys.argv:
-        print("perf_sweep: another Spark driver is live on this host —")
-        for d in drivers:
-            print(f"  {d}")
-        print("timings under contention are not signal (streaming entries "
-              "false-positive the tripwire). Wait for it, or re-run with --force.")
-        return 2
-    fresh = sweep(force="--force" in sys.argv)
-    if fresh is None:
-        return 2
+        if base["parallelism"] != parallelism():
+            print(
+                f"perf_sweep: artifact was written at parallelism "
+                f"{base['parallelism']}, this host runs {parallelism()} — "
+                "task counts and coalesced partitions would differ; "
+                "compare on a matching host or rewrite the artifact."
+            )
+            return 2
+    fresh = sweep()
+    print(f"perf_sweep: {len(fresh['entries'])} entries in {fresh['sweep_sec']} s")
     if not check:
         ARTIFACT.write_text(json.dumps(fresh, indent=1, sort_keys=True) + "\n")
-        print(f"perf_sweep: wrote {ARTIFACT.name} ({len(fresh['entries'])} entries)")
+        print(f"perf_sweep: wrote {ARTIFACT.name}")
         return 0
-    from live_data_spark.catalog import catalog as _catalog
-
-    streaming = {n for n, s in _catalog().items() if "streaming" in s.tags}
-    flagged = flag_entries(base, fresh, streaming)
-    for name, was, is_ in sorted(flagged, key=lambda x: -x[2] / max(x[1], 1e-9)):
-        print(f"TRIPWIRE {name}: ratio {was} -> {is_}")
+    flagged = flag_entries(base, fresh)
+    for name, moved in sorted(flagged.items()):
+        print(f"TRIPWIRE {name}: {'; '.join(moved)}")
     missing = sorted(set(base["entries"]) - set(fresh["entries"]))
     if missing:
         print(f"entries in artifact but gone from catalog: {missing}")
-    print(
-        f"perf_sweep --check: {len(flagged)} flagged of {len(fresh['entries'])} "
-        f"(anchor {base['anchor']['sec']}s -> {fresh['anchor']['sec']}s)"
-    )
+    print(f"perf_sweep --check: {len(flagged)} flagged of {len(fresh['entries'])}")
     return 1 if flagged else 0
 
 

@@ -11,7 +11,6 @@ Usage: python scripts/preflight.py [name-substring ...]
 
 from __future__ import annotations
 
-import math
 import os
 import sys
 import time
@@ -19,10 +18,14 @@ from pathlib import Path
 
 REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(REPO))
+# the shared canonicalizer lives in tests/conftest, which pytest puts on
+# sys.path but a plain import does not
+sys.path.insert(0, str(REPO / "tests"))
 
 import duckdb  # noqa: E402
 
 import __spark_entry__ as se  # noqa: E402
+from conftest import canon_rows as normalize  # noqa: E402
 from live_data_spark.session import get_spark  # noqa: E402
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
@@ -37,23 +40,6 @@ EMPTY_OK = {"test_relationships_orphans", "test_accepted_values"}
 # near-dups don't exist here by construction). Exactness for these
 # lives in planted-case pytest pins, not in testdata row counts.
 ROWS_ONLY_EMPTY_OK = {"neardup_lsh_production_band"}
-
-
-def normalize(rows, columns):
-    order = sorted(range(len(columns)), key=lambda i: columns[i])
-
-    def canon(v):
-        if v is None:
-            return "∅"
-        if isinstance(v, float):
-            if math.isnan(v):
-                return "nan"
-            return f"{v + 0.0:.10g}"
-        if isinstance(v, bool):
-            return str(int(v))
-        return str(v)
-
-    return sorted(tuple(canon(row[i]) for i in order) for row in rows)
 
 
 def main() -> int:

@@ -45,13 +45,19 @@ banded path as super-linear):
   scaled, or identical names manufacture m² fuzzy pairs.
 - every other table is symlinked unscaled.
 
-Timing discipline: per (entry, m), min over --runs noop-write
-executions (first run pays one-time codegen; min discounts it and load
-bursts — same rationale as bench.py). Slopes compare successive
-multipliers: slope = t[m2]/t[m1] vs the linear reference m2/m1; a slope
-persistently above linear is the super-linear red flag. Like the r9
-measurement this is evidence for SCALE.md prose, not a committed
-artifact — PERF_SF01's anchored ratios remain the regression tripwire.
+Measurement: each point is ``perf_sweep.measure`` (one noop write inside
+a ``perfbench.trace.Tracer`` span), run --runs times. The row keeps the
+min wall time (first run pays one-time codegen; min discounts it and
+load bursts — same rationale as bench.py) and the FIRST run's stages,
+shuffle bytes and executor CPU. Slopes compare successive multipliers:
+slope = t[m2]/t[m1] vs the linear reference m2/m1; a slope persistently
+above linear is the super-linear red flag. The shuffle-byte slope is the
+same ratio over bytes, which host load cannot move.
+
+The settle loop, the 1× drift re-time and --settle-sec stay: they
+protect the WALL slopes, and executor CPU is no substitute because
+pandas-UDF worker CPU is not in Spark's ``executorCpuTime``. This is
+evidence for SCALE.md prose, not a committed artifact.
 """
 
 from __future__ import annotations
@@ -236,15 +242,6 @@ def force_gate_closed() -> None:
     _catmod.BROADCAST_GATE_BYTES = -1
 
 
-def time_entry(spark, spec, sf_dir: str, runs: int) -> float:
-    best = float("inf")
-    for _ in range(runs):
-        t0 = time.perf_counter()
-        spec.spark(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        best = min(best, time.perf_counter() - t0)
-    return best
-
-
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("entries", nargs="+", help="catalog entry names")
@@ -297,6 +294,8 @@ def main() -> int:
 
     from live_data_spark.catalog import resolve_runnable
     from live_data_spark.session import get_spark
+    from perfbench.trace import Tracer
+    from scripts.perf_sweep import SESSION_CONF, measure
 
     # catalog entries AND the named swap-in configurations
     # (catalog.NON_CATALOG_HELPERS) resolve here — production rungs get
@@ -321,15 +320,23 @@ def main() -> int:
         force_gate_closed()
         print("gate-closed replay: BROADCAST_GATE_BYTES = -1 (distributed arms)")
 
-    spark = get_spark(app_name="scale_replay")
+    spark = get_spark(app_name="scale_replay", extra_conf=SESSION_CONF)
     spark.sparkContext.setLogLevel("ERROR")
 
     root = Path(tempfile.mkdtemp(prefix="scale_replay_"))
     try:
         dirs = {m: build_scaled_dir(spark, args.sf_dir, m, root, tables) for m in mults}
-        results: dict[str, dict[int, float]] = {}
+        results: dict[str, dict[int, dict]] = {}
         drifts: dict[str, float] = {}
         steals: dict[str, float | None] = {}
+        tracer = Tracer(spark)
+
+        def point(name: str, m: int, runs: int) -> dict:
+            """Min wall ``sec`` over ``runs`` measured writes at ``m``×,
+            with the first run's counters."""
+            recs = [measure(tracer, spark, name, cat[name], dirs[m]) for _ in range(runs)]
+            return {**recs[0], "sec": min(r["sec"] for r in recs)}
+
         # steal share per entry (bench.py's /proc/stat probe): the drift
         # column says WHETHER a row is valid; this says WHY it wasn't
         import bench
@@ -352,14 +359,14 @@ def main() -> int:
             # one untimed run at the smallest multiplier: session-level
             # warmup (codegen, worker pools) would otherwise land entirely
             # on the first timed point and flatten the measured slope
-            time_entry(spark, cat[name], dirs[mults[0]], 1)
-            first_sec = None  # UNROUNDED 1× reading for the drift divide
+            point(name, mults[0], 1)
             for m in mults:
-                sec = time_entry(spark, cat[name], dirs[m], args.runs)
-                results[name][m] = round(sec, 2)
-                if first_sec is None:
-                    first_sec = sec
-                print(f"  {name} x{m}: {sec:.2f}s", file=sys.stderr)
+                rec = results[name][m] = point(name, m, args.runs)
+                print(
+                    f"  {name} x{m}: {rec['sec']:.2f}s, {rec['stages']} stages, "
+                    f"{rec['shuffle_bytes']} shuffle B",
+                    file=sys.stderr,
+                )
             # drift self-check: slopes are within-session ratios, so a
             # STABLE host (even a stably-degraded one) cancels out — but
             # a ramp DURING the entry's sweep masquerades as slope.
@@ -369,13 +376,9 @@ def main() -> int:
             # super-linearity), a host that RECOVERED deflates them
             # (hides real super-linearity; the dedup_simhash 0.43-drift
             # row that motivated the lower bound).
-            # divide by the UNROUNDED first reading (ADVICE r11): a fast
-            # entry whose 1× time rounds to 0.00 would otherwise yield an
-            # astronomical false-SUSPECT drift, and even ~0.05 s entries
-            # pick up ~10% rounding error inside a ±30% band — the same
-            # rounded-boundary hazard bench.py's _drift guards against
             if len(mults) > 1:
-                re1 = time_entry(spark, cat[name], dirs[mults[0]], args.runs)
+                first_sec = results[name][mults[0]]["sec"]
+                re1 = point(name, mults[0], args.runs)["sec"]
                 drifts[name] = round(re1 / max(first_sec, 1e-9), 2)
                 if not (1 / 1.3 <= drifts[name] <= 1.3):
                     print(
@@ -386,22 +389,29 @@ def main() -> int:
                     )
             steals[name] = bench._steal_pct(cpu_pre, bench._proc_stat_snapshot())
 
-        # markdown table for SCALE.md + one JSON line for tooling
-        hdr = " | ".join(f"{m}×" for m in mults)
-        slope_hdr = " | ".join(
-            f"{b}×/{a}× (lin {b / a:.1f})" for a, b in zip(mults, mults[1:])
+        # markdown table for SCALE.md (one row per entry and multiplier;
+        # slopes against the previous multiplier) + one JSON line for tooling
+        print(
+            "| entry | × | sec | stages | shuffle bytes | jvm cpu s "
+            "| wall slope (lin) | byte slope | 1× drift |"
         )
-        print(f"| entry | {hdr} | {slope_hdr} | 1× drift |")
-        print("|" + "---|" * (1 + len(mults) + len(mults) - 1 + 1))
-        for name, ts in results.items():
-            cells = " | ".join(f"{ts[m]:.2f}s" for m in mults)
-            slopes = " | ".join(
-                f"{ts[b] / ts[a]:.2f}" for a, b in zip(mults, mults[1:])
-            )
+        print("|" + "---|" * 9)
+        for name, pts in results.items():
             d = drifts.get(name)
             suspect = d is not None and not (1 / 1.3 <= d <= 1.3)
             dcell = f"{d:.2f}" + (" SUSPECT" if suspect else "") if d else "—"
-            print(f"| {name} | {cells} | {slopes} | {dcell} |")
+            for a, m in zip([None, *mults], mults):
+                p = pts[m]
+                wall = byte = "—"
+                if a is not None:
+                    wall = f"{p['sec'] / max(pts[a]['sec'], 1e-9):.2f} ({m / a:.1f})"
+                    if pts[a]["shuffle_bytes"]:
+                        byte = f"{p['shuffle_bytes'] / pts[a]['shuffle_bytes']:.2f}"
+                print(
+                    f"| {name} | {m}× | {p['sec']:.2f} | {p['stages']} "
+                    f"| {p['shuffle_bytes']:,} | {p['jvm_cpu_s']:.2f} "
+                    f"| {wall} | {byte} | {dcell if a is None else ''} |"
+                )
         print(
             json.dumps(
                 {
@@ -409,7 +419,7 @@ def main() -> int:
                     "mults": mults,
                     "runs": args.runs,
                     "tables": sorted(tables),
-                    "sec": results,
+                    "points": results,
                     "drift_1x": drifts,
                     "steal_pct": steals,
                 }

@@ -20,8 +20,7 @@ def canon_rows(rows, columns):
     None sentinel, bools as ints) — one definition shared by every
     result-comparing sweep (oracle parity, partition-layout invariance,
     broadcast-gate-closed) so a float-format or NaN-handling tweak can
-    never desynchronize them. scripts/preflight.py carries the same
-    logic as a standalone driver replica."""
+    never desynchronize them."""
     import math
 
     order = sorted(range(len(columns)), key=lambda i: columns[i])

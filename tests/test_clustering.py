@@ -208,3 +208,56 @@ def test_semdedup_production_band_planted_recall(spark, tmp_path, monkeypatch):
         true = float(sim[a, b])
         assert true >= SEMDEDUP_THRESHOLD - 1e-9, (a, b, true)
         assert cos == pytest.approx(round(true, 4), abs=2e-4)
+
+
+def test_merge_profile_partials_unit():
+    """The per-cluster applyInPandas merge: element-wise float sums,
+    integer count sum, one row out."""
+    import pandas as pd
+
+    from live_data_spark.operators.clustering import _merge_profile_partials
+
+    pdf = pd.DataFrame(
+        {
+            "cluster": [4, 4, 4],
+            "vsum": [np.array([1.0, 2.0]), np.array([10.0, 20.0]), np.array([0.5, 0.5])],
+            "usum": [np.array([0.1, 0.2]), np.array([0.3, 0.4]), np.array([0.0, 1.0])],
+            "n": [3, 5, 1],
+        }
+    )
+    out = _merge_profile_partials(pdf)
+    assert list(out["cluster"]) == [4]
+    assert out["vsum"].iloc[0] == pytest.approx([11.5, 22.5])
+    assert out["usum"].iloc[0] == pytest.approx([0.4, 1.6])
+    assert list(out["n"]) == [9]
+
+
+def test_kmeans_profile_collect_is_k_bounded(spark, sf_dir):
+    """The profile partial stream must merge to ≤k rows before any
+    collect (guide §5): the merged frame's count is ≤ K_CLUSTERS even
+    though the partial pass emits up to k rows per partition."""
+    from live_data_spark.operators.clustering import (
+        K_CLUSTERS,
+        _fit_rounds,
+        _merge_profile_partials,
+        _profile_partials_fn,
+    )
+    from live_data_spark.catalog import load
+    from live_data_spark.operators.similarity import as_double
+
+    e = (
+        load(spark, sf_dir, "embeddings")
+        .select("vec_id", as_double("embedding").alias("emb"))
+        .repartition(8)  # force multiple partitions → multiple partials
+    )
+    centroids = _fit_rounds(e, K_CLUSTERS, 1, None)
+    schema = "cluster int, vsum array<double>, usum array<double>, n long"
+    partials = e.mapInPandas(_profile_partials_fn(centroids), schema=schema)
+    merged = partials.groupBy("cluster").applyInPandas(
+        _merge_profile_partials, schema=schema
+    )
+    assert merged.count() <= K_CLUSTERS
+    # and the merge preserves the totals the unmerged stream carries
+    tot_merged = merged.agg(F.sum("n")).collect()[0][0]
+    tot_raw = partials.agg(F.sum("n")).collect()[0][0]
+    assert tot_merged == tot_raw

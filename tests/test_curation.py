@@ -599,3 +599,19 @@ def test_dsir_weights_separate_target_from_raw(spark, sf_dir):
     frac_rest_neg = sum(1 for v in rest if v < 0) / len(rest)
     assert frac_en_pos > 0.6, frac_en_pos
     assert frac_rest_neg > 0.8, frac_rest_neg
+
+
+def test_dsir_log_weights_empty_and_null_text(spark):
+    """The explode guard (r13): empty/NULL text must flow through
+    dsir_log_weights without touching the sequence(1, 0) edge —
+    sequence with a descending stop yields [1, 0] and element_at(w, 0)
+    throws. Docs with no grams simply don't appear."""
+    from live_data_spark.operators.curation import dsir_log_weights
+
+    d = spark.createDataFrame(
+        [(1, "en", "alpha beta"), (2, "en", ""), (3, "de", None)],
+        "doc_id long, lang string, text string",
+    )
+    rows = {r["doc_id"]: r for r in dsir_log_weights(d).collect()}
+    assert set(rows) == {1}
+    assert rows[1]["n_grams"] == 3  # 2 unigrams + 1 bigram

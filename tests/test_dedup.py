@@ -305,3 +305,23 @@ def test_spread_skips_shuffle_on_large_splittable_files(spark, tmp_path):
         assert narrow.count() == 10 and wide.count() == 200_000
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+
+
+def test_components_driver_union_find_min_labels(spark):
+    from live_data_spark.operators.dedup import _components_driver
+
+    # symmetric edge list: path 1-2-3, pair 10-11 (order shuffled so the
+    # union-find sees children before parents too)
+    pairs = [(2, 3), (10, 11), (1, 2)]
+    edges = spark.createDataFrame(
+        pairs + [(b, a) for a, b in pairs], "a long, b long"
+    )
+    got = {r["doc_id"]: r["lbl"] for r in _components_driver(spark, edges).collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
+
+
+def test_components_driver_empty_edges(spark):
+    from live_data_spark.operators.dedup import _components_driver
+
+    edges = spark.createDataFrame([], "a long, b long")
+    assert _components_driver(spark, edges).count() == 0

@@ -158,3 +158,25 @@ def test_degree_oriented_triangles_survive_huge_part_ids(spark, tmp_path):
     assert ref[u][1] == ref[v][1] == ref[w][1] == 1, ref  # the planted triangle
     assert ref[x][1] == 0
     assert got == ref
+
+
+def test_order_pair_counts_matches_manual_baskets(spark):
+    from live_data_spark.operators.graph import order_baskets, order_pair_counts
+
+    li = spark.createDataFrame(
+        [
+            # order 1: parts {3, 1, 2} (with a duplicate lineitem for 1)
+            (1, 3), (1, 1), (1, 2), (1, 1),
+            # order 2: parts {2, 3}
+            (2, 3), (2, 2),
+            # order 3: single-part basket -> no pairs
+            (3, 9),
+        ],
+        "l_orderkey long, l_partkey long",
+    )
+    got = {
+        (r["p1"], r["p2"]): r["n_both"]
+        for r in order_pair_counts(order_baskets(li)).collect()
+    }
+    # per-order distinct pairs, p1 < p2, counted across orders
+    assert got == {(1, 2): 1, (1, 3): 1, (2, 3): 2}

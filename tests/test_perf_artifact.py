@@ -1,129 +1,122 @@
-"""Structural tripwire for the committed full-catalog perf artifact.
+"""Tripwire for the committed full-catalog counter artifact.
 
-PERF_SF01.json (written by scripts/perf_sweep.py) extends perf
-visibility from bench.py's 16 headline queries to every catalog entry.
-The RE-TIMING half of the tripwire is `perf_sweep.py --check` (a
-~10-minute sf0.1 sweep has no place in the unit suite; run it before a
-round closes). This module pins what CAN be checked cheaply:
+PERF_SF01.json (written by scripts/perf_sweep.py) records Spark's stage
+counters for every catalog entry at sf0.1. Re-measuring the whole
+catalog is `perf_sweep.py --check` (too long for the unit suite); this
+module pins what can be checked cheaply:
 
-- the artifact exists, parses, and names the pinned anchor;
-- every artifact entry still exists in the catalog (no zombie rows);
-- the catalog is covered (≥90% — a few mid-round additions may precede
-  the next sweep rewrite, but forgetting the sweep entirely fails);
-- per-entry ratios are consistent with their absolute seconds and the
-  anchor (the ratio column is the host-load-invariant signal the
-  tripwire compares, so it must actually BE sec/anchor_sec).
+- the artifact's shape: its parallelism, integer exact counters for
+  every entry, no zombie rows, ≥90% catalog coverage (a few mid-round
+  additions may precede the next rewrite; forgetting it entirely fails);
+- ``flag_entries`` as a pure function;
+- the measurement itself at sf0.001: a repeat reads identical exact
+  counters, and a planted extra exchange is flagged;
+- a core-count mismatch refuses before any Spark session starts.
 """
 
 from __future__ import annotations
 
+import dataclasses
 import json
-from pathlib import Path
+import sys
 
-ARTIFACT = Path(__file__).resolve().parents[1] / "PERF_SF01.json"
+from scripts import perf_sweep as ps
 
 
 def test_perf_artifact_structure_and_coverage():
     from live_data_spark.catalog import catalog
 
-    data = json.loads(ARTIFACT.read_text())
-    assert data["anchor"]["query"] == "dedup_exact"
-    anchor = data["anchor"]["sec"]
-    assert anchor > 0
+    data = json.loads(ps.ARTIFACT.read_text())
+    assert isinstance(data["parallelism"], int) and data["parallelism"] > 0
     entries = data["entries"]
     cat = set(catalog())
     assert set(entries) <= cat, sorted(set(entries) - cat)
+    assert set(ps.SHUFFLE_BYTES_VARY) <= set(entries)
     coverage = len(set(entries) & cat) / len(cat)
     assert coverage >= 0.90, (
         f"perf artifact covers {coverage:.0%} of the catalog — "
         "re-run scripts/perf_sweep.py"
     )
     for name, rec in entries.items():
-        assert rec["sec"] >= 0, name
-        assert abs(rec["ratio"] - rec["sec"] / anchor) <= 0.01 + 0.005 * rec["ratio"], name
+        for k in ps.EXACT:
+            assert isinstance(rec[k], int) and rec[k] >= 0, (name, k)
+        assert rec["jvm_cpu_s"] >= 0 and rec["sec"] >= 0, name
 
 
-def _perf_sweep_module():
-    import importlib.util
-
-    path = ARTIFACT.parent / "scripts" / "perf_sweep.py"
-    spec = importlib.util.spec_from_file_location("perf_sweep", path)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
+def _rec(**over):
+    rec = dict.fromkeys(ps.EXACT, 0)
+    rec.update(jobs=2, stages=3, tasks=9, shuffle_bytes=4096, input_bytes=10**6)
+    rec.update(jvm_cpu_s=1.0, sec=2.0)
+    rec.update(over)
+    return rec
 
 
-def test_perf_check_streaming_entries_use_stall_ceiling_not_ratio():
-    """Streaming entries carry fixed availableNow-drain machinery latency
-    that inflates under host contention WITHOUT scaling the anchor query,
-    so the ratio tripwire false-positives on them (the round-7
-    pysource_stream_batch_parity 22.8→73.8 adjudication). Pin the check's
-    arms: a contended streaming entry (huge ratio, sane seconds) passes; a
-    genuinely stalled one (seconds past the ceiling) still flags; a
-    non-streaming ratio inflation flags as before."""
-    ps = _perf_sweep_module()
+def test_flag_entries_exact_counters_and_loose_cpu(monkeypatch):
+    noisy = {"bytes_vary": (4096, 4100), "vary_stages": (4096, 4100)}
+    monkeypatch.setattr(ps, "SHUFFLE_BYTES_VARY", noisy)
     base = {
         "entries": {
-            "stream_twin": {"sec": 5.0, "ratio": 22.8},
-            "batch_q": {"sec": 1.0, "ratio": 4.0},
+            "same": _rec(),
+            "more_stages": _rec(),
+            "more_bytes": _rec(),
+            "cpu_tripled": _rec(),
+            "cpu_noise": _rec(jvm_cpu_s=0.01),
+            "wall_only": _rec(),
+            "bytes_vary": _rec(),
+            "vary_stages": _rec(),
         }
     }
-    fresh_contended = {
+    fresh = {
         "entries": {
-            "stream_twin": {"sec": 16.0, "ratio": 73.8},  # the r7 false positive
-            "batch_q": {"sec": 1.1, "ratio": 4.4},
+            "same": _rec(jvm_cpu_s=2.9),  # under 3x: CPU is informational
+            "more_stages": _rec(stages=4),
+            "more_bytes": _rec(shuffle_bytes=4097),
+            "cpu_tripled": _rec(jvm_cpu_s=3.1),
+            "cpu_noise": _rec(jvm_cpu_s=0.5),  # 50x, but under 3x the floor
+            "wall_only": _rec(sec=60.0),  # wall is never checked
+            "new_entry": _rec(stages=99),  # not in the artifact yet
+            "bytes_vary": _rec(shuffle_bytes=4100),  # known to vary in bytes only
+            "vary_stages": _rec(shuffle_bytes=4100, stages=4),
         }
     }
-    assert ps.flag_entries(base, fresh_contended, {"stream_twin"}) == []
-    fresh_stalled = {
-        "entries": {
-            "stream_twin": {"sec": ps.STREAMING_STALL_SEC + 1, "ratio": 300.0},
-            "batch_q": {"sec": 3.1, "ratio": 12.5},  # >3x ratio: real regression
-        }
-    }
-    flagged = {n for n, *_ in ps.flag_entries(base, fresh_stalled, {"stream_twin"})}
-    assert flagged == {"stream_twin", "batch_q"}
-    # without the streaming exemption the contended run would have flagged
-    assert {n for n, *_ in ps.flag_entries(base, fresh_contended, set())} == {
-        "stream_twin"
-    }
+    flagged = ps.flag_entries(base, fresh)
+    assert set(flagged) == {"more_stages", "more_bytes", "cpu_tripled", "vary_stages"}
+    assert flagged["vary_stages"] == ["stages 3 -> 4"]
+    assert flagged["more_stages"] == ["stages 3 -> 4"]
+    assert flagged["more_bytes"] == ["shuffle_bytes 4096 -> 4097"]
+    assert flagged["cpu_tripled"] == ["jvm_cpu_s 1.0 -> 3.1"]
+    assert ps.flag_entries(base, base) == {}
 
 
-def test_perf_sweep_detects_foreign_spark_drivers(monkeypatch):
-    """other_spark_drivers() must spot a live SparkSubmit JVM in ps output
-    and stay silent otherwise (and never crash when ps is unavailable)."""
-    import subprocess
+def test_measure_repeats_exactly_and_flags_a_planted_exchange(spark, sf_dir):
+    from live_data_spark.catalog import catalog
+    from perfbench.trace import Tracer
 
-    ps = _perf_sweep_module()
+    name = "q1_pricing_summary"
+    spec = catalog()[name]
+    tracer = Tracer(spark)
+    first = ps.measure(tracer, spark, name, spec, sf_dir)
+    again = ps.measure(tracer, spark, name, spec, sf_dir)
+    assert first["stages"] >= 2 and first["shuffle_bytes"] > 0, first
+    assert {k: again[k] for k in ps.EXACT} == {k: first[k] for k in ps.EXACT}
 
-    class R:
-        def __init__(self, out):
-            self.stdout = out
-
-    monkeypatch.setattr(
-        ps.subprocess,
-        "run",
-        lambda *a, **k: R("bash\njava -cp ... org.apache.spark.deploy.SparkSubmit pyspark-shell\n"),
-    )
-    hits = ps.other_spark_drivers()
-    assert len(hits) == 1 and "SparkSubmit" in hits[0]
-    monkeypatch.setattr(ps.subprocess, "run", lambda *a, **k: R("bash\nvim\n"))
-    assert ps.other_spark_drivers() == []
-
-    def boom(*a, **k):
-        raise OSError("no ps")
-
-    monkeypatch.setattr(ps.subprocess, "run", boom)
-    assert ps.other_spark_drivers() == []
+    planted = dataclasses.replace(spec, spark=lambda s, d: spec.spark(s, d).repartition(7))
+    moved = ps.measure(tracer, spark, name, planted, sf_dir)
+    flagged = ps.flag_entries({"entries": {name: first}}, {"entries": {name: moved}})
+    assert list(flagged) == [name]
+    assert any(m.startswith("stages ") for m in flagged[name]), flagged
 
 
-def test_sweep_refuses_on_busy_loadavg_before_jvm(monkeypatch, capsys):
-    """The r11 quiet-host gate: a busy pre-JVM loadavg refuses the sweep
-    in milliseconds (no JVM start), returning None -> exit 2. The anchor
-    half of the gate needs Spark and stays a live-tool behavior; this
-    pins the half that can be checked purely."""
-    ps = _perf_sweep_module()
-    monkeypatch.setattr("os.getloadavg", lambda: (9.9, 9.9, 9.9))
-    assert ps.sweep(force=False) is None
-    assert "loadavg" in capsys.readouterr().out
-    assert ps.ANCHOR_GATE_SEC == 0.25 and ps.LOADAVG_GATE == 1.5
+def test_check_at_other_parallelism_exits_2_before_spark(tmp_path, monkeypatch, capsys):
+    artifact = tmp_path / "PERF_SF01.json"
+    artifact.write_text(json.dumps({"parallelism": ps.parallelism() + 1, "entries": {}}))
+    monkeypatch.setattr(ps, "ARTIFACT", artifact)
+
+    def no_spark(*a, **k):
+        raise AssertionError("a parallelism mismatch must refuse before Spark starts")
+
+    monkeypatch.setattr(ps, "get_spark", no_spark)
+    monkeypatch.setattr(sys, "argv", ["perf_sweep.py", "--check"])
+    assert ps.main() == 2
+    assert "parallelism" in capsys.readouterr().out
+

@@ -685,3 +685,133 @@ def test_triplet_mine_ann_tracks_exact(spark, sfd):
     assert sum(dneg) / len(dneg) <= 0.07
     assert sum(ex[a]["pos_id"] == an[a]["pos_id"] for a in ex) >= 18
     assert sum(ex[a]["neg_id"] == an[a]["neg_id"] for a in ex) >= 14
+
+
+def test_rescore_pairs_arms_identical(spark, sf_dir, monkeypatch):
+    """The broadcast-matrix arm and the join arm of _rescore_pairs must
+    return identical rows (same float64 ops on the same values)."""
+    from live_data_spark import catalog as catmod
+    from live_data_spark.catalog import load
+    from live_data_spark.operators.similarity import _rescore_pairs, as_double
+
+    e = load(spark, sf_dir, "embeddings").select(
+        "vec_id", as_double("embedding").alias("emb")
+    )
+    ids = [r["vec_id"] for r in e.select("vec_id").limit(40).collect()]
+    cand = spark.createDataFrame(
+        [(a, b) for i, a in enumerate(ids) for b in ids[i + 1 :: 7]],
+        "vec_id_1 long, vec_id_2 long",
+    )
+    open_arm = sorted(
+        tuple(r) for r in _rescore_pairs(spark, sf_dir, e, cand, 0.2).collect()
+    )
+    monkeypatch.setattr(catmod, "BROADCAST_GATE_BYTES", -1)
+    closed_arm = sorted(
+        tuple(r) for r in _rescore_pairs(spark, sf_dir, e, cand, 0.2).collect()
+    )
+    assert open_arm, "planted candidate set produced no scored pairs"
+    assert open_arm == closed_arm
+
+
+def test_rescore_build_runs_no_spark_job(spark, sf_dir):
+    """The gate-open arm must not run a Spark job at plan-BUILD time
+    (ADVICE r12: the eager collect sat in the exact hot path the build
+    contract forbids a job in — bench builds pay it 5x, plan sweeps
+    every entry). Building the plan under a fresh job group must leave
+    the group empty."""
+    from live_data_spark.catalog import load
+    from live_data_spark.operators.similarity import _rescore_pairs, as_double
+
+    e = load(spark, sf_dir, "embeddings").select(
+        "vec_id", as_double("embedding").alias("emb")
+    )
+    cand = spark.createDataFrame([(0, 1), (1, 2)], "vec_id_1 long, vec_id_2 long")
+    sc = spark.sparkContext
+    group = "r13-rescore-build-probe"
+    sc.setJobGroup(group, "build must be job-free")
+    try:
+        df = _rescore_pairs(spark, sf_dir, e, cand, 0.0)
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # ...and the plan still executes (the job happens at ACTION time)
+    assert df.count() >= 0
+
+
+def test_rescore_missing_ids_dropped_on_both_arms(spark, sf_dir, monkeypatch):
+    """A candidate id absent from the embeddings table must drop out of
+    BOTH arms (the closed arm inner-joins it away; the open arm's
+    validated searchsorted gather must match — an unvalidated gather
+    returns a neighboring row's vector, silently wrong)."""
+    from live_data_spark import catalog as catmod
+    from live_data_spark.catalog import load
+    from live_data_spark.operators.similarity import _rescore_pairs, as_double
+
+    e = load(spark, sf_dir, "embeddings").select(
+        "vec_id", as_double("embedding").alias("emb")
+    )
+    ids = [r["vec_id"] for r in e.select("vec_id").limit(6).collect()]
+    missing_lo, missing_hi = -7, 10**12  # below min and above max of the table
+    cand = spark.createDataFrame(
+        [(ids[0], ids[1]), (ids[2], missing_hi), (missing_lo, ids[3])],
+        "vec_id_1 long, vec_id_2 long",
+    )
+    open_arm = sorted(
+        tuple(r) for r in _rescore_pairs(spark, sf_dir, e, cand, -1.0).collect()
+    )
+    monkeypatch.setattr(catmod, "BROADCAST_GATE_BYTES", -1)
+    closed_arm = sorted(
+        tuple(r) for r in _rescore_pairs(spark, sf_dir, e, cand, -1.0).collect()
+    )
+    assert open_arm == closed_arm
+    scored_ids = {v for row in open_arm for v in (row[0], row[1])}
+    assert missing_lo not in scored_ids and missing_hi not in scored_ids
+    assert (ids[0], ids[1]) in {(r[0], r[1]) for r in open_arm}
+
+
+def _write_embeddings(tmp_path, rows):
+    """rows: [(vec_id, [floats...])] → <tmp>/embeddings.parquet"""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    tbl = pa.table(
+        {
+            "vec_id": pa.array([r[0] for r in rows], pa.int64()),
+            "embedding": pa.array(
+                [r[1] for r in rows], pa.list_(pa.float32())
+            ),
+            "label": pa.array([0] * len(rows), pa.int32()),
+        }
+    )
+    pq.write_table(tbl, str(tmp_path / "embeddings.parquet"))
+    return str(tmp_path)
+
+
+def test_rescore_nan_cosine_dropped_on_both_arms(spark, tmp_path, monkeypatch):
+    """ADVICE r12: a zero-norm embedding yields cosine NaN; numpy's
+    ``>=`` drops it while bare Spark ``>=`` keeps it (NaN sorts above
+    every double). Both arms must now drop the pair, so gate state can
+    never change the result."""
+    from live_data_spark import catalog as catmod
+    from live_data_spark.catalog import load
+    from live_data_spark.operators.similarity import _rescore_pairs, as_double
+
+    d = _write_embeddings(
+        tmp_path,
+        [(1, [1.0, 0.0]), (2, [0.0, 0.0]), (3, [0.5, 0.5])],  # vec 2: zero norm
+    )
+    e = load(spark, d, "embeddings").select(
+        "vec_id", as_double("embedding").alias("emb")
+    )
+    cand = spark.createDataFrame(
+        [(1, 2), (1, 3), (2, 3)], "vec_id_1 long, vec_id_2 long"
+    )
+    open_arm = sorted(
+        tuple(r) for r in _rescore_pairs(spark, d, e, cand, 0.1).collect()
+    )
+    monkeypatch.setattr(catmod, "BROADCAST_GATE_BYTES", -1)
+    closed_arm = sorted(
+        tuple(r) for r in _rescore_pairs(spark, d, e, cand, 0.1).collect()
+    )
+    assert open_arm == closed_arm
+    assert [(r[0], r[1]) for r in open_arm] == [(1, 3)]  # NaN pairs gone
