@@ -112,7 +112,7 @@ def _table_state(
     cache silently serves pre-rewrite numbers after a
     compaction/re-ingest at the same location, mis-sizing every
     data-dependent plan parameter (LSH plane counts, IVF k_lists,
-    broadcast gates) for the rest of the driver process. Stats are
+    driver-arm gates) for the rest of the driver process. Stats are
     O(files) with no file opens — the footer PARSE is what's worth
     caching — and the file list travels WITH the fingerprint so cached
     bodies never re-glob."""
@@ -152,20 +152,21 @@ def table_bytes(sf_dir: str, table: str) -> int:
     """On-disk parquet bytes for a table — a file-stat read, no Spark job.
 
     This is the same size estimate Spark's own planner uses for file
-    sources (``sizeInBytes`` = total file length), so gating a hint on it
-    agrees with what ``autoBroadcastJoinThreshold`` would see. Pure stat
-    work, recomputed every call (caching would only save the glob while
+    sources (``sizeInBytes`` = total file length). Pure stat work,
+    recomputed every call (caching would only save the glob while
     risking post-rewrite staleness)."""
     return _table_state(sf_dir, table)[1][1]
 
 
-# Gate for explicit broadcast hints on frames whose size scales with SF.
-# 32 MiB of compressed parquet ≈ low-hundreds of MB deserialized — safely
-# inside executor/driver budgets at production settings, and ~100× above
-# the largest dim at every checked SF (customer at sf0.1 is 312 KB), so
-# every pinned plan keeps its broadcast while a 1000× run degrades to
-# shuffle join + AQE + the runtime bloom-filter pruning path
-# (tests/test_plans.py pins that fallback produces identical results).
+# Budget for the gates that pick between two ALGORITHMS for one result:
+# the exchange-free pair plan (gated_pair_sides), the collected-edge
+# driver arms (edges_fit_gate), similarity's re-score matrix and
+# curation's counts hint. 32 MiB of compressed parquet ≈ low-hundreds of
+# MB deserialized — safely inside executor/driver budgets at production
+# settings. Join strategy is not gated here: Spark's
+# autoBroadcastJoinThreshold (64 MB, session.py) and AQE size joins
+# from the plan's own statistics, and plain F.broadcast is kept for
+# fixed-domain frames only (nation/region, grids, 1-row aggregates).
 BROADCAST_GATE_BYTES = 32 * 1024 * 1024
 
 # One size model for a collected 2-long edge row (src, dst), shared by
@@ -185,105 +186,6 @@ def edges_fit_gate(n_edges: int) -> bool:
     (tests/test_broadcast_gate_closed.py) can force it shut by patching
     the module constant, like every other size gate."""
     return n_edges * EDGE_BYTES <= BROADCAST_GATE_BYTES
-
-
-def key_domain_span(sf_dir: str, table: str, column: str) -> int:
-    """Upper bound on an integer key column's DISTINCT count from parquet
-    footer min/max statistics: distinct values ≤ max − min + 1. Still a
-    driver-side metadata read (per-row-group stats, no scan). Bounds a
-    per-DISTINCT-key frame far tighter than the base table's rowcount
-    when keys repeat (events has ~66 rows per user at every SF): the
-    rowcount bound scales with TRAFFIC while the frame scales with
-    POPULATION. Sound in both directions — for a sparse 64-bit id space
-    the span is huge, the gate shuts, and the plan falls back to the
-    shuffle path; never an OOM. Falls back to the rowcount bound when
-    any row group lacks min/max stats. Cached per on-disk state, like
-    ``table_rowcount``."""
-    files, fp = _table_state(sf_dir, table)
-    return _key_span_at(files, column, fp)
-
-
-@_functools.lru_cache(maxsize=128)
-def _key_span_at(
-    files: tuple[str, ...], column: str, fingerprint: tuple[int, int, int]
-) -> int:
-    import pyarrow.parquet as pq
-
-    lo: int | None = None
-    hi: int | None = None
-    for fpath in files:
-        md = pq.ParquetFile(fpath).metadata
-        idx = md.schema.names.index(column)
-        for g in range(md.num_row_groups):
-            st = md.row_group(g).column(idx).statistics
-            if st is None or not st.has_min_max:
-                # rowcount fallback reuses the SAME file list — no re-glob
-                return _rowcount_at(files, fingerprint)
-            lo = st.min if lo is None else min(lo, st.min)
-            hi = st.max if hi is None else max(hi, st.max)
-    if lo is None or hi is None:  # zero row groups: empty table
-        return 0
-    return int(hi) - int(lo) + 1
-
-
-def broadcast_dim(
-    df: DataFrame,
-    sf_dir: str,
-    table: str,
-    max_bytes: int | None = None,
-    row_bytes: int | None = None,
-    key: str | None = None,
-) -> DataFrame:
-    """Size-gated broadcast hint for an SF-SCALING frame.
-
-    TPC-H dims are not fixed-size: part/supplier/customer grow linearly
-    with SF, so an unconditional ``F.broadcast`` that is right at sf0.1
-    is a driver OOM at sf100k (~20B part rows). ``table`` names the base
-    table that BOUNDS the frame; the hint is applied only while that
-    bound is under ``max_bytes``. Above it, the plain frame is returned
-    and the plan falls back to Catalyst's own strategy — sort-merge with
-    AQE and runtime bloom-filter scan pruning, which the plan tests pin
-    as result-identical. Frames bounded by a FIXED domain (nation/
-    region, calendar grids, k centroids, 1-row aggregates) keep their
-    plain ``F.broadcast`` — they never scale with SF.
-
-    The bound has two forms:
-
-    - ``row_bytes=None`` (default): the frame is the table itself or a
-      projection keeping its wide columns, so its bytes are ≤ the
-      table's on-disk bytes — gate on ``table_bytes``.
-    - ``row_bytes=K``: the frame is a NARROW per-key derivation (≤1 row
-      per base row, ~K bytes each — e.g. a (bigint, bigint) aggregate of
-      per-doc shingle counts). Gating such a frame on the base table's
-      raw bytes closes the gate orders of magnitude early when the base
-      rows are wide (documents carries full text): gate on
-      ``table_rowcount × K`` instead, which tracks the frame's real
-      broadcast cost while still being a driver-side footer read.
-    - ``row_bytes=K, key="col"``: the frame has ≤1 row per DISTINCT
-      value of an integer key that REPEATS in the base table (a per-user
-      aggregate of events). The rowcount bound scales with traffic while
-      the frame scales with population — gate on
-      ``min(rowcount, key_domain_span) × K`` instead, still pure footer
-      metadata (min/max column statistics).
-    """
-    from pyspark.sql import functions as F
-
-    # resolved at CALL time (not def time) so the gate-closed sweep in
-    # tests/test_broadcast_gate_closed.py can force every gate shut by
-    # patching the module constant — the plan shape a 100× corpus yields
-    gate = BROADCAST_GATE_BYTES if max_bytes is None else max_bytes
-    if key is not None:
-        if row_bytes is None:
-            raise ValueError("key= requires row_bytes=")
-        rows = min(
-            table_rowcount(sf_dir, table), key_domain_span(sf_dir, table, key)
-        )
-        bound = rows * row_bytes
-    elif row_bytes is not None:
-        bound = table_rowcount(sf_dir, table) * row_bytes
-    else:
-        bound = table_bytes(sf_dir, table)
-    return F.broadcast(df) if bound <= gate else df
 
 
 def gated_pair_sides(

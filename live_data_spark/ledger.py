@@ -372,6 +372,32 @@ CHANGED_SINCE_CHECK: tuple[str, ...] = (
     "dedup_boilerplate_spans",
     "text_ngram_novelty",
     "contamination_ngram_overlap",
+    #   (broadcast policy) join hints on SF-scaling frames removed — Spark's
+    #   64 MB threshold picks the join; dedup_survivors, events_new_vs_
+    #   returning and part_price_index_laspeyres were also reshaped
+    #   (result-identical, oracle parity green at sf0.001 and sf0.01):
+    "basket_part_pairs",
+    "corpus_dedup_cascade",
+    "customer_repeat_profile",
+    "discount_quantity_elasticity",
+    "events_new_vs_returning",
+    "fct_order_lineitems",
+    "nation_trade_balance",
+    "orders_cohort_revenue",
+    "part_price_index_laspeyres",
+    "part_price_size_skyline",
+    "q14_promo_effect",
+    "q15_top_supplier",
+    "q16_supplier_variety",
+    "q17_small_quantity",
+    "q18_large_orders",
+    "q19_brand_promo_revenue",
+    "q20_outsized_suppliers",
+    "q9_product_profit",
+    "revenue_share_of_parent",
+    "supplier_fulfillment_speed",
+    "supplier_revenue_hhi",
+    "text_sparse_cosine_topk",
 )
 
 # Within the already-checked class, re-verify these ahead of their round

@@ -1647,7 +1647,7 @@ def dsir_log_weights(d: DataFrame) -> DataFrame:
     b = F.lit(_DSIR_BUCKETS)
     a_inv = F.lit(_DSIR_ALPHA_INV)
     # fixed-domain (≤4096-row) frames: plain broadcast is correct here —
-    # the bound never scales with SF (see catalog.broadcast_dim's rules)
+    # the bound never scales with SF
     # cast EACH factor to double before multiplying: the BIGINT product
     # (ct·100+1)·(nq·100+B) overflows int64 once the corpus passes ~10^9
     # grams; per-factor casts round identically on both engines at any

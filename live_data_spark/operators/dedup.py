@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from live_data_spark.catalog import broadcast_dim, load, register
+from live_data_spark.catalog import load, register
 from live_data_spark.operators.text import fingerprint, normalized_text
 from live_data_spark.session import local_frame
 
@@ -252,7 +252,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ex = shingle_rows(spark, sf_dir)
     sizes = ex.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    exn = ex.join(broadcast_dim(sizes, sf_dir, "documents", row_bytes=32), "doc_id")  # n rides the exploded rows
+    exn = ex.join(sizes, "doc_id")  # n rides the exploded rows
     a, b = exn.alias("a"), exn.alias("b")
     common = (
         a.join(
@@ -699,26 +699,21 @@ def dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One row per duplicate cluster: the kept document + member count.
 
     The last stage of the dedup pipeline (pairs → clusters → corpus):
-    policy is keep-min-id — ``dedup_clusters`` labels every member with
-    the cluster's min doc_id, so the survivor is the row whose id equals
-    its label (no extra ranking pass). Joined back to ``documents`` for
-    survivor metadata; the members count is a tiny agg over the cluster
-    map, broadcast back. Downstream, the deduplicated corpus is
-    ``documents ⋉ survivors`` (left-semi on survivor_id).
+    policy is keep-min-id — ``dedup_clusters`` labels every document
+    (singletons included) with its cluster's min doc_id, so each
+    cluster's survivor IS its label: one count per ``cluster_id``, with
+    no filter and no join back to the cluster map. Joined to
+    ``documents`` for survivor metadata. Downstream, the deduplicated
+    corpus is ``documents ⋉ survivors`` (left-semi on survivor_id).
     """
     clusters = dedup_clusters(spark, sf_dir)
     sizes = clusters.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("n_members"))
     docs = load(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    return (
-        clusters.where(F.col("doc_id") == F.col("cluster_id"))
-        .join(broadcast_dim(sizes, sf_dir, "documents", row_bytes=32), "cluster_id")
-        .join(docs, "doc_id")
-        .select(
-            "cluster_id",
-            F.col("doc_id").alias("survivor_id"),
-            "n_members",
-            F.col("n_chars").alias("survivor_chars"),
-        )
+    return sizes.join(docs, sizes.cluster_id == docs.doc_id).select(
+        "cluster_id",
+        F.col("doc_id").alias("survivor_id"),
+        "n_members",
+        F.col("n_chars").alias("survivor_chars"),
     )
 
 
@@ -870,7 +865,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ex = shingle_rows(spark, sf_dir)
     sizes = ex.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    exn = ex.join(broadcast_dim(sizes, sf_dir, "documents", row_bytes=32), "doc_id")
+    exn = ex.join(sizes, "doc_id")
     a, b = exn.alias("a"), exn.alias("b")
     pairs = (
         a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.doc_id") < F.col("b.doc_id")))
@@ -1509,7 +1504,7 @@ def dedup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ex = shingle_rows(spark, sf_dir)
     sizes = ex.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    exn = ex.join(broadcast_dim(sizes, sf_dir, "documents", row_bytes=32), "doc_id")
+    exn = ex.join(sizes, "doc_id")
     a, b = exn.alias("a"), exn.alias("b")
     floor_t = CURVE_THRESHOLDS[0]
     common = (

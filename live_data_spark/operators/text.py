@@ -16,12 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from live_data_spark.catalog import (
-    broadcast_dim,
-    gated_pair_sides,
-    load,
-    register,
-)
+from live_data_spark.catalog import gated_pair_sides, load, register
 from live_data_spark.session import local_frame
 
 # ---------------------------------------------------------------------------
@@ -2329,8 +2324,8 @@ def text_sparse_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     n2 = nrm.select(F.col("doc_id").alias("doc_id_2"), F.col("qn").alias("qn2"))
     cos = F.col("qdot") / (F.sqrt("qn1") * F.sqrt("qn2"))
     return (
-        dots.join(broadcast_dim(n1, sf_dir, "documents", row_bytes=32), "doc_id_1")
-        .join(broadcast_dim(n2, sf_dir, "documents", row_bytes=32), "doc_id_2")
+        dots.join(n1, "doc_id_1")
+        .join(n2, "doc_id_2")
         .select(
             "doc_id_1",
             "doc_id_2",

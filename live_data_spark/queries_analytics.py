@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from live_data_spark.catalog import broadcast_dim, load, register
+from live_data_spark.catalog import load, register
 from live_data_spark.functions.dialect import dec2, money_sum
 
 _TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss.SSSSSS"
@@ -187,7 +187,7 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders")
     c = load(spark, sf_dir, "customer")
     return (
-        o.join(broadcast_dim(big, sf_dir, "orders", row_bytes=32), o.o_orderkey == big.l_orderkey)
+        o.join(big, o.o_orderkey == big.l_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
         .select(
             F.col("c_custkey").alias("customer_id"),
@@ -674,8 +674,8 @@ def q16_supplier_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("s_suppkey")
     )
     return (
-        li.join(broadcast_dim(bad, sf_dir, "supplier", row_bytes=16), li.l_suppkey == bad.s_suppkey, "left_anti")
-        .join(broadcast_dim(p, sf_dir, "part"), li.l_partkey == p.p_partkey)
+        li.join(bad, li.l_suppkey == bad.s_suppkey, "left_anti")
+        .join(p, li.l_partkey == p.p_partkey)
         .groupBy(F.col("p_brand").alias("brand"), F.col("p_type").alias("part_type"))
         .agg(F.count_distinct("l_suppkey").alias("n_suppliers"))
     )
@@ -961,7 +961,7 @@ def q19_brand_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rev = dec2("l_extendedprice") * (1 - dec2("l_discount"))
     return (
-        li.join(broadcast_dim(p, sf_dir, "part"), li.l_partkey == p.p_partkey)
+        li.join(p, li.l_partkey == p.p_partkey)
         .where(cond)
         .agg(
             F.sum(rev).cast("double").alias("revenue"),
@@ -1064,7 +1064,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         rev.crossJoin(F.broadcast(mx))
         .where(F.col("rev") == F.col("mx"))
-        .join(broadcast_dim(s, sf_dir, "supplier"), F.col("l_suppkey") == s.s_suppkey)
+        .join(s, F.col("l_suppkey") == s.s_suppkey)
         .select(
             F.col("s_suppkey").alias("supplier_id"),
             F.col("s_name").alias("supplier_name"),
@@ -1445,8 +1445,8 @@ def basket_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     c1 = part_count.select(F.col("l_partkey").alias("part_1"), F.col("c").alias("c1"))
     c2 = part_count.select(F.col("l_partkey").alias("part_2"), F.col("c").alias("c2"))
     return (
-        pairs.join(broadcast_dim(c1, sf_dir, "part", row_bytes=32), "part_1")
-        .join(broadcast_dim(c2, sf_dir, "part", row_bytes=32), "part_2")
+        pairs.join(c1, "part_1")
+        .join(c2, "part_2")
         .crossJoin(F.broadcast(n_orders))
         .select(
             "part_1",
@@ -1910,7 +1910,7 @@ def supplier_revenue_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = load(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     n = load(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     rev = (
-        li.join(broadcast_dim(s, sf_dir, "supplier"), li.l_suppkey == s.s_suppkey)
+        li.join(s, li.l_suppkey == s.s_suppkey)
         .groupBy(F.col("s_nationkey").alias("nation_key"), F.col("l_suppkey").alias("supp"))
         .agg(F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).alias("r"))
     )
@@ -1979,7 +1979,7 @@ def revenue_share_of_parent(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = load(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
     r = load(spark, sf_dir, "region").select("r_regionkey", "r_name")
     nat = (
-        o.join(broadcast_dim(c, sf_dir, "customer"), o.o_custkey == c.c_custkey)
+        o.join(c, o.o_custkey == c.c_custkey)
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
         .groupBy(F.col("r_name").alias("region"), F.col("n_name").alias("nation"))
@@ -2045,7 +2045,7 @@ def orders_cohort_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     first = o.groupBy("o_custkey").agg(
         F.date_trunc("month", F.min("o_orderdate")).alias("cohort")
     )
-    placed = o.join(broadcast_dim(first, sf_dir, "customer", row_bytes=32), "o_custkey").select(
+    placed = o.join(first, "o_custkey").select(
         "cohort",
         (
             (F.year(F.date_trunc("month", "o_orderdate")) - F.year("cohort")) * 12
@@ -2100,7 +2100,7 @@ def customer_repeat_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     n = load(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     per_cust = (
-        o.join(broadcast_dim(c, sf_dir, "customer"), o.o_custkey == c.c_custkey)
+        o.join(c, o.o_custkey == c.c_custkey)
         .groupBy("c_nationkey", "o_custkey")
         .agg(F.count(F.lit(1)).alias("n_orders"))
     )
@@ -2386,7 +2386,7 @@ def part_price_size_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
             Window.orderBy("price").rowsBetween(Window.unboundedPreceding, -1)
         ),
     )
-    joined = p.join(broadcast_dim(cm, sf_dir, "part", row_bytes=32), p["p_retailprice"] == cm["price"])
+    joined = p.join(cm, p["p_retailprice"] == cm["price"])
     dominated = (
         F.coalesce(F.col("prev_cummax") >= F.col("p_size"), F.lit(False))
         | (F.col("gmax") > F.col("p_size"))
@@ -3075,7 +3075,8 @@ def part_price_index_laspeyres(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers before the cross-part sums (identical rationals → identical
     doubles → identical integers), so each month's index is a ratio of
     exact integer sums. One (part, month) aggregate off the scan; the
-    base-month frame broadcasts; output is |months| rows.
+    base-month frame is small enough for Spark's broadcast threshold;
+    output is |months| rows.
     """
     li = load(spark, sf_dir, "lineitem")
     pm = li.groupBy(
@@ -3088,16 +3089,16 @@ def part_price_index_laspeyres(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("cents"),
         F.sum(F.col("l_quantity").cast("bigint")).cast("bigint").alias("qty"),
     )
-    base_idx = pm.agg(F.min("idx").alias("i0"))
-    b = (
-        pm.crossJoin(F.broadcast(base_idx))
-        .where(F.col("idx") == F.col("i0"))
-        .select(
-            "l_partkey", F.col("cents").alias("c0"), F.col("qty").alias("q0")
-        )
+    # the base month as a scalar subquery, not a cross join with a 1-row
+    # frame: Catalyst sizes a cross join as the PRODUCT of its sides
+    # (32 MB at sf0.1, past the 64 MB broadcast threshold near 2×), while
+    # a filter keeps pm's own estimate (3 MB at sf0.1, 24 MB at 10×)
+    base_idx = pm.agg(F.min("idx")).scalar()
+    b = pm.where(F.col("idx") == base_idx).select(
+        "l_partkey", F.col("cents").alias("c0"), F.col("qty").alias("q0")
     )
     terms = (
-        pm.join(broadcast_dim(b, sf_dir, "part", row_bytes=32), "l_partkey")
+        pm.join(b, "l_partkey")
         .where((F.col("qty") > 0) & (F.col("q0") > 0))
         .select(
             "idx",

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from live_data_spark.catalog import broadcast_dim, load, register
+from live_data_spark.catalog import load, register
 from live_data_spark.functions.dialect import (
     dec2,
     decode,
@@ -256,17 +256,20 @@ def fct_order_lineitems(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference: fct_order_products.sql:1-33 (order_products ⟕ products on
     product_id, ⟕ orders on order_id, then an 8-column fact projection).
 
-    Scale plan: ``part`` is the small static dim (97 rows in the reference)
-    → explicit broadcast, no shuffle for J1. The orders join shuffles on
-    l_orderkey/o_orderkey; at 100 TB both sides would be bucketed on the
-    order key to make it shuffle-free, and AQE handles skew. Projection is
+    Scale plan: no join hint — Spark's 64 MB ``autoBroadcastJoinThreshold``
+    broadcasts ``part`` (the small static dim, 97 rows in the reference)
+    and, through sf0.1, ``orders`` too, so the fact is map-only (0 shuffle
+    bytes, pinned in tests/test_perf_artifact.py). Past the threshold the
+    orders join shuffles on l_orderkey/o_orderkey; at 100 TB both sides
+    would be bucketed on the order key to make it shuffle-free, and AQE
+    handles skew. Projection is
     declared before the join output is materialized so Catalyst prunes all
     unused columns at the scans.
     """
     li = load(spark, sf_dir, "lineitem")
     p = load(spark, sf_dir, "part")
     o = load(spark, sf_dir, "orders")
-    joined = li.join(broadcast_dim(p, sf_dir, "part"), li.l_partkey == p.p_partkey, "left").join(
+    joined = li.join(p, li.l_partkey == p.p_partkey, "left").join(
         o, li.l_orderkey == o.o_orderkey, "left"
     )
     return joined.select(

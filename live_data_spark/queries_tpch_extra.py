@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from live_data_spark.catalog import broadcast_dim, load, register
+from live_data_spark.catalog import load, register
 from live_data_spark.functions.dialect import dec2
 
 # ---------------------------------------------------------------------------
@@ -119,7 +119,7 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost = (F.col("p_retailprice") * F.col("l_quantity") * F.lit(0.5)).cast("decimal(18,2)")
     profit = dec2("l_extendedprice") * (1 - dec2("l_discount")) - cost
     return (
-        li.join(broadcast_dim(p, sf_dir, "part"), li.l_partkey == p.p_partkey)
+        li.join(p, li.l_partkey == p.p_partkey)
         .join(s, li.l_suppkey == s.s_suppkey)
         .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
         .groupBy(F.col("n_name").alias("nation_name"), F.year("l_shipdate").alias("o_year"))
@@ -267,7 +267,7 @@ def q14_promo_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero = F.lit(0).cast("decimal(18,2)")
     promo = F.when(F.col("p_type") == "PROMO", rev).otherwise(zero)
     return (
-        li.join(broadcast_dim(p, sf_dir, "part"), li.l_partkey == p.p_partkey)
+        li.join(p, li.l_partkey == p.p_partkey)
         .agg(
             F.round(
                 100.0 * F.sum(promo).cast("double") / F.sum(rev).cast("double"), 4
@@ -313,7 +313,7 @@ def q17_small_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.sum(dec2("l_quantity")).cast("double") / F.count(F.lit(1))).alias("avg_qty")
     )
     return (
-        li.join(broadcast_dim(p, sf_dir, "part"), li.l_partkey == p.p_partkey)
+        li.join(p, li.l_partkey == p.p_partkey)
         .join(pa, li.l_partkey == F.col("pa_key"))
         .where(F.col("l_quantity") < 0.2 * F.col("avg_qty"))
         .agg(
@@ -363,7 +363,7 @@ def q20_outsized_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
     s = load(spark, sf_dir, "supplier")
     shipped = (
-        li.join(broadcast_dim(p.select("p_partkey"), sf_dir, "part", row_bytes=16), li.l_partkey == F.col("p_partkey"))
+        li.join(p.select("p_partkey"), li.l_partkey == F.col("p_partkey"))
         .groupBy("l_partkey", "l_suppkey")
         .agg(F.sum(dec2("l_quantity")).alias("qty_dec"))
     )
@@ -547,7 +547,7 @@ def supplier_fulfillment_speed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     s = load(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     return (
-        per_supp.join(broadcast_dim(s, sf_dir, "supplier"), per_supp.supp_key == s.s_suppkey)
+        per_supp.join(s, per_supp.supp_key == s.s_suppkey)
         .select(
             F.col("s_name").alias("supplier"),
             "n_lines",
@@ -609,12 +609,12 @@ def nation_trade_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     n = load(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     supply = (
-        li.join(broadcast_dim(s, sf_dir, "supplier"), li.l_suppkey == s.s_suppkey)
+        li.join(s, li.l_suppkey == s.s_suppkey)
         .groupBy(F.col("s_nationkey").alias("nk"))
         .agg(F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).alias("supply_rev"))
     )
     demand = (
-        o.join(broadcast_dim(c, sf_dir, "customer"), o.o_custkey == c.c_custkey)
+        o.join(c, o.o_custkey == c.c_custkey)
         .groupBy(F.col("c_nationkey").alias("nk"))
         .agg(F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("demand_spend"))
     )
@@ -809,7 +809,7 @@ def discount_quantity_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     li = load(spark, sf_dir, "lineitem").select("l_partkey", "l_discount", "l_quantity")
     p = load(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    j = li.join(broadcast_dim(p, sf_dir, "part"), li.l_partkey == p.p_partkey).select(
+    j = li.join(p, li.l_partkey == p.p_partkey).select(
         F.col("p_brand").alias("brand"),
         F.round(F.col("l_discount") * 100).cast("bigint").alias("x"),
         F.round("l_quantity").cast("bigint").alias("y"),

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from live_data_spark.catalog import broadcast_dim, load, register
+from live_data_spark.catalog import load, register
 from live_data_spark.functions.dialect import money_sum
 from live_data_spark.session import local_frame
 
@@ -2519,30 +2519,32 @@ def events_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
     from people seen for the FIRST time that day vs returners — what
     separates an acquisition spike from an engagement change when the
     DAU line moves. A user's first-seen date is a per-user min (map-side
-    combined, user-count sized) broadcast back onto events; the day
-    rollup is calendar-sized. All classification is exact date equality.
-    The broadcast gate bounds the frame by the user_id DOMAIN (footer
-    min/max span × 16 B), not the events rowcount — the frame scales
-    with population, not traffic, and the rowcount bound would shut the
-    gate ~|events|/|users| (≈66×) too early.
+    combined, user-count sized) joined back onto events; the day rollup
+    is calendar-sized. All classification is exact date equality.
+
+    Two plain aggregates instead of two ``COUNT(DISTINCT ...)``: events
+    first collapse to one row per (day, user) with its event count, and
+    ``is_new`` is constant within that row — a user is new on exactly
+    one day — so the day rollup sums rows instead of counting distinct
+    users. No ``Expand``, so the plan has one form build to build.
     """
     e = load(spark, sf_dir, "events")
     first = e.groupBy("user_id").agg(F.min(F.to_date("ts")).alias("d0"))
-    tagged = e.join(
-        broadcast_dim(first, sf_dir, "events", row_bytes=16, key="user_id"),
-        "user_id",
-    ).select(
-        F.to_date("ts").alias("day"),
-        (F.to_date("ts") == F.col("d0")).cast("int").alias("is_new"),
-        "user_id",
+    user_days = (
+        e.join(first, "user_id")
+        .groupBy(
+            F.to_date("ts").alias("day"),
+            "user_id",
+            (F.to_date("ts") == F.col("d0")).cast("int").alias("is_new"),
+        )
+        .agg(F.count(F.lit(1)).alias("n"))
     )
-    return tagged.groupBy(F.date_format("day", "yyyy-MM-dd").alias("day")).agg(
-        F.countDistinct(F.when(F.col("is_new") == 1, F.col("user_id"))).alias("new_users"),
-        F.countDistinct(F.when(F.col("is_new") == 0, F.col("user_id"))).alias(
-            "returning_users"
-        ),
-        F.sum("is_new").alias("new_user_events"),
-        (F.count(F.lit(1)) - F.sum("is_new")).alias("returning_events"),
+    returning = 1 - F.col("is_new")
+    return user_days.groupBy(F.date_format("day", "yyyy-MM-dd").alias("day")).agg(
+        F.sum("is_new").alias("new_users"),
+        F.sum(returning).alias("returning_users"),
+        F.sum(F.col("n") * F.col("is_new")).alias("new_user_events"),
+        F.sum(F.col("n") * returning).alias("returning_events"),
     )
 
 

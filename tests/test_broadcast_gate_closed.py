@@ -1,18 +1,20 @@
 """Catalog-wide broadcast-gate-closed sweep — run the 100× PLAN SHAPE.
 
-Every size-gated broadcast in the repo (catalog.broadcast_dim,
-catalog.gated_pair_sides) exists to DEGRADE at scale: above the 32 MiB
-parquet-footer gate the hint disappears and the plan falls back to
-shuffle joins + AQE + runtime bloom pruning. The plan tests pin a few
-named fallbacks; this sweep executes the degradation CATALOG-WIDE by
+Join strategy is Spark's own choice: ``autoBroadcastJoinThreshold``
+(64 MB, static and AQE) broadcasts a join side whose estimated size is
+under it. The repo's own size gates (catalog.gated_pair_sides,
+catalog.edges_fit_gate and the reads of catalog.BROADCAST_GATE_BYTES in
+similarity and curation) pick between two ALGORITHMS for one result,
+and the gate-open arm is the one small inputs take. This sweep runs the
+arms a corpus 1000× past every gate would take, CATALOG-WIDE, by
 running every entry twice at sf0.001:
 
   1. default config (gates open at this SF, auto-broadcast on) — the
      plans the oracle parity suite verified;
   2. every gate forced SHUT (catalog.BROADCAST_GATE_BYTES patched to
      −1) AND Spark's own auto-broadcast disabled (static + AQE
-     autoBroadcastJoinThreshold = −1) — the join strategies the SAME
-     code would choose on a corpus 1000× past every gate,
+     autoBroadcastJoinThreshold = −1) — the join strategies and arms
+     the SAME code would choose at that scale,
 
 and asserts the canonicalized results are identical. This is the
 claim "the 100× plan degrades to SMJ without changing answers" as
@@ -52,19 +54,19 @@ _THRESH_CONFS = (
 
 
 def test_gate_patch_actually_closes_the_gate(spark, monkeypatch):
-    """Vacuity guard for the sweep itself: the helpers must read the gate
+    """Vacuity guard for the sweep itself: the gates must read the
     constant at CALL time, so patching the module global genuinely
-    removes the hint. If a refactor re-bakes the constant into a
-    def-time default, the sweep would silently compare two identical
-    runs — this test fails instead."""
+    flips them to their closed arms. If a refactor re-bakes the constant
+    into a def-time default, the sweep would silently compare two
+    identical runs — this test fails instead."""
     df = cat.load(spark, SF_SMOKE, "nation")
-    open_plan = cat.broadcast_dim(df, SF_SMOKE, "nation")
-    assert "ResolvedHint" in open_plan._jdf.queryExecution().analyzed().toString()
+    _, b = cat.gated_pair_sides(df, SF_SMOKE, "nation", 1, part_key="n_nationkey")
+    assert "ResolvedHint" in b._jdf.queryExecution().analyzed().toString()
+    assert cat.edges_fit_gate(1)
     monkeypatch.setattr(cat, "BROADCAST_GATE_BYTES", -1)
-    closed_plan = cat.broadcast_dim(df, SF_SMOKE, "nation")
-    assert "ResolvedHint" not in closed_plan._jdf.queryExecution().analyzed().toString()
-    a, b = cat.gated_pair_sides(df, SF_SMOKE, "nation", 1)
+    _, b = cat.gated_pair_sides(df, SF_SMOKE, "nation", 1, part_key="n_nationkey")
     assert "ResolvedHint" not in b._jdf.queryExecution().analyzed().toString()
+    assert not cat.edges_fit_gate(1)
 
 
 @pytest.mark.parametrize("name", sorted(catalog()))

@@ -10,7 +10,8 @@ module pins what can be checked cheaply:
   additions may precede the next rewrite; forgetting it entirely fails);
 - ``flag_entries`` as a pure function;
 - the measurement itself at sf0.001: a repeat reads identical exact
-  counters, and a planted extra exchange is flagged;
+  counters, a planted extra exchange is flagged, and a map-only entry
+  reads zero shuffle bytes;
 - a core-count mismatch refuses before any Spark session starts.
 """
 
@@ -19,6 +20,8 @@ from __future__ import annotations
 import dataclasses
 import json
 import sys
+
+import pytest
 
 from scripts import perf_sweep as ps
 
@@ -88,13 +91,21 @@ def test_flag_entries_exact_counters_and_loose_cpu(monkeypatch):
     assert ps.flag_entries(base, base) == {}
 
 
-def test_measure_repeats_exactly_and_flags_a_planted_exchange(spark, sf_dir):
-    from live_data_spark.catalog import catalog
+@pytest.fixture(scope="module")
+def tracer(spark):
+    """One tracer for the module: a tracer names its job groups by pid
+    and span index, so a second tracer in the same process would read
+    the first one's jobs under its own span 0."""
     from perfbench.trace import Tracer
+
+    return Tracer(spark)
+
+
+def test_measure_repeats_exactly_and_flags_a_planted_exchange(spark, sf_dir, tracer):
+    from live_data_spark.catalog import catalog
 
     name = "q1_pricing_summary"
     spec = catalog()[name]
-    tracer = Tracer(spark)
     first = ps.measure(tracer, spark, name, spec, sf_dir)
     again = ps.measure(tracer, spark, name, spec, sf_dir)
     assert first["stages"] >= 2 and first["shuffle_bytes"] > 0, first
@@ -105,6 +116,19 @@ def test_measure_repeats_exactly_and_flags_a_planted_exchange(spark, sf_dir):
     flagged = ps.flag_entries({"entries": {name: first}}, {"entries": {name: moved}})
     assert list(flagged) == [name]
     assert any(m.startswith("stages ") for m in flagged[name]), flagged
+
+
+def test_map_only_fact_reads_zero_shuffle_bytes(spark, sf_dir, tracer):
+    """fct_order_lineitems carries no broadcast hint: Spark's own size
+    threshold broadcasts both of its dims, so the fact is map-only."""
+    from live_data_spark.catalog import catalog
+
+    name = "fct_order_lineitems"
+    spec = catalog()[name]
+    rec = ps.measure(tracer, spark, name, spec, sf_dir)
+    assert rec["shuffle_bytes"] == 0, rec
+    df = spec.spark(spark, sf_dir)
+    assert "BroadcastHashJoin" in df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_check_at_other_parallelism_exits_2_before_spark(tmp_path, monkeypatch, capsys):

@@ -54,7 +54,7 @@ def test_dim_exclusion_prunes_scan(spark, sf_dir):
 def test_fact_broadcasts_part_dim(spark, sf_dir):
     plan = _plan(catalog()["fct_order_lineitems"].spark(spark, sf_dir))
     assert "BroadcastHashJoin" in plan
-    # the broadcast side is part (the explicit F.broadcast hint)
+    # the broadcast side is part, chosen by Spark's own size threshold
     assert "BroadcastExchange" in plan
 
 
@@ -286,138 +286,23 @@ def test_dynamic_partition_pruning_on_date_keyed_join(spark, tmp_path):
     assert "dynamicpruning" in plan.lower(), plan[:2000]
 
 
-def test_broadcast_dim_gate(spark, sf_dir):
-    """broadcast_dim is the size-gated hint for SF-SCALING dims (part/
-    supplier/customer grow with SF — an unconditional hint is a driver
-    OOM at sf100k). Pin both gate arms: under the 32 MiB gate the plan
-    broadcasts (identical to the old hard hint at every checked SF);
-    above it the hint is withheld, the join falls back to Catalyst's own
-    strategy, and the RESULT is identical."""
-    from live_data_spark.catalog import broadcast_dim, table_bytes
-
-    li = load(spark, sf_dir, "lineitem").select("l_partkey", "l_quantity")
-    p = load(spark, sf_dir, "part").select("p_partkey", "p_name")
-
-    assert 0 < table_bytes(sf_dir, "part") < 32 * 1024 * 1024
-
-    hinted = li.join(broadcast_dim(p, sf_dir, "part"), li.l_partkey == p.p_partkey)
-    assert "BroadcastHashJoin" in _plan(hinted)
-
-    # force the gate shut: the frame comes back unhinted and (with the
-    # auto-broadcast estimator also off, as at real scale) plans a
-    # shuffle join — while producing the same rows
-    gated = broadcast_dim(p, sf_dir, "part", max_bytes=1)
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        fallback = li.join(gated, li.l_partkey == p.p_partkey)
-        plan = _plan(fallback)
-        assert "BroadcastHashJoin" not in plan
-        assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    assert sorted(map(tuple, fallback.collect())) == sorted(map(tuple, hinted.collect()))
-
-
 def test_table_metadata_tracks_rewrites(spark, tmp_path):
     """The footer caches must key on the table's on-disk STATE, not its
     path: a long-lived driver that re-ingests/compacts a table at the
     same location must size every data-dependent plan parameter (IVF
-    k_lists, LSH planes, broadcast gates) from the CURRENT corpus. A
+    k_lists, LSH planes, driver-arm gates) from the CURRENT corpus. A
     path-only lru_cache served the pre-rewrite rowcount forever."""
-    from live_data_spark.catalog import key_domain_span, table_bytes, table_rowcount
+    from live_data_spark.catalog import table_bytes, table_rowcount
 
     t = tmp_path / "embeddings.parquet"
     spark.range(10).selectExpr("id AS vec_id").write.parquet(str(t))
     sf = str(tmp_path)
     assert table_rowcount(sf, "embeddings") == 10
     b0 = table_bytes(sf, "embeddings")
-    assert key_domain_span(sf, "embeddings", "vec_id") == 10
 
     spark.range(500).selectExpr("id AS vec_id").write.mode("overwrite").parquet(str(t))
     assert table_rowcount(sf, "embeddings") == 500, "stale footer cache after rewrite"
     assert table_bytes(sf, "embeddings") != b0
-    assert key_domain_span(sf, "embeddings", "vec_id") == 500
-
-
-def test_broadcast_dim_row_bytes_bound(spark, sf_dir):
-    """The row_bytes arm gates a NARROW per-key derivation on
-    rowcount × width instead of the base table's raw bytes: a (doc_id,
-    count) frame bounded by the wide documents table must stay
-    broadcastable long after documents' full-text bytes blow the gate.
-    Pin both directions: the rowcount bound admits the hint where the
-    raw-bytes bound would (wrongly) shut it, and a 1-byte gate still
-    shuts the row_bytes arm."""
-    from live_data_spark.catalog import broadcast_dim, table_bytes, table_rowcount
-
-    d = load(spark, sf_dir, "documents")
-    sizes = d.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-
-    # pick a gate between the two bounds: rowcount×32 passes, raw bytes fail
-    gate = table_bytes(sf_dir, "documents") - 1
-    assert table_rowcount(sf_dir, "documents") * 32 < gate
-
-    shut_on_bytes = broadcast_dim(sizes, sf_dir, "documents", max_bytes=gate)
-    open_on_rows = broadcast_dim(
-        sizes, sf_dir, "documents", max_bytes=gate, row_bytes=32
-    )
-    j_shut = d.join(shut_on_bytes, "doc_id")
-    j_open = d.join(open_on_rows, "doc_id")
-    still_shut = broadcast_dim(sizes, sf_dir, "documents", max_bytes=1, row_bytes=32)
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        assert "BroadcastHashJoin" not in _plan(j_shut)
-        assert "BroadcastHashJoin" in _plan(j_open)
-        assert "BroadcastHashJoin" not in _plan(d.join(still_shut, "doc_id"))
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-
-
-def test_broadcast_dim_key_domain_bound(spark, sf_dir):
-    """The key= arm gates a per-DISTINCT-key frame on the key column's
-    footer min/max span instead of the base table's rowcount: a per-user
-    aggregate of events scales with POPULATION (user_id domain), not
-    TRAFFIC (event rows), so the rowcount bound shuts the gate
-    ~|events|/|users| early. Pin: the span bound admits the hint where
-    the rowcount bound shuts it; a 1-byte gate still shuts the key arm;
-    key= without row_bytes= is a usage error."""
-    import pytest
-
-    from live_data_spark.catalog import (
-        broadcast_dim,
-        key_domain_span,
-        table_rowcount,
-    )
-
-    e = load(spark, sf_dir, "events")
-    first = e.groupBy("user_id").agg(F.min(F.to_date("ts")).alias("d0"))
-
-    span = key_domain_span(sf_dir, "events", "user_id")
-    n_rows = table_rowcount(sf_dir, "events")
-    assert 0 < span < n_rows  # the bound is genuinely tighter here
-
-    # gate between the two bounds: span×16 passes, rowcount×16 fails
-    gate = n_rows * 16 - 1
-    assert span * 16 < gate
-
-    shut_on_rows = broadcast_dim(first, sf_dir, "events", max_bytes=gate, row_bytes=16)
-    open_on_span = broadcast_dim(
-        first, sf_dir, "events", max_bytes=gate, row_bytes=16, key="user_id"
-    )
-    still_shut = broadcast_dim(
-        first, sf_dir, "events", max_bytes=1, row_bytes=16, key="user_id"
-    )
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        assert "BroadcastHashJoin" not in _plan(e.join(shut_on_rows, "user_id"))
-        assert "BroadcastHashJoin" in _plan(e.join(open_on_span, "user_id"))
-        assert "BroadcastHashJoin" not in _plan(e.join(still_shut, "user_id"))
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    with pytest.raises(ValueError):
-        broadcast_dim(first, sf_dir, "events", key="user_id")
 
 
 def test_sparse_cosine_pair_agg_needs_no_exchange(spark, sf_dir):
