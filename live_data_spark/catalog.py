@@ -160,13 +160,13 @@ def table_bytes(sf_dir: str, table: str) -> int:
 
 # Budget for the gates that pick between two ALGORITHMS for one result:
 # the exchange-free pair plan (gated_pair_sides), the collected-edge
-# driver arms (edges_fit_gate), similarity's re-score matrix and
-# curation's counts hint. 32 MiB of compressed parquet ≈ low-hundreds of
-# MB deserialized — safely inside executor/driver budgets at production
-# settings. Join strategy is not gated here: Spark's
-# autoBroadcastJoinThreshold (64 MB, session.py) and AQE size joins
-# from the plan's own statistics, and plain F.broadcast is kept for
-# fixed-domain frames only (nation/region, grids, 1-row aggregates).
+# driver arms (edges_fit_gate) and similarity's re-score matrix. 32 MiB
+# of compressed parquet ≈ low-hundreds of MB deserialized — safely inside
+# executor/driver budgets at production settings. Join strategy is not
+# gated here: Spark's autoBroadcastJoinThreshold (64 MB, session.py) and
+# AQE size joins from the plan's own statistics, and plain F.broadcast is
+# kept for fixed-domain frames only (nation/region, grids, 1-row
+# aggregates).
 BROADCAST_GATE_BYTES = 32 * 1024 * 1024
 
 # One size model for a collected 2-long edge row (src, dst), shared by
@@ -189,22 +189,18 @@ def edges_fit_gate(n_edges: int) -> bool:
 
 
 def gated_pair_sides(
-    df: DataFrame,
-    sf_dir: str,
-    table: str,
-    rows_per_base: int,
-    row_bytes: int = 40,
-    part_key: str = "doc_id",
-    max_bytes: int | None = None,
+    df: DataFrame, sf_dir: str, rows_per_base: int
 ) -> tuple[DataFrame, DataFrame]:
-    """("a", "b") aliased sides for a candidate-heavy SELF-join, with the
-    exchange-free pair plan applied while the frame passes the broadcast
-    gate (the shared shape of text_sparse_cosine_topk and dedup_simhash;
-    3.6×/1.5× measured at sf0.1):
+    """("a", "b") aliased sides for a candidate-heavy SELF-join of a
+    per-document frame (``rows_per_base`` rows per ``documents`` row,
+    keyed by ``doc_id``), with the exchange-free pair plan applied while
+    the frame passes the broadcast gate (the shared shape of
+    text_sparse_cosine_topk and dedup_simhash; 3.6×/1.5× measured at
+    sf0.1):
 
-    - gate OPEN (``table_rowcount × rows_per_base × row_bytes`` under
+    - gate OPEN (documents rowcount × ``rows_per_base`` × 40 B under
       ``BROADCAST_GATE_BYTES``): hash-partition the probe side by
-      ``part_key`` and BROADCAST the build side. The downstream pair
+      ``doc_id`` and BROADCAST the build side. The downstream pair
       aggregate/dedup keys (a.key, b.key) are then already clustered by
       a.key, so the multi-million-row pair stream aggregates IN PLACE —
       no pair-level exchange, which is where the SMJ shape spends ~70%
@@ -229,11 +225,9 @@ def gated_pair_sides(
     ``df`` lineage also read the cache."""
     from pyspark.sql import functions as F
 
-    gate = BROADCAST_GATE_BYTES if max_bytes is None else max_bytes
-    small = (
-        table_rowcount(sf_dir, table) * rows_per_base * row_bytes <= gate
-    )
-    if small:
+    # ~40 B per pair-build row; the gate is read at CALL time so the
+    # gate-closed sweep can force it shut
+    if table_rowcount(sf_dir, "documents") * rows_per_base * 40 <= BROADCAST_GATE_BYTES:
         df = df.persist()
         app_id = df.sparkSession.sparkContext.applicationId
         # Entries from a stopped SparkSession hold frames bound to a dead
@@ -252,7 +246,7 @@ def gated_pair_sides(
         _PAIR_CACHE[key] = df
         while len(_PAIR_CACHE) > _PAIR_CACHE_MAX:
             _PAIR_CACHE.pop(next(iter(_PAIR_CACHE))).unpersist(blocking=False)
-        return df.repartition(part_key).alias("a"), F.broadcast(df.alias("b"))
+        return df.repartition("doc_id").alias("a"), F.broadcast(df.alias("b"))
     return df.alias("a"), df.alias("b")
 
 
@@ -261,40 +255,3 @@ def gated_pair_sides(
 # gated_pair_sides): bounds cache residency to MAX × gate per session.
 _PAIR_CACHE: dict[tuple[str, int], DataFrame] = {}
 _PAIR_CACHE_MAX = 2
-
-
-# ---------------------------------------------------------------------------
-# Non-catalog hardening helpers: named swap-in configurations (documented
-# in SCALE.md/COVERAGE.md) that are NOT catalog entries — no driver row —
-# but share the full catalog-entry contract otherwise. ONE list, imported
-# by the default-deny test sweeps (tests/conftest.py) AND by tools that
-# resolve entry names (scripts/scale_replay.py), so a new swap-in lands
-# everywhere together. (fn_name, module) pairs.
-# ---------------------------------------------------------------------------
-NON_CATALOG_HELPERS: list[tuple[str, str]] = [
-    ("triangles_degree_oriented", "live_data_spark.operators.graph"),
-    ("source_cap_hash_rate", "live_data_spark.operators.curation"),
-    ("html_strip_stats_dom", "live_data_spark.operators.text"),
-    # neardup_lsh_production_band graduated to the catalog in r11;
-    # semdedup_pairs_production followed in r12 — production rungs that
-    # earn planted-case pins AND scale rows get promoted so the driver
-    # accumulates rows on the config users would actually run
-]
-
-
-def resolve_runnable(name: str):
-    """A catalog QuerySpec, or a helper wrapped in one, by name — how
-    tools (scale_replay) accept both catalog entries and the named
-    swap-in configurations above. None if the name is neither."""
-    cat = catalog()
-    if name in cat:
-        return cat[name]
-    for fn_name, module in NON_CATALOG_HELPERS:
-        if fn_name == name:
-            import importlib
-
-            fn = getattr(importlib.import_module(module), fn_name)
-            return QuerySpec(
-                spark=fn, oracle=None, doc=(fn.__doc__ or "").strip(), tags=("helper",)
-            )
-    return None

@@ -398,6 +398,12 @@ CHANGED_SINCE_CHECK: tuple[str, ...] = (
     "supplier_fulfillment_speed",
     "supplier_revenue_hhi",
     "text_sparse_cosine_topk",
+    #   (one implementation per operator) the parity twin reads the
+    #   partitioned stream reader; the rolling distinct counts became two
+    #   plain aggregates (rows equal at sf0.1, oracle parity green):
+    "pysource_stream_batch_parity",
+    "events_rolling_dau",
+    "events_stickiness",
 )
 
 # Within the already-checked class, re-verify these ahead of their round

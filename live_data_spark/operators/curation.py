@@ -120,12 +120,12 @@ def corpus_source_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale note: ``row_number() PARTITION BY source`` hashes the corpus
     by source, so one mega-domain becomes one hot partition. When the
     cap is a rate rather than an exact first-N, the skew-free form is a
-    two-phase cap: per-source counts (map-side combine) broadcast back,
+    two-phase cap: per-source counts (map-side combine) joined back,
     then a deterministic hash filter ``pmod(hash(doc_id), n) < cap``
-    keeps ≈cap docs per source with no per-source ordering at all —
-    implemented as ``source_cap_hash_rate`` below, pinned skew-free and
-    layout-deterministic. The exact-rank form here is the
-    oracle-checkable contract.
+    keeps ≈cap docs per source with no per-source ordering at all. That
+    keeps a different sample, so it is a different operator, not a body
+    for this one; the exact-rank form here is the oracle-checkable
+    contract.
     """
     d = load(spark, sf_dir, "documents")
     rn = F.row_number().over(Window.partitionBy("source").orderBy("doc_id"))
@@ -139,91 +139,6 @@ def corpus_source_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("keep_ratio"),
         F.when(F.count(F.lit(1)) > _SOURCE_CAP, 1).otherwise(0).alias("cap_hit"),
     )
-
-
-def source_cap_hash_rate(
-    spark: SparkSession, sf_dir: str, cap: int = _SOURCE_CAP
-) -> DataFrame:
-    """``corpus_source_cap``'s hot-domain hardening, implemented: the
-    two-phase hash-rate cap the entry's scale note describes.
-
-    Phase 1 is one map-side-combined per-source count; phase 2 joins the
-    (≤|sources|-row, broadcast-gated) counts back and keeps a doc iff
-    ``pmod(xxhash64(doc_id), n_docs) < cap`` — a stateless per-row
-    decision, so the plan has NO per-source window and no source-keyed
-    shuffle of the corpus: one mega-domain costs exactly its share of the
-    map work instead of one hot partition (the skew ``row_number()
-    PARTITION BY source`` can't avoid). Keeps ≈cap docs per capped
-    source (binomial around cap, exact "keep all" below it, since
-    pmod < n_docs ≤ cap) and the kept SET is a pure function of doc_id —
-    re-runs and re-partitions reproduce it bit-for-bit (pinned in
-    tests/test_curation.py alongside the no-Window plan shape).
-
-    The rank form stays in the catalog entry because an exact first-N is
-    what the SQL oracle replays; this is the form to swap in when a
-    domain outgrows a partition and ≈cap is acceptable — CCNet/RefinedWeb
-    caps are rates, not exact counts.
-
-    Gate note: the counts frame has one row per DISTINCT source, which no
-    parquet-footer statistic bounds (string column, no NDV stats) — and
-    bounding it by corpus ROWS shuts the gate at ~1M docs even with a
-    handful of sources, degrading this join to a source-keyed shuffle of
-    the whole corpus at exactly the scale the skew-free form exists for.
-    So this helper gates compute-then-decide instead: persist the counts
-    aggregate (≤|sources| rows), materialize it once (`count()` — the one
-    corpus scan phase 1 costs anyway), and hint the broadcast iff the
-    REAL size n_sources×32B is under the gate. Per-domain web caps can
-    legitimately exceed it (~100M registered domains ≈ 3 GiB); above the
-    gate the plain frame falls back to Catalyst's strategy, where AQE's
-    skew-join split handles the mega-domain hot partition. The
-    materialized frame is memoized per (app, sf_dir, on-disk state
-    fingerprint) for the session, so sweeps re-invoking the helper share
-    one ≤|sources|-row cache entry; the fingerprint factor means a
-    rewrite/re-ingest at the same path re-counts instead of serving the
-    pre-rewrite counts (the staleness class catalog._table_state's
-    footer caches exist to prevent), and residency is LRU-bounded like
-    catalog._PAIR_CACHE so a long multi-corpus session can't accumulate
-    one persisted frame per sf_dir it ever touched.
-    """
-    d = load(spark, sf_dir, "documents")
-    from live_data_spark import catalog as _cat
-
-    app_id = spark.sparkContext.applicationId
-    _, fp = _cat._table_state(sf_dir, "documents")
-    memo_key = (app_id, sf_dir, fp)
-    memo = _HASH_RATE_COUNTS_MEMO
-    if memo_key not in memo:
-        # purge dead-session entries and superseded fingerprints of this
-        # corpus (their persisted counts describe the pre-rewrite table)
-        for k in [
-            k for k in memo if k[0] != app_id or (k[1] == sf_dir and k != memo_key)
-        ]:
-            old, _ = memo.pop(k)
-            try:
-                old.unpersist(blocking=False)
-            except Exception:
-                pass  # frame belongs to a stopped context
-        counts = d.groupBy("source").agg(F.count(F.lit(1)).alias("n_docs")).persist()
-        memo[memo_key] = (counts, counts.count())
-        while len(memo) > _HASH_RATE_MEMO_MAX:
-            memo.pop(next(iter(memo)))[0].unpersist(blocking=False)
-    else:
-        memo[memo_key] = memo.pop(memo_key)  # refresh LRU position
-    counts, n_sources = memo[memo_key]
-    # gate read at CALL time so the gate-closed sweep can force it shut
-    if n_sources * 32 <= _cat.BROADCAST_GATE_BYTES:
-        counts = F.broadcast(counts)
-    dc = d.join(counts, "source")
-    return dc.where(
-        F.pmod(F.xxhash64(F.col("doc_id")), F.col("n_docs")) < F.lit(cap)
-    ).select("doc_id", "source", "n_docs")
-
-
-# (appId, sf_dir, state fingerprint) -> (counts frame, n_sources) — LRU
-# of tiny persisted per-corpus count frames, same bounded posture as
-# catalog._PAIR_CACHE (see source_cap_hash_rate's gate note)
-_HASH_RATE_COUNTS_MEMO: dict = {}
-_HASH_RATE_MEMO_MAX = 4
 
 
 # ---------------------------------------------------------------------------

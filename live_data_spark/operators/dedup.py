@@ -469,7 +469,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (plan arms + persist rationale in its docstring).
     from live_data_spark.catalog import gated_pair_sides
 
-    a, b = gated_pair_sides(bands, sf_dir, "documents", SIMHASH_BANDS)
+    a, b = gated_pair_sides(bands, sf_dir, SIMHASH_BANDS)
     cand = (
         a.join(
             b,

@@ -391,10 +391,9 @@ def graph_part_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     by the ≤7-item baskets. On a power-law graph the production hardening
     is degree-ordered orientation (point every edge at its higher-degree
     endpoint), which caps wedge fan-out by arboricity instead of max
-    degree — implemented as ``triangles_degree_oriented`` below and
-    pinned output-identical to this entry; id orientation stays in the
-    entry because it is what the SQL oracle can reproduce verbatim, and
-    the support floor already trims hubs.
+    degree. Id orientation stays: the SQL oracle reproduces it verbatim,
+    the support floor already trims hubs, and at sf0.1 the degree-ordered
+    form returned the same rows with 2 more stages (13 vs 11).
     """
     li = load(spark, sf_dir, "lineitem")
     pairs = (
@@ -417,94 +416,6 @@ def graph_part_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs.select(F.explode(F.array("p1", "p2")).alias("part_id"))
         .groupBy("part_id")
         .agg(F.count(F.lit(1)).alias("degree"))
-    )
-    t = F.coalesce("n_triangles", F.lit(0))
-    return (
-        deg.join(node_tri, "part_id", "left")
-        .orderBy(t.desc(), "part_id")
-        .limit(TRI_TOP)
-        .select(
-            "part_id",
-            t.cast("bigint").alias("n_triangles"),
-            F.col("degree").cast("bigint").alias("degree"),
-            F.round(
-                t * 2.0 / F.nullif((F.col("degree") * (F.col("degree") - 1)).cast("double"), F.lit(0.0)),
-                6,
-            ).alias("clustering_coeff"),
-        )
-    )
-
-
-def triangles_degree_oriented(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``graph_part_triangles``'s production hardening, implemented: the
-    same top-20 triangle table from DEGREE-ordered edge orientation.
-
-    Id orientation (the catalog entry) lets every wedge form at whatever
-    vertex happens to have the smallest id — on a power-law graph a hub
-    with degree d spawns O(d²) wedges and that one key hot-spots the
-    wedge shuffle. Orienting every edge toward its higher-(degree, id)
-    endpoint instead makes each triangle's apex its LOWEST-degree vertex,
-    so per-vertex wedge fan-out is bounded by the graph's degeneracy
-    (arboricity) rather than max degree — the standard fix (Cohen 2009,
-    MapReduce triangle enumeration; same trick as GraphX's triangleCount).
-
-    Orientation changes only WHERE each triangle is formed, never whether
-    it exists, so per-node triangle counts — and the whole output table —
-    are identical to the id-oriented entry (pinned in tests/test_graph.py).
-    The entry keeps id orientation because the SQL oracle reproduces it
-    verbatim; this variant is the shape to swap in when the co-purchase
-    graph loses its support-floor hub trim.
-
-    The (degree, id) order travels as a STRUCT key compared
-    lexicographically (structs of orderable fields are orderable in
-    Spark SQL) — NOT packed into one BIGINT as degree·2³² + id: at the
-    scale this hardening exists for (sf100k part ids reach ~2e10 > 2³²)
-    the id term overflows its bit budget and distinct vertices collide
-    to one key, silently corrupting the wedge orientation and the
-    triangle counts. The struct comparison has no magnitude limit.
-    """
-    li = load(spark, sf_dir, "lineitem")
-    pairs = (
-        order_pair_counts(order_baskets(li))
-        .where(F.col("n_both") >= PR_MIN_BOTH)
-        .select("p1", "p2")
-    )
-    deg = (
-        pairs.select(F.explode(F.array("p1", "p2")).alias("part_id"))
-        .groupBy("part_id")
-        .agg(F.count(F.lit(1)).alias("degree"))
-    )
-    key = F.struct(
-        F.col("degree").cast("bigint").alias("d"),
-        F.col("part_id").cast("bigint").alias("i"),
-    )
-    keyed = deg.select("part_id", key.alias("k"))
-    ek = (
-        pairs.join(keyed.select(F.col("part_id").alias("p1"), F.col("k").alias("k1")), "p1")
-        .join(keyed.select(F.col("part_id").alias("p2"), F.col("k").alias("k2")), "p2")
-    )
-    oriented = ek.select(
-        F.when(F.col("k1") < F.col("k2"), F.col("p1")).otherwise(F.col("p2")).alias("src"),
-        F.when(F.col("k1") < F.col("k2"), F.col("p2")).otherwise(F.col("p1")).alias("dst"),
-        F.greatest("k1", "k2").alias("kdst"),
-    )
-    o1, o2 = oriented.alias("o1"), oriented.alias("o2")
-    wedges = o1.join(
-        o2,
-        (F.col("o1.src") == F.col("o2.src")) & (F.col("o1.kdst") < F.col("o2.kdst")),
-    ).select(
-        F.col("o1.src").alias("u"),
-        F.col("o1.dst").alias("v"),
-        F.col("o2.dst").alias("w"),
-    )
-    # a wedge closes iff the (v, w) edge exists; its orientation is
-    # necessarily v→w (kdst ordering above), so one equi-join suffices
-    closing = oriented.select(F.col("src").alias("v"), F.col("dst").alias("w"))
-    tri = wedges.join(closing, ["v", "w"])
-    node_tri = (
-        tri.select(F.explode(F.array("u", "v", "w")).alias("part_id"))
-        .groupBy("part_id")
-        .agg(F.count(F.lit(1)).alias("n_triangles"))
     )
     t = F.coalesce("n_triangles", F.lit(0))
     return (

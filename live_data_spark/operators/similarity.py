@@ -728,9 +728,8 @@ def neardup_lsh_production_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     that the radius-1 probe set (1 + p instead of 1 + p + p(p−1)/2)
     holds recall while cutting the shuffle's log² factor to log.
 
-    Catalog-registered rows-only from r11 (promoted out of
-    conftest.NON_CATALOG_HELPERS) so the production rung accumulates
-    driver rows like every other swap-in; exactness lives in the
+    Catalog-registered rows-only so the production rung accumulates
+    driver rows like every other entry; exactness lives in the
     planted-pair recall+precision pin (tests/test_similarity.py). No
     SQL oracle: the probe-set membership is a function of the seeded
     random hyperplanes, not expressible as a DuckDB query over the

@@ -1215,12 +1215,10 @@ def text_html_strip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Deliberately the regex TIER: ``<[^>]+>`` + whitespace collapse is
     the cheap single-scan screen (both engines run the identical
-    pattern — in Java-regex/RE2's common subset), not an HTML5 parser —
-    script/style CONTENT, comments, and malformed nesting need the DOM
-    tier, implemented as ``html_strip_stats_dom`` below (stdlib
-    ``html.parser`` via mapInPandas — same output schema, pinned to
-    agree on markup this tier handles and to beat it on script/style
-    payloads). Map-only, whole-stage codegen, no shuffle; the
+    pattern — in Java-regex/RE2's common subset), not an HTML5 parser:
+    script/style CONTENT, comments, entity decoding and malformed
+    nesting need a real DOM parse, whose counts differ from these on
+    exactly that markup. Map-only, whole-stage codegen, no shuffle; the
     markup_frac guard mirrors punct_ratio's empty-doc NULL.
     """
     d = load(spark, sf_dir, "documents")
@@ -2304,7 +2302,7 @@ def text_sparse_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cost (docs × SPARSE_SIG_TERMS rows of ~(long, short term, double))
     # — the shared shape lives in catalog.gated_pair_sides; see its
     # docstring for both plan arms and the persist rationale.
-    a, b = gated_pair_sides(sig, sf_dir, "documents", SPARSE_SIG_TERMS)
+    a, b = gated_pair_sides(sig, sf_dir, SPARSE_SIG_TERMS)
     nrm = sig.groupBy("doc_id").agg(F.sum(qq(F.col("w") * F.col("w"))).alias("qn"))
     dots = (
         a.join(
@@ -2773,107 +2771,4 @@ def text_burrows_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("delta"),
         )
         .orderBy("source_1", "source_2")
-    )
-
-
-def _dom_strip_stats(text: str) -> tuple[int, int, int]:
-    """(n_tags, n_entities, n_chars_stripped) from a real parse.
-
-    stdlib ``html.parser`` (no external dependency): start/end/void tags
-    counted like the regex tier counts ``<...>`` occurrences, entity and
-    character references counted AND decoded into the text, script/style
-    CONTENT and comments excluded from the stripped text — the three
-    things the single-regex screen cannot do. Whitespace collapses to
-    single spaces to match the regex tier's normalization.
-    """
-    import html as _html
-    from html.parser import HTMLParser
-
-    class _S(HTMLParser):
-        def __init__(self) -> None:
-            super().__init__(convert_charrefs=False)
-            self.parts: list[str] = []
-            self.skip = 0
-            self.n_tags = 0
-            self.n_entities = 0
-
-        def handle_starttag(self, tag, attrs):
-            self.n_tags += 1
-            if tag in ("script", "style"):
-                self.skip += 1
-
-        def handle_endtag(self, tag):
-            self.n_tags += 1
-            if tag in ("script", "style") and self.skip:
-                self.skip -= 1
-
-        def handle_startendtag(self, tag, attrs):
-            self.n_tags += 1  # <br/> is ONE source tag, like the regex count
-
-        def handle_data(self, data):
-            if not self.skip:
-                self.parts.append(data)
-
-        def handle_entityref(self, name):
-            self.n_entities += 1
-            if not self.skip:
-                self.parts.append(_html.unescape(f"&{name};"))
-
-        def handle_charref(self, name):
-            self.n_entities += 1
-            if not self.skip:
-                self.parts.append(_html.unescape(f"&#{name};"))
-
-    p = _S()
-    p.feed(text)
-    p.close()
-    stripped = " ".join("".join(p.parts).split())
-    return p.n_tags, p.n_entities, len(stripped)
-
-
-def html_strip_stats_dom(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``text_html_strip_stats``'s DOM tier, implemented: the same
-    per-doc markup audit from a REAL parse (stdlib ``html.parser``, an
-    Arrow-batched mapInPandas stage) instead of the single-regex screen.
-
-    What the parse buys over the regex tier — pinned in
-    tests/test_text_pipeline.py: script/style CONTENT leaves the
-    stripped text (the regex drops only the tags and leaks the payload
-    into "text"), comments are not counted as tags, and entities decode
-    into characters rather than surviving as ``&amp;``-style tokens.
-    On markup the regex tier handles (plain nested tags, no
-    script/comment/entity), the two tiers agree row-for-row — same
-    output schema, so a corpus can switch tiers without touching
-    downstream.
-
-    Scale shape is unchanged: map-only over documents, no shuffle; the
-    Python stage is the cost of correctness on adversarial web markup
-    and prices at one Arrow round-trip per batch.
-    """
-    import pandas as pd
-
-    d = load(spark, sf_dir, "documents").select("doc_id", "text")
-
-    def strip(batches):
-        for pdf in batches:
-            stats = [_dom_strip_stats(t or "") for t in pdf["text"]]
-            n = pdf["text"].str.len().fillna(0).astype("int64")
-            sl = pd.Series([s[2] for s in stats], dtype="int64")
-            frac = (1.0 - sl / n.where(n > 0)).round(4)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_tags": pd.Series([s[0] for s in stats], dtype="int64"),
-                    "n_entities": pd.Series([s[1] for s in stats], dtype="int64"),
-                    "n_chars_stripped": sl,
-                    "markup_frac": frac,
-                }
-            )
-
-    return d.mapInPandas(
-        strip,
-        schema=(
-            "doc_id long, n_tags long, n_entities long, "
-            "n_chars_stripped long, markup_frac double"
-        ),
     )

@@ -84,97 +84,35 @@ def register_synthetic_docs(spark) -> None:
     spark.dataSource.register(SyntheticDocsDataSource)
 
 
-# -- streaming form: offset-tracked micro-batches, replay-deterministic ------
-
-from pyspark.sql.datasource import SimpleDataSourceStreamReader  # noqa: E402
-
-
-class SyntheticDocsStreamReader(SimpleDataSourceStreamReader):
-    """Offset-based streaming reads of the same deterministic doc space.
-
-    Offsets are plain doc-id watermarks ``{"next": n}``: each micro-batch
-    reads up to ``batch_size`` NEW docs and advances the offset;
-    ``readBetweenOffsets`` replays any [start, end) range bit-identically
-    (per-row seeding again), which is exactly the recovery contract —
-    a failed batch re-reads the same rows. The Simple reader reads on
-    the driver (documented for light rates); the partitioned
-    ``DataSourceStreamReader`` below
-    (``SyntheticDocsPartitionedStreamReader``) is the implemented
-    high-throughput swap-in with the same offset model, pinned
-    batch-equal via ``parity_report``.
-    """
-
-    def __init__(self, options):
-        self.total = int(options.get("n", 100))
-        self.batch_size = int(options.get("batch_size", 10))
-
-    def initialOffset(self) -> dict:
-        return {"next": 0}
-
-    def _rows(self, start: int, end: int):
-        # a LIST ITERATOR, not a bare generator or list: the simple-reader
-        # wrapper both advances it (`next(it)` on a stalled offset) and
-        # pickles the prefetched entry to ship it — list iterators are the
-        # type that satisfies both, generators pickle-fail and lists
-        # aren't iterators
-        return iter(
-            list(SyntheticDocsReader({"n": end}).read(_DocsPartition(start, end)))
-        )
-
-    def read(self, start: dict):
-        s = int(start["next"])
-        e = min(s + self.batch_size, self.total)
-        return self._rows(s, e), {"next": e}
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        return self._rows(int(start["next"]), int(end["next"]))
-
-
-class SyntheticDocsStreamDataSource(SyntheticDocsDataSource):
-    """``spark.readStream.format("synthetic_docs_stream")...``."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "synthetic_docs_stream"
-
-    def simpleStreamReader(self, schema) -> SyntheticDocsStreamReader:
-        return SyntheticDocsStreamReader(self.options)
-
-
-def register_synthetic_docs_stream(spark) -> None:
-    spark.dataSource.register(SyntheticDocsStreamDataSource)
-
-
-# -- partitioned streaming form: the high-throughput swap-in ------------------
+# -- streaming form: offset-tracked, executor-parallel micro-batches ---------
 
 from pyspark.sql.datasource import DataSourceStreamReader  # noqa: E402
 
 
 class SyntheticDocsPartitionedStreamReader(DataSourceStreamReader):
-    """The full ``DataSourceStreamReader``: executor-parallel micro-batches.
+    """Offset-based streaming reads of the same deterministic doc space,
+    read by executors in parallel.
 
-    The Simple reader above reads on the DRIVER (documented for light
-    rates); this is the documented high-throughput swap-in sharing its
-    ``{"next": doc_id}`` watermark offsets: ``latestOffset`` reports how
-    far the doc space currently extends, and each micro-batch's
-    [start, end) range splits into ``partitions`` ranges that EXECUTORS
-    read in parallel — the same task-per-partition scan semantics as the
-    batch source, now per micro-batch. Per-row seeding keeps any replay
-    of any range bit-identical regardless of how the range was
-    partitioned, which is exactly why recovery and the batch twin agree
+    Offsets are plain doc-id watermarks ``{"next": n}``: ``latestOffset``
+    reports how far the doc space currently extends, and each
+    micro-batch's [start, end) range splits into ``partitions`` ranges
+    that EXECUTORS read in parallel — the same task-per-partition scan
+    semantics as the batch source, now per micro-batch. Per-row seeding
+    keeps any replay of any range bit-identical regardless of how the
+    range was partitioned, which is exactly the recovery contract (a
+    failed batch re-reads the same rows) and why the batch twin agrees
     (pinned in tests/test_sources.py via ``parity_report``).
 
-    Deliberately NO ``batch_size`` admission throttle here, unlike the
-    Simple reader: ``latestOffset()`` takes no start argument in the
-    Python API, so a per-instance "advance by K each poll" counter
-    restarts from zero with every new query instance — after a restart
-    whose checkpoint is past K the advertised latest sits at or behind
-    the committed offset forever and the stream silently stalls (the
-    Simple reader is immune because ``read(start)`` derives from the
-    CHECKPOINTED start). Rate limiting in this API belongs to the
-    upstream poll itself; a fully-available synthetic space reports its
-    true extent, which is safe across any restart because latest ≥ any
-    committed offset. Restart-resume is pinned in tests/test_sources.py.
+    Deliberately NO ``batch_size`` admission throttle:
+    ``latestOffset()`` takes no start argument in the Python API, so a
+    per-instance "advance by K each poll" counter restarts from zero
+    with every new query instance — after a restart whose checkpoint is
+    past K the advertised latest sits at or behind the committed offset
+    forever and the stream silently stalls. Rate limiting in this API
+    belongs to the upstream poll itself; a fully-available synthetic
+    space reports its true extent, which is safe across any restart
+    because latest ≥ any committed offset. Restart-resume is pinned in
+    tests/test_sources.py.
     """
 
     def __init__(self, options):
@@ -227,13 +165,12 @@ from pyspark.sql import functions as F  # noqa: E402
 from live_data_spark.catalog import register  # noqa: E402
 from live_data_spark.session import local_frame  # noqa: E402
 
-# exactly ceil(n/batch) = 2 micro-batch drains: enough to prove the
-# offset walk (batch 2 resumes from the checkpointed offset), while each
-# availableNow start/stop costs ~6 s of stream machinery — completeness
-# needs no extra confirm drain because the parity columns would expose an
-# unfinished backlog as n_stream < n_batch
+# two availableNow drains over a growing doc space (n/2, then n): enough
+# to prove the offset walk (drain 2 resumes from the checkpointed offset),
+# while each drain start/stop costs seconds of stream machinery —
+# completeness needs no extra confirm drain because the parity columns
+# would expose an unfinished backlog as n_stream < n_batch
 PYSOURCE_PARITY_N = 120
-PYSOURCE_PARITY_BATCH = 60
 
 
 def parity_report(
@@ -304,10 +241,10 @@ def pysource_stream_batch_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch/stream EQUALITY twin for the Python DataSource pair — the
     same catalog-visible contract the events streaming jobs carry
     (every streaming operator ships with a batch twin whose equality is
-    checked): drain ``synthetic_docs_stream`` end-to-end with
-    availableNow micro-batches (offset checkpointing, one batch per
-    drain — the Simple-reader contract), then compare against the BATCH
-    ``synthetic_docs`` read of the same doc space. Each side is first
+    checked): drain ``synthetic_docs_pstream`` twice against one
+    checkpoint while its doc space grows (n/2, then n — the second drain
+    resumes from the checkpointed offset), then compare against the
+    BATCH ``synthetic_docs`` read of the same doc space. Each side is first
     aggregated to per-row multiplicities (group by EVERY column) and the
     multiplicity frames full-outer-join on doc_id — an identical
     duplicate delivery therefore inflates ``n_stream`` alone AND trips
@@ -330,17 +267,17 @@ def pysource_stream_batch_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from live_data_spark.streaming.jobs import run_available_now
 
     register_synthetic_docs(spark)
-    register_synthetic_docs_stream(spark)
+    register_synthetic_docs_pstream(spark)
 
     with tempfile.TemporaryDirectory(prefix="pysource_parity_") as tmp:
         sink, ckpt = f"{tmp}/sink", f"{tmp}/ckpt"
-        # one availableNow invocation consumes ONE simple-reader batch;
-        # ceil(n/batch) drains exhaust the declared doc space
-        for _ in range(-(-PYSOURCE_PARITY_N // PYSOURCE_PARITY_BATCH)):
+        # one partition per micro-batch: more partitions only write more
+        # sink files for the same rows
+        for n in (PYSOURCE_PARITY_N // 2, PYSOURCE_PARITY_N):
             stream = (
-                spark.readStream.format("synthetic_docs_stream")
-                .option("n", PYSOURCE_PARITY_N)
-                .option("batch_size", PYSOURCE_PARITY_BATCH)
+                spark.readStream.format("synthetic_docs_pstream")
+                .option("n", n)
+                .option("partitions", 1)
                 .load()
             )
             run_available_now(stream, sink, ckpt)

@@ -1046,10 +1046,13 @@ def events_rolling_dau(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a BroadcastNestedLoopJoin testing every pair against every day
     (|days|× work — 3650× on a 10-year table); the explode is exactly 7
     rows per pair regardless of history length, then everything is
-    hash-partitioned. At 100 TB the (day, user) frame is what you
-    materialize incrementally, and the sketch alternative (mergeable
-    HLL per day, union over the trailing window) drops the fan-out
-    entirely when approximation is acceptable.
+    hash-partitioned. Two plain aggregates instead of two
+    ``COUNT(DISTINCT ...)``: (anchor, user) collapses to one row with a
+    ``today`` flag, so the day rollup sums flags and counts rows. No
+    ``Expand``, so the plan has one form build to build. At 100 TB the
+    (day, user) frame is what you materialize incrementally, and the
+    sketch alternative (mergeable HLL per day, union over the trailing
+    window) drops the fan-out entirely when approximation is acceptable.
     """
     e = load(spark, sf_dir, "events")
     du = e.select(F.to_date("ts").alias("d"), "user_id").distinct()
@@ -1060,9 +1063,12 @@ def events_rolling_dau(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.sequence("d", F.date_add("d", 6))).alias("anchor"),
     )
     joined = fan.join(F.broadcast(days), "anchor")
-    return joined.groupBy(F.date_format("anchor", "yyyy-MM-dd").alias("day")).agg(
-        F.countDistinct(F.when(F.col("d") == F.col("anchor"), F.col("user_id"))).alias("dau"),
-        F.countDistinct("user_id").alias("wau_7d"),
+    per_user = joined.groupBy("anchor", "user_id").agg(
+        F.max((F.col("d") == F.col("anchor")).cast("int")).alias("today")
+    )
+    return per_user.groupBy(F.date_format("anchor", "yyyy-MM-dd").alias("day")).agg(
+        F.sum("today").alias("dau"),
+        F.count(F.lit(1)).alias("wau_7d"),
     )
 
 
@@ -2231,7 +2237,9 @@ def events_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum): the deduped (day, user) frame explodes to its 30 future
     anchors — exactly 30 rows per pair regardless of history length,
     hash-joined against the observed-day grid, never a range-condition
-    nested loop. The HLL swap (mergeable per-day sketches, 30-way
+    nested loop — and the same two plain aggregates (per (anchor, user)
+    ``today`` flag, then sum and row count per day), so no ``Expand``
+    and one plan form. The HLL swap (mergeable per-day sketches, 30-way
     union) drops the fan-out at 100 TB when ±2% is acceptable, exactly
     as ``events_rolling_dau_hll`` demonstrates for the 7-day form.
     """
@@ -2244,9 +2252,12 @@ def events_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.sequence("d", F.date_add("d", 29))).alias("anchor"),
     )
     joined = fan.join(F.broadcast(days), "anchor")
-    dau = F.countDistinct(F.when(F.col("d") == F.col("anchor"), F.col("user_id")))
-    mau = F.countDistinct("user_id")
-    return joined.groupBy(F.date_format("anchor", "yyyy-MM-dd").alias("day")).agg(
+    per_user = joined.groupBy("anchor", "user_id").agg(
+        F.max((F.col("d") == F.col("anchor")).cast("int")).alias("today")
+    )
+    dau = F.sum("today")
+    mau = F.count(F.lit(1))
+    return per_user.groupBy(F.date_format("anchor", "yyyy-MM-dd").alias("day")).agg(
         dau.alias("dau"),
         mau.alias("mau_30d"),
         F.round(dau / mau.cast("double"), 4).alias("stickiness"),

@@ -27,7 +27,7 @@ sys.path.insert(0, str(REPO))
 
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("entries", nargs="+", help="catalog entry / helper names")
+    ap.add_argument("entries", nargs="+", help="catalog entry names")
     ap.add_argument("--out-dir", required=True)
     ap.add_argument("--suffix", default="", help="e.g. _before / _after")
     ap.add_argument(
@@ -35,7 +35,7 @@ def main() -> int:
     )
     args = ap.parse_args()
 
-    from live_data_spark.catalog import resolve_runnable
+    from live_data_spark.catalog import catalog
     from live_data_spark.session import get_spark
 
     spark = get_spark(
@@ -45,9 +45,10 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     out = Path(args.out_dir)
     out.mkdir(parents=True, exist_ok=True)
+    cat = catalog()
     rc = 0
     for name in args.entries:
-        spec = resolve_runnable(name)
+        spec = cat.get(name)
         if spec is None:
             print(f"unknown entry: {name}", file=sys.stderr)
             rc = 2

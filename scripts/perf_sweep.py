@@ -64,7 +64,7 @@ CPU_FLOOR_SEC = 0.2  # ...measured from at least this much CPU
 # size. Spark numbers expressions from one global counter and orders
 # some rewritten expressions by hash, so a plan can flip between two
 # forms that list an Exchange's key columns in either order. Over
-# repeated builds the optimized plan reads two forms for five entries
+# repeated builds the optimized plan reads two forms for three entries
 # below (all but the three named next), and q20_outsized_suppliers
 # flips in its final adaptive plan. events_health_digest's plan also
 # varies in other ways, and window_spend_deciles_ranged keeps one plan
@@ -74,8 +74,6 @@ SHUFFLE_BYTES_VARY = {
     "corpus_lang_source_entropy": (7_198, 7_484),
     "dedup_threshold_curve": (4_974_218, 4_975_893),
     "events_health_digest": (174_979, 177_798),
-    "events_rolling_dau": (1_369_630, 1_378_538),
-    "events_stickiness": (1_297_109, 1_301_302),
     "privacy_pseudonymize_users": (59_648, 60_631),
     "q20_outsized_suppliers": (2_313_663, 2_313_697),
     "window_spend_deciles_ranged": (620_379, 620_628),

@@ -292,15 +292,13 @@ def main() -> int:
         print(f"unknown tables: {sorted(tables - known)}", file=sys.stderr)
         return 2
 
-    from live_data_spark.catalog import resolve_runnable
+    from live_data_spark.catalog import catalog
     from live_data_spark.session import get_spark
     from perfbench.trace import Tracer
     from scripts.perf_sweep import SESSION_CONF, measure
 
-    # catalog entries AND the named swap-in configurations
-    # (catalog.NON_CATALOG_HELPERS) resolve here — production rungs get
-    # replayed with the same tool as the entries they tune
-    cat = {e: resolve_runnable(e) for e in args.entries}
+    known_entries = catalog()
+    cat = {e: known_entries.get(e) for e in args.entries}
     unknown = [e for e, spec in cat.items() if spec is None]
     if unknown:
         print(f"unknown entries: {unknown}", file=sys.stderr)

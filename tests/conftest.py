@@ -39,15 +39,6 @@ def canon_rows(rows, columns):
     return sorted(tuple(canon(row[i]) for i in order) for row in rows)
 
 
-# Non-catalog hardening helpers (implemented swap-ins documented in
-# SCALE.md): the default-deny sweeps (plan hygiene, empty input) can't
-# discover them through the catalog, so they enumerate ONE shared list.
-# Since r11 that list lives beside the catalog (append new swap-ins
-# THERE) so tools like scripts/scale_replay.py resolve the same names
-# via resolve_runnable.
-from live_data_spark.catalog import NON_CATALOG_HELPERS  # noqa: E402, F401
-
-
 @pytest.fixture(scope="session")
 def spark():
     from live_data_spark.session import get_spark

@@ -420,127 +420,6 @@ def test_lang_source_entropy_pure_sources(spark, tmp_path):
     assert abs(r["h_lang"] - 0.6931) < 1e-4  # ln 2: a fair 2-language split
 
 
-def test_source_cap_hash_rate_skew_free_and_deterministic(spark, sf_dir):
-    """The two-phase hash-rate cap (corpus_source_cap's implemented
-    hardening): no per-source window in the plan, ≈cap kept per capped
-    source, exact keep-all below the cap, and a kept set that is a pure
-    function of doc_id (identical across re-evaluation and an adversarial
-    repartition)."""
-    from live_data_spark.operators.curation import source_cap_hash_rate
-
-    cap = 10  # sf0.001 sources hold 25 docs each — the rate path fires
-    kept = source_cap_hash_rate(spark, sf_dir, cap=cap)
-    plan = kept._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in plan, "hash-rate cap must not window by source"
-
-    rows = kept.collect()
-    per_src: dict[str, int] = {}
-    for r in rows:
-        per_src[r["source"]] = per_src.get(r["source"], 0) + 1
-        if r["n_docs"] <= cap:
-            pass  # keep-all sources contribute every doc (checked below)
-    n_docs = {r["source"]: r["n_docs"] for r in rows}
-    for src, k in per_src.items():
-        n = n_docs[src]
-        if n <= cap:
-            assert k == n, (src, k, n)
-        else:
-            # binomial(n, cap/n): mean cap, sd = sqrt(cap(1-cap/n)); ±4 sd
-            sd = (cap * (1 - cap / n)) ** 0.5
-            assert abs(k - cap) <= 4 * sd + 1, (src, k, cap, sd)
-
-    ids = {r["doc_id"] for r in rows}
-    again = {r["doc_id"] for r in kept.collect()}
-    assert again == ids
-    from live_data_spark.catalog import load
-
-    shuffled = (
-        load(spark, sf_dir, "documents").repartition(7, "lang")
-    )
-    # rebuild the cap over a relaid-out corpus by hand: same filter rule
-    from pyspark.sql import functions as F
-
-    counts = shuffled.groupBy("source").agg(F.count(F.lit(1)).alias("n_docs"))
-    relaid = (
-        shuffled.join(counts, "source")
-        .where(F.pmod(F.xxhash64(F.col("doc_id")), F.col("n_docs")) < F.lit(cap))
-    )
-    assert {r["doc_id"] for r in relaid.select("doc_id").collect()} == ids
-
-
-def test_source_cap_hash_rate_gates_on_real_counts_size(spark, sf_dir, monkeypatch):
-    """The broadcast gate must bound the counts frame by its REAL size
-    (n_distinct_sources × 32B, known after the compute-then-decide
-    materialization), not by corpus rows — a row-based bound shuts at ~1M
-    docs with a handful of sources, degrading the join to the source-keyed
-    corpus shuffle this form exists to avoid. sf0.001: 500 docs but only
-    20 sources, so a gate BETWEEN 20×32 and 500×32 separates the bounds:
-    the real-size gate broadcasts, a row-bound would not. Forced shut, the
-    hint must disappear (the gate-closed sweep's contract)."""
-    from live_data_spark import catalog as cat
-    from live_data_spark.operators import curation
-
-    curation._HASH_RATE_COUNTS_MEMO.clear()
-    monkeypatch.setattr(cat, "BROADCAST_GATE_BYTES", 5_000)  # 640 < 5000 < 16000
-    plan = (
-        curation.source_cap_hash_rate(spark, sf_dir, cap=10)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "BroadcastHashJoin" in plan
-
-    # force the gate shut: the hint must disappear (with Catalyst's own
-    # auto-broadcast estimator also off, as at real scale — it would
-    # otherwise still pick BHJ for the tiny cached counts frame)
-    monkeypatch.setattr(cat, "BROADCAST_GATE_BYTES", -1)
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        plan_shut = (
-            curation.source_cap_hash_rate(spark, sf_dir, cap=10)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        assert "BroadcastHashJoin" not in plan_shut
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    curation._HASH_RATE_COUNTS_MEMO.clear()
-
-
-def test_source_cap_hash_rate_memo_tracks_on_disk_state(spark, tmp_path):
-    """The counts memo keys on the table's stat FINGERPRINT, not its path:
-    a rewrite/re-ingest at the same sf_dir must re-count (serving the
-    pre-rewrite counts would mis-gate the broadcast and mis-filter via a
-    stale n_docs), the superseded persisted frame must unpersist, and the
-    memo holds one live entry per corpus (catalog._PAIR_CACHE's bounded
-    posture)."""
-    from live_data_spark.operators import curation
-
-    def write(n_sources):
-        rows = [(i, f"t{i}", "en", f"s{i % n_sources}", 2) for i in range(40)]
-        spark.createDataFrame(
-            rows, "doc_id long, text string, lang string, source string, n_chars long"
-        ).write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
-
-    curation._HASH_RATE_COUNTS_MEMO.clear()
-    write(2)
-    first = curation.source_cap_hash_rate(spark, str(tmp_path), cap=100)
-    assert {r["source"] for r in first.collect()} == {"s0", "s1"}
-    (old_key,) = curation._HASH_RATE_COUNTS_MEMO
-    assert curation._HASH_RATE_COUNTS_MEMO[old_key][1] == 2
-
-    write(4)  # re-ingest at the SAME path: more sources, new fingerprint
-    second = curation.source_cap_hash_rate(spark, str(tmp_path), cap=100)
-    assert {r["source"] for r in second.collect()} == {"s0", "s1", "s2", "s3"}
-    # superseded entry purged (its frame unpersisted on the way out — not
-    # assertable via storageLevel: the rewritten table's counts plan
-    # canonicalizes equal to the old one, so the old frame reports the
-    # NEW cache entry's level), one live entry per corpus
-    (new_key,) = curation._HASH_RATE_COUNTS_MEMO
-    assert new_key != old_key and curation._HASH_RATE_COUNTS_MEMO[new_key][1] == 4
-    for df, _ in curation._HASH_RATE_COUNTS_MEMO.values():
-        df.unpersist(blocking=False)
-    curation._HASH_RATE_COUNTS_MEMO.clear()
-
-
 def test_dsir_select_equals_global_prefix_rule(spark, sf_dir):
     """The range-decomposed selection (whole-keep / drop / cut-window
     arms) must equal the direct definition: docs taken in (sel_key desc,

@@ -70,20 +70,6 @@ def test_catalog_entry_survives_empty_input(spark, empty_sf_dir, name):
     assert isinstance(rows, list)
 
 
-# non-catalog hardening helpers: same contract, enumerated in ONE shared
-# list (conftest) so the plan-hygiene sweep stays in lockstep
-from conftest import NON_CATALOG_HELPERS
-
-
-@pytest.mark.parametrize("fn_name,module", NON_CATALOG_HELPERS)
-def test_helper_survives_empty_input(spark, empty_sf_dir, fn_name, module):
-    import importlib
-
-    fn = getattr(importlib.import_module(module), fn_name)
-    rows = fn(spark, empty_sf_dir).collect()
-    assert rows == []
-
-
 def test_pq_codebook_build_fails_cleanly_on_empty_corpus(spark, empty_sf_dir, tmp_path):
     """An artifact BUILD on an empty corpus must refuse with the real
     reason (and persist nothing) — not crash inside np.stack; the

@@ -120,19 +120,3 @@ def test_no_plan_antipatterns(spark, sf_dir, name):
             f"{name}: nested-loop join — 1-row frame? add to BNLJ_OK with a "
             "reason; range condition? rewrite as explode + equi-join"
         )
-
-
-# non-catalog hardening helpers: same default-deny, enumerated in ONE
-# shared list (conftest) so the empty-input sweep stays in lockstep
-from conftest import NON_CATALOG_HELPERS
-
-
-@pytest.mark.parametrize("fn_name,module", NON_CATALOG_HELPERS)
-def test_helper_plan_hygiene(spark, sf_dir, fn_name, module):
-    import importlib
-
-    fn = getattr(importlib.import_module(module), fn_name)
-    plan = fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan, f"{fn_name}: row-at-a-time Python UDF"
-    assert "CartesianProduct" not in plan, f"{fn_name}: cartesian product"
-    assert "BroadcastNestedLoopJoin" not in plan, f"{fn_name}: nested-loop join"

@@ -333,13 +333,13 @@ def test_sparse_cosine_pair_agg_needs_no_exchange(spark, sf_dir):
     assert "InMemoryTableScan" in plan, "signature frame is not persisted"
 
 
-def test_gated_pair_sides_closed_arm_identical(spark, sf_dir):
+def test_gated_pair_sides_closed_arm_identical(spark, sf_dir, monkeypatch):
     """The helper's gate-CLOSED arm (the one a huge corpus actually
-    runs): forcing the gate shut via max_bytes=1 must return plain
-    aliased sides — no persist, no probe repartition — and the pair
-    aggregate over them must produce results identical to the open
-    arm's exchange-free plan."""
-    from live_data_spark.catalog import gated_pair_sides
+    runs): forcing the gate shut (BROADCAST_GATE_BYTES patched to −1)
+    must return plain aliased sides — no persist, no probe repartition —
+    and the pair aggregate over them must produce results identical to
+    the open arm's exchange-free plan."""
+    import live_data_spark.catalog as cat
 
     sig = (
         load(spark, sf_dir, "documents")
@@ -361,9 +361,9 @@ def test_gated_pair_sides_closed_arm_identical(spark, sf_dir):
             .agg(F.count(F.lit(1)).alias("n"))
         )
 
-    opened = pairs(*gated_pair_sides(sig, sf_dir, "documents", 1))
-    closed_sides = gated_pair_sides(sig, sf_dir, "documents", 1, max_bytes=1)
-    closed = pairs(*closed_sides)
+    opened = pairs(*cat.gated_pair_sides(sig, sf_dir, 1))
+    monkeypatch.setattr(cat, "BROADCAST_GATE_BYTES", -1)
+    closed = pairs(*cat.gated_pair_sides(sig, sf_dir, 1))
     closed_plan = _plan(closed)
     assert "REPARTITION_BY_COL" not in closed_plan  # no probe pre-partition
     got_open = sorted(tuple(r) for r in opened.collect())
@@ -392,7 +392,7 @@ def test_gated_pair_sides_cache_residency_is_lru_bounded(spark, sf_dir):
 
     persisted = {}  # k -> (semantic hash, the helper's persisted frame)
     for k in (3, 4, 5):
-        cat.gated_pair_sides(sig(k), sf_dir, "documents", 1)
+        cat.gated_pair_sides(sig(k), sf_dir, 1)
         seen = {h for h, _ in persisted.values()}
         new = [h for h in cat._PAIR_CACHE if h not in seen]
         assert len(new) == 1
@@ -407,7 +407,7 @@ def test_gated_pair_sides_cache_residency_is_lru_bounded(spark, sf_dir):
     assert not is_persisted(persisted[3][1])
     assert is_persisted(persisted[4][1]) and is_persisted(persisted[5][1])
     # re-invoking an already-cached plan reuses its slot — no eviction
-    cat.gated_pair_sides(sig(5), sf_dir, "documents", 1)
+    cat.gated_pair_sides(sig(5), sf_dir, 1)
     assert set(cat._PAIR_CACHE) == {persisted[4][0], persisted[5][0]}
     assert is_persisted(persisted[4][1])
     for df in cat._PAIR_CACHE.values():
@@ -436,7 +436,7 @@ def test_gated_pair_sides_purges_dead_session_entries(spark, sf_dir):
     base = load(spark, sf_dir, "documents").select(
         "doc_id", F.substring(F.lower("text"), 1, 3).alias("term")
     )
-    cat.gated_pair_sides(base, sf_dir, "documents", 1)  # must not raise
+    cat.gated_pair_sides(base, sf_dir, 1)  # must not raise
     app = spark.sparkContext.applicationId
     assert set(cat._PAIR_CACHE) != set() and all(
         k[0] == app for k in cat._PAIR_CACHE

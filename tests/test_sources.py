@@ -347,47 +347,6 @@ def test_python_datasource_scan_is_partitioned_and_deterministic(spark):
     assert sum(r["count"] for r in agg) == 57
 
 
-def test_python_streaming_datasource_batches_and_replays(spark, tmp_path):
-    """The streaming Python source advances its offset by batch_size per
-    micro-batch, drains exactly the declared doc space with no
-    duplicates, and equals the batch source's rows (same per-row
-    seeding — the replay/recovery contract)."""
-    from live_data_spark.sources.pysource import (
-        register_synthetic_docs,
-        register_synthetic_docs_stream,
-    )
-
-    register_synthetic_docs(spark)
-    register_synthetic_docs_stream(spark)
-    sink = str(tmp_path / "sink")
-    ckpt = str(tmp_path / "ckpt")
-
-    def drain():
-        q = (
-            spark.readStream.format("synthetic_docs_stream")
-            .option("n", 37)
-            .option("batch_size", 10)
-            .load()
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return spark.read.parquet(sink).count()
-
-    # each drain resumes from the CHECKPOINTED offset and pulls one
-    # batch_size window; 10+10+10+7, then a fifth drain adds nothing
-    counts = [drain() for _ in range(5)]
-    assert counts == [10, 20, 30, 37, 37], counts
-    got = spark.read.parquet(sink)
-    assert got.count() == 37
-    assert got.select("doc_id").distinct().count() == 37
-    batch = spark.read.format("synthetic_docs").option("n", 37).load()
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, batch.collect()))
-
-
 def test_write_with_metrics_single_pass_observation(spark, tmp_path):
     """df.observe metrics come out of the SAME scan that wrote the data:
     counts/null-counts/bounds match a re-read, with no second job over
@@ -417,15 +376,12 @@ def test_write_with_metrics_single_pass_observation(spark, tmp_path):
 
 def test_pysource_parity_catalog_entry(spark):
     """The catalog-visible batch/stream twin: every lang row shows equal
-    stream/batch counts and zero mismatches, totals cover the declared
-    doc space, and the walk took ≥2 micro-batches (PARITY_N > BATCH)."""
+    stream/batch counts and zero mismatches, and the totals cover the
+    declared doc space (two drains, the second resuming from the
+    checkpointed offset)."""
     from live_data_spark.catalog import catalog
-    from live_data_spark.sources.pysource import (
-        PYSOURCE_PARITY_BATCH,
-        PYSOURCE_PARITY_N,
-    )
+    from live_data_spark.sources.pysource import PYSOURCE_PARITY_N
 
-    assert PYSOURCE_PARITY_N > PYSOURCE_PARITY_BATCH  # genuinely multi-batch
     rows = catalog()["pysource_stream_batch_parity"].spark(spark, "unused").collect()
     assert sum(r["n_stream"] for r in rows) == PYSOURCE_PARITY_N
     for r in rows:
@@ -471,12 +427,12 @@ def test_pysource_parity_detects_duplicate_delivery(spark):
 
 
 def test_partitioned_streaming_datasource_parallel_and_equal_to_batch(spark, tmp_path):
-    """The full DataSourceStreamReader (the Simple reader's documented
-    high-throughput swap-in): micro-batch ranges split into
-    executor-read partitions (task-parallel, not driver-side), one
-    availableNow drain covers the declared doc space, and the landed
-    rows equal the batch source's via the multiplicity-aware parity
-    report (n_mismatch 0 everywhere)."""
+    """The streaming DataSourceStreamReader: micro-batch ranges split
+    into executor-read partitions (task-parallel, not driver-side), a
+    re-read of one offset range replays identical rows, one availableNow
+    drain covers the declared doc space, and the landed rows equal the
+    batch source's via the multiplicity-aware parity report (n_mismatch
+    0 everywhere)."""
     from live_data_spark.sources.pysource import (
         SyntheticDocsPartitionedStreamReader,
         parity_report,
@@ -491,6 +447,17 @@ def test_partitioned_streaming_datasource_parallel_and_equal_to_batch(spark, tmp
     assert len(parts) == 4
     assert [(p.start, p.end) for p in parts] == [(0, 25), (25, 50), (50, 75), (75, 100)]
     assert rdr.partitions({"next": 60}, {"next": 60}) == []
+
+    # replay: reading one offset range again yields identical rows, however
+    # the range is split (the recovery contract for a failed micro-batch)
+    def read_range(reader, s, e):
+        return [r for p in reader.partitions({"next": s}, {"next": e}) for r in reader.read(p)]
+
+    first = read_range(rdr, 30, 90)
+    assert [r[0] for r in first] == list(range(30, 90))
+    assert read_range(rdr, 30, 90) == first
+    other = SyntheticDocsPartitionedStreamReader({"n": 100, "partitions": 3})
+    assert read_range(other, 30, 90) == first
 
     register_synthetic_docs(spark)
     register_synthetic_docs_pstream(spark)

@@ -593,65 +593,3 @@ def test_burrows_delta_separates_styles(spark, tmp_path):
     # EXACTLY 3/√2 ≈ 2.1213. The pre-fix form (÷√n_sources extra) gave
     # 1.2247 here and would shrink further with more sources.
     assert abs(got[("s1", "s3")] - 2.1213) < 2e-4
-
-
-def test_html_strip_dom_tier_beats_regex_where_it_should(spark, tmp_path):
-    """The DOM tier (stdlib html.parser, text_html_strip_stats' implemented
-    swap-in): agrees with the regex tier on markup the regex handles, and
-    fixes exactly the three documented regex blind spots — script payload
-    leaking into text, comments counted as tags, entities surviving as
-    tokens."""
-    from live_data_spark.operators.text import (
-        html_strip_stats_dom,
-        text_html_strip_stats,
-    )
-
-    docs = [
-        (1, "<p>Hello <b>world</b></p>", "en", "s", 25),
-        (2, "<p>a</p><script>var x = 1;</script>tail", "en", "s", 39),
-        (3, "<!-- note -->x", "en", "s", 14),
-        (4, "a &amp; b &#65;", "en", "s", 15),
-        (5, "", "en", "s", 0),
-    ]
-    spark.createDataFrame(
-        docs, "doc_id long, text string, lang string, source string, n_chars long"
-    ).write.parquet(str(tmp_path / "documents.parquet"))
-
-    dom = {r["doc_id"]: r for r in html_strip_stats_dom(spark, str(tmp_path)).collect()}
-    rex = {r["doc_id"]: r for r in text_html_strip_stats(spark, str(tmp_path)).collect()}
-
-    # plain nested markup: the tiers agree row-for-row
-    assert tuple(dom[1]) == tuple(rex[1])
-    assert dom[1]["n_tags"] == 4 and dom[1]["n_chars_stripped"] == len("Hello world")
-
-    # script payload: regex drops only the tags and leaks the code into
-    # "text"; the DOM tier excludes the content
-    assert dom[2]["n_chars_stripped"] == len("atail")
-    assert rex[2]["n_chars_stripped"] == len("a var x = 1; tail")  # tags → spaces
-    assert dom[2]["n_tags"] == rex[2]["n_tags"] == 4
-
-    # comments are not tags
-    assert dom[3]["n_tags"] == 0 and rex[3]["n_tags"] == 1
-    assert dom[3]["n_chars_stripped"] == 1
-
-    # entities decode into characters instead of surviving as tokens
-    assert dom[4]["n_entities"] == rex[4]["n_entities"] == 2
-    assert dom[4]["n_chars_stripped"] == len("a & b A")
-    assert rex[4]["n_chars_stripped"] == len("a &amp; b &#65;")
-
-    # empty doc: defined NULL markup_frac on both tiers
-    assert dom[5]["markup_frac"] is None and rex[5]["markup_frac"] is None
-
-
-def test_html_strip_dom_tier_runs_on_corpus(spark, sf_dir):
-    """Corpus smoke for the Arrow stage: every doc produces a row, bounds
-    hold (0 ≤ markup_frac ≤ 1 where defined, stripped length ≤ raw)."""
-    from live_data_spark.catalog import load
-    from live_data_spark.operators.text import html_strip_stats_dom
-
-    n_docs = load(spark, sf_dir, "documents").count()
-    rows = html_strip_stats_dom(spark, sf_dir).collect()
-    assert len(rows) == n_docs
-    for r in rows:
-        if r["markup_frac"] is not None:
-            assert -1e-9 <= r["markup_frac"] <= 1.0 + 1e-9
