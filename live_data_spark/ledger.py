@@ -404,6 +404,10 @@ CHANGED_SINCE_CHECK: tuple[str, ...] = (
     "pysource_stream_batch_parity",
     "events_rolling_dau",
     "events_stickiness",
+    #   (one plan-shape record) one distinct group left per aggregate, so
+    #   one plan form (rows equal at sf0.1, oracle parity green);
+    #   dedup_threshold_curve, reshaped the same way, is listed above:
+    "corpus_lang_source_entropy",
 )
 
 # Within the already-checked class, re-verify these ahead of their round

@@ -86,9 +86,9 @@ def _assign_udf(centroids: np.ndarray):
     change (the function is pure): downstream joins on the assigned
     cluster imply an ``isnotnull(cluster)`` filter that Catalyst pushes
     below the projection while keeping the projection too, so the whole
-    argmax-cosine batch ran TWICE per pass (two ArrowEvalPython nodes —
-    plans/r12/embedding_kmeans_before.txt nodes 2+6 and 9+13; the
-    optimization guide §4.4 pattern). The fence keeps it to one."""
+    argmax-cosine batch ran TWICE per pass (two ArrowEvalPython nodes
+    per call in the unfenced plan; the optimization guide §4.4
+    pattern). The fence keeps it to one."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
@@ -308,7 +308,7 @@ def embedding_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     the old build ran an extra ``first()`` probe job. Measured at sf0.1
     (same-session bench pair): 2.88 → 2.33 s — the profile action is
     now ~instant and the remaining cost is the fit's 5 sequential Lloyd
-    rounds (plans/r12/embedding_kmeans_{before,after}.txt).
+    rounds.
 
     The k-row profile goes back to Spark through ``local_frame``: a
     LocalRelation in cluster order, so collecting it starts no job. The

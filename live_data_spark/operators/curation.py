@@ -1353,6 +1353,8 @@ def corpus_lang_source_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = F.sum("n").over(Window.partitionBy())
     # rank-1 markers dedup the per-lang marginal terms inside the single
     # final aggregate (each lang's nl·q term must count once, not per cell)
+    # and count the langs, so the aggregate keeps one distinct group
+    # (source) and plans without an Expand, in one form build to build
     lang_rn = F.row_number().over(Window.partitionBy("lang").orderBy("source"))
     enriched = cell.select(
         "n",
@@ -1374,7 +1376,7 @@ def corpus_lang_source_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         enriched.agg(
             F.sum("n").cast("bigint").alias("n_docs"),
             F.countDistinct("source").cast("bigint").alias("n_sources"),
-            F.countDistinct("lang").cast("bigint").alias("n_langs"),
+            F.count(F.when(F.col("lang_rn") == 1, 1)).cast("bigint").alias("n_langs"),
             F.sum(qcell).cast("bigint").alias("qc"),
             F.sum(F.when(F.col("lang_rn") == 1, qlang)).cast("bigint").alias("ql"),
         )

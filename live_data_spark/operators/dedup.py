@@ -1530,11 +1530,13 @@ def dedup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # broadcast hint: keeps the non-equi inner join a broadcast
     # nested-loop join over the grid, never a CartesianProduct
     f = F.broadcast(grid).join(jac, jac["j"] >= grid["threshold"])
-    # ONE aggregation serves all three counts: explode each pair into
+    # ONE pass serves all three counts: explode each pair into
     # role-tagged (is_left, d) rows so n_pairs (Σ is_left), n_docs
     # (distinct d) and n_removed_greedy (distinct d where right-side)
-    # come out of a single pass — separate pair_agg/doc_agg branches
-    # each re-ran the shingle self-join subtree (4.0 s → 2.3 s at sf0.1).
+    # come out of one (threshold, d) aggregate rolled up per threshold —
+    # separate pair_agg/doc_agg branches each re-ran the shingle
+    # self-join subtree (4.0 s → 2.3 s at sf0.1). Two plain aggregates,
+    # not two COUNT(DISTINCT …): no Expand, so one plan form.
     rows = f.select(
         "threshold",
         F.explode(
@@ -1544,12 +1546,14 @@ def dedup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("r"),
     ).select("threshold", F.col("r.is_left").alias("is_left"), F.col("r.d").alias("d"))
-    agg = rows.groupBy("threshold").agg(
-        F.sum("is_left").alias("n_pairs"),
-        F.countDistinct("d").alias("n_docs"),
-        F.countDistinct(F.when(F.col("is_left") == 0, F.col("d"))).alias(
-            "n_removed_greedy"
-        ),
+    per_doc = rows.groupBy("threshold", "d").agg(
+        F.sum("is_left").alias("n_left"),
+        F.max((F.col("is_left") == 0).cast("int")).alias("removed"),
+    )
+    agg = per_doc.groupBy("threshold").agg(
+        F.sum("n_left").alias("n_pairs"),
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum("removed").alias("n_removed_greedy"),
     )
     return (
         grid.join(F.broadcast(agg), "threshold", "left")

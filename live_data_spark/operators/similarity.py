@@ -86,9 +86,9 @@ def cosine_pandas(a: Column, b: Column) -> Column:
     Catalyst pushes such a filter BELOW the projection while keeping the
     projection too, evaluating the UDF twice per row — two
     ArrowEvalPython nodes for one call, every candidate pair shipping
-    its two 64-double vectors across the Python boundary twice
-    (plans/r12/embedding_neardup_lsh_before.txt nodes 36+39; the
-    optimization guide §4.4 pattern). The fence keeps it to one.
+    its two 64-double vectors across the Python boundary twice (seen
+    in ``embedding_neardup_lsh``'s unfenced plan; the optimization
+    guide §4.4 pattern). The fence keeps it to one.
     """
     import numpy as np
     import pandas as pd

@@ -2798,11 +2798,10 @@ def _hourly_xs(e: DataFrame) -> DataFrame:
     over truncated hours equals ``date_trunc('hour', min(ts))`` by
     monotonicity, and the distinct types are the aggregate's own keys.
     Catalyst specializes each consumer again (RemoveRedundantAggregates
-    + pruning), and the r13 audit against a TRUE r11-tree plan capture
-    (plans/r13/events_holt_winters_{r11tree_before,after}.txt) shows the
-    rewrite is PLAN-NEUTRAL: identical node-type counts (4 Exchange + 2
-    BroadcastExchange both sides) and the r11 scans were already
-    single-column pruned. The r12 write-up's "6 → 4 exchanges /
+    + pruning), and the r13 audit against a plan captured from the r11
+    tree shows the rewrite is PLAN-NEUTRAL: identical node-type counts
+    (4 Exchange + 2 BroadcastExchange both sides) and the r11 scans
+    were already single-column pruned. The r12 write-up's "6 → 4 exchanges /
     un-pruned distinct" claim was wrong, and its 1.19 → 0.92 s delta was
     host noise — the r13 interleaved A/B (one JVM, arms alternated,
     min-of-4 post-codegen) reads old 0.628 s vs new 0.658 s: equal

@@ -10,8 +10,9 @@ module pins what can be checked cheaply:
   additions may precede the next rewrite; forgetting it entirely fails);
 - ``flag_entries`` as a pure function;
 - the measurement itself at sf0.001: a repeat reads identical exact
-  counters, a planted extra exchange is flagged, and a map-only entry
-  reads zero shuffle bytes;
+  counters, a planted extra exchange is flagged (in stages and in the
+  plan's exchange count), and a map-only entry reads zero shuffle bytes
+  from a plan with two broadcasts and no shuffle exchange;
 - a core-count mismatch refuses before any Spark session starts.
 """
 
@@ -116,6 +117,7 @@ def test_measure_repeats_exactly_and_flags_a_planted_exchange(spark, sf_dir, tra
     flagged = ps.flag_entries({"entries": {name: first}}, {"entries": {name: moved}})
     assert list(flagged) == [name]
     assert any(m.startswith("stages ") for m in flagged[name]), flagged
+    assert "exchanges 1 -> 2" in flagged[name], flagged
 
 
 def test_map_only_fact_reads_zero_shuffle_bytes(spark, sf_dir, tracer):
@@ -127,8 +129,7 @@ def test_map_only_fact_reads_zero_shuffle_bytes(spark, sf_dir, tracer):
     spec = catalog()[name]
     rec = ps.measure(tracer, spark, name, spec, sf_dir)
     assert rec["shuffle_bytes"] == 0, rec
-    df = spec.spark(spark, sf_dir)
-    assert "BroadcastHashJoin" in df._jdf.queryExecution().executedPlan().toString()
+    assert (rec["exchanges"], rec["broadcasts"]) == (0, 2), rec
 
 
 def test_check_at_other_parallelism_exits_2_before_spark(tmp_path, monkeypatch, capsys):
