@@ -158,11 +158,11 @@ def table_bytes(sf_dir: str, table: str) -> int:
     return _table_state(sf_dir, table)[1][1]
 
 
-# Budget for the gates that pick between two ALGORITHMS for one result:
-# the exchange-free pair plan (gated_pair_sides), the collected-edge
-# driver arms (edges_fit_gate) and similarity's re-score matrix. 32 MiB
-# of compressed parquet ≈ low-hundreds of MB deserialized — safely inside
-# executor/driver budgets at production settings. Join strategy is not
+# Budget for the gates that pick between a driver arm and a distributed
+# arm for one result: the collected-edge driver arms (edges_fit_gate)
+# and similarity's re-score matrix. 32 MiB of compressed parquet ≈
+# low-hundreds of MB deserialized — safely inside executor/driver
+# budgets at production settings. Join strategy is not
 # gated here: Spark's autoBroadcastJoinThreshold (64 MB, session.py) and
 # AQE size joins from the plan's own statistics, and plain F.broadcast is
 # kept for fixed-domain frames only (nation/region, grids, 1-row
@@ -188,70 +188,20 @@ def edges_fit_gate(n_edges: int) -> bool:
     return n_edges * EDGE_BYTES <= BROADCAST_GATE_BYTES
 
 
-def gated_pair_sides(
-    df: DataFrame, sf_dir: str, rows_per_base: int
-) -> tuple[DataFrame, DataFrame]:
+def pair_sides(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     """("a", "b") aliased sides for a candidate-heavy SELF-join of a
-    per-document frame (``rows_per_base`` rows per ``documents`` row,
-    keyed by ``doc_id``), with the exchange-free pair plan applied while
-    the frame passes the broadcast gate (the shared shape of
-    text_sparse_cosine_topk and dedup_simhash; 3.6×/1.5× measured at
-    sf0.1):
+    per-document frame keyed by ``doc_id`` (the shared shape of
+    text_sparse_cosine_topk and dedup_simhash).
 
-    - gate OPEN (documents rowcount × ``rows_per_base`` × 40 B under
-      ``BROADCAST_GATE_BYTES``): hash-partition the probe side by
-      ``doc_id`` and BROADCAST the build side. The downstream pair
-      aggregate/dedup keys (a.key, b.key) are then already clustered by
-      a.key, so the multi-million-row pair stream aggregates IN PLACE —
-      no pair-level exchange, which is where the SMJ shape spends ~70%
-      of its time on collision-rich corpora. The frame is persisted
-      (default MEMORY_AND_DISK_DESER) because a broadcast build side
-      cannot ReuseExchange the probe side's shuffle subtree — without
-      the pin the signature subtree recomputes once per use (measured
-      SLOWER than the SMJ baseline). The caller returns a lazy frame,
-      so there is no post-action unpersist hook; instead residency is
-      bounded by a small LRU (``_PAIR_CACHE_MAX`` plans, deduped by
-      semantic hash so re-invoking one entry reuses its slot): when a
-      third distinct pair plan persists, the oldest unpersists, so the
-      session-wide bound is ``_PAIR_CACHE_MAX × BROADCAST_GATE_BYTES``
-      regardless of how many entries share this helper.
-    - gate CLOSED (huge corpus): the plain self-join shape — SMJ with
-      exchange-reused subtrees, pair aggregate with its own shuffle.
-      Slower constants, but nothing is ever driver- or cache-resident.
-
-    Plan arms pinned in test_sparse_cosine_pair_agg_needs_no_exchange
-    and the simhash twin. Persist substitution is plan-based (Spark's
-    CacheManager), so sibling frames built from the caller's original
-    ``df`` lineage also read the cache."""
-    from pyspark.sql import functions as F
-
-    # ~40 B per pair-build row; the gate is read at CALL time so the
-    # gate-closed sweep can force it shut
-    if table_rowcount(sf_dir, "documents") * rows_per_base * 40 <= BROADCAST_GATE_BYTES:
-        df = df.persist()
-        app_id = df.sparkSession.sparkContext.applicationId
-        # Entries from a stopped SparkSession hold frames bound to a dead
-        # context: they can't be unpersisted (the eviction call would
-        # raise into the first gated call of the NEW session) and they
-        # squat the LRU slots, so purge them on app change — their cached
-        # blocks died with the old context anyway.
-        for stale_key in [k for k in _PAIR_CACHE if k[0] != app_id]:
-            stale = _PAIR_CACHE.pop(stale_key)
-            try:
-                stale.unpersist(blocking=False)
-            except Exception:
-                pass  # frame belongs to a stopped context
-        key = (app_id, df.semanticHash())
-        _PAIR_CACHE.pop(key, None)  # re-invocation: refresh LRU position
-        _PAIR_CACHE[key] = df
-        while len(_PAIR_CACHE) > _PAIR_CACHE_MAX:
-            _PAIR_CACHE.pop(next(iter(_PAIR_CACHE))).unpersist(blocking=False)
-        return df.repartition("doc_id").alias("a"), F.broadcast(df.alias("b"))
-    return df.alias("a"), df.alias("b")
-
-
-# LRU of persisted pair-build frames, keyed by (applicationId, semantic
-# hash) — the appId factor scopes entries to the live SparkSession (see
-# gated_pair_sides): bounds cache residency to MAX × gate per session.
-_PAIR_CACHE: dict[tuple[str, int], DataFrame] = {}
-_PAIR_CACHE_MAX = 2
+    The probe side is hash-partitioned by ``doc_id`` into the session's
+    ``defaultParallelism`` partitions; the build side is the plain frame.
+    AQE coalesces a small unnumbered shuffle into one partition, which
+    would run the whole candidate fan-out in a single task; a numbered
+    repartition it keeps. When AQE then broadcasts ``b`` (Spark's own
+    64 MB threshold), HashPartitioning(a.doc_id) already clusters the
+    downstream (a.doc_id, b.doc_id) pair aggregate, so the pair stream
+    aggregates on the join output with no pair-level exchange. Above the
+    threshold the same sides plan as a sort-merge join. No hint, no
+    persist: nothing stays cached in the session."""
+    n = df.sparkSession.sparkContext.defaultParallelism
+    return df.repartition(n, "doc_id").alias("a"), df.alias("b")

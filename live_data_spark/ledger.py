@@ -408,6 +408,10 @@ CHANGED_SINCE_CHECK: tuple[str, ...] = (
     #   one plan form (rows equal at sf0.1, oracle parity green);
     #   dedup_threshold_curve, reshaped the same way, is listed above:
     "corpus_lang_source_entropy",
+    #   (one self-join plan) the pair sides lost their size gate, persist
+    #   and session cache (rows equal at sf0.1, oracle parity green);
+    #   text_sparse_cosine_topk, reshaped the same way, is listed above:
+    "dedup_simhash",
 )
 
 # Within the already-checked class, re-verify these ahead of their round

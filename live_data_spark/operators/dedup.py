@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from live_data_spark.catalog import load, register
+from live_data_spark.catalog import load, pair_sides, register
 from live_data_spark.operators.text import fingerprint, normalized_text
 from live_data_spark.session import local_frame
 
@@ -461,15 +461,12 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("band", "bucket"),
     )
-    # Exchange-free pair plan while the bands table (SIMHASH_BANDS
-    # rows/doc of three longs) passes the broadcast gate — the candidate
-    # dropDuplicates keys (doc_id_1, doc_id_2) dedup in place with no
-    # pair-level exchange (the hot spot: collision-rich 12-bit buckets
-    # on a degenerate corpus). Shared shape: catalog.gated_pair_sides
-    # (plan arms + persist rationale in its docstring).
-    from live_data_spark.catalog import gated_pair_sides
-
-    a, b = gated_pair_sides(bands, sf_dir, SIMHASH_BANDS)
+    # Probe side partitioned by doc_id, build side broadcast by AQE: the
+    # candidate dropDuplicates keys (doc_id_1, doc_id_2) dedup on the
+    # join output with no pair-level exchange (the hot spot:
+    # collision-rich 12-bit buckets on a degenerate corpus). Shared
+    # shape: catalog.pair_sides.
+    a, b = pair_sides(bands)
     cand = (
         a.join(
             b,

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from live_data_spark.catalog import gated_pair_sides, load, register
+from live_data_spark.catalog import load, pair_sides, register
 from live_data_spark.session import local_frame
 
 # ---------------------------------------------------------------------------
@@ -2266,11 +2266,12 @@ def text_sparse_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle pays the same quadratic, hence the sweep HEAVY listing).
     That is the exact tier doing exact work on a pathological
     vocabulary: with a real corpus vocabulary (10⁵+), signature df
-    collapses and the identical plan is near-linear. The gated
-    broadcast+copartition pair plan (see inline comment) cuts the
-    degenerate case 3.6× (33 s → 9 s at sf0.1) by deleting the
-    pair-level exchange; the sketch rungs (dedup_simhash /
-    dedup_minhash) remain the volume path either way.
+    collapses and the identical plan is near-linear. The pair plan
+    (catalog.pair_sides) keeps the candidate fan-out on one task per
+    core: left to AQE, the small signature shuffle coalesces into one
+    partition and the whole fan-out runs in a single task (first runs
+    at sf0.1 on 4 cores: 41 s against 20 s). The sketch rungs
+    (dedup_simhash / dedup_minhash) remain the volume path either way.
     """
     from pyspark.sql import Window
 
@@ -2298,11 +2299,10 @@ def text_sparse_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sig = w.withColumn("rk", rk).where(F.col("rk") <= SPARSE_SIG_TERMS).drop("rk")
     qq = lambda c: F.floor(c * 1000000 + 0.5).cast("bigint")  # noqa: E731
-    # Exchange-free pair plan, gated on the signature table's broadcast
-    # cost (docs × SPARSE_SIG_TERMS rows of ~(long, short term, double))
-    # — the shared shape lives in catalog.gated_pair_sides; see its
-    # docstring for both plan arms and the persist rationale.
-    a, b = gated_pair_sides(sig, sf_dir, SPARSE_SIG_TERMS)
+    # Probe side partitioned by doc_id, build side broadcast by AQE: the
+    # pair aggregate runs on the join output with no pair-level exchange
+    # — the shared shape lives in catalog.pair_sides.
+    a, b = pair_sides(sig)
     nrm = sig.groupBy("doc_id").agg(F.sum(qq(F.col("w") * F.col("w"))).alias("qn"))
     dots = (
         a.join(

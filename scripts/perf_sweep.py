@@ -25,10 +25,11 @@ warm-up. The span's counters are the entry's record:
 - informational: ``jvm_cpu_s`` (executor CPU) and ``sec`` (wall). Both
   move with host load; CPU gets only a loose check, wall none.
 
-Only the entry's first run is recorded. Some entries persist a frame that
-a later run reuses (``catalog.gated_pair_sides``), which changes their
-stage and byte counts; a fixed order in a fresh session makes the first
-run reproducible.
+Only the entry's first run is recorded. Some entries memoize a
+driver-side fit for the session (``classifier._FIT_CACHE``,
+``tokenizer._TRAIN_CACHE``), so a later run skips the fit's jobs and
+reads fewer stages and bytes; a fixed order in a fresh session makes the
+first run reproducible.
 
 Usage:
     python scripts/perf_sweep.py            # measure and REWRITE the artifact

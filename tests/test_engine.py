@@ -797,9 +797,9 @@ def test_fct_write_metrics_observed(project):
 def test_scripts_import_standalone():
     """Every scripts/ tool must import OUTSIDE pytest: pytest puts
     tests/conftest on sys.path, so a script importing test helpers can be
-    green in the suite yet crash when actually invoked (sweep_sf01 broke
-    exactly this way when the canonicalizer moved into conftest — found
-    at the round-8 gate, not by the suite). Import each script in a bare
+    green in the suite yet crash when actually invoked (a sweep script
+    broke exactly this way when the canonicalizer moved into conftest —
+    found at the round-8 gate, not by the suite). Import each script in a bare
     subprocess; module level must not start Spark, so this stays cheap."""
     import subprocess
     import sys

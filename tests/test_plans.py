@@ -13,7 +13,7 @@ import re
 
 from pyspark.sql import functions as F
 
-from live_data_spark.catalog import catalog, load
+from live_data_spark.catalog import catalog
 
 
 def _plan(df) -> str:
@@ -306,15 +306,12 @@ def test_table_metadata_tracks_rewrites(spark, tmp_path):
 
 
 def test_sparse_cosine_pair_agg_needs_no_exchange(spark, sf_dir):
-    """text_sparse_cosine_topk's gated pair plan: the probe side is
-    hash-partitioned by doc_id and the build side broadcasts, so the
-    pair-level aggregate — the 10M+-row hot spot on a degenerate
-    vocabulary — runs IN PLACE on the join output (HashPartitioning on
-    a.doc_id satisfies the (a.doc_id, b.doc_id) clustering). A
-    reintroduced pair exchange is the 3.6× regression this pins against.
-    The persisted signature (InMemoryTableScan) is load-bearing too: a
-    broadcast build side cannot ReuseExchange the probe's shuffle
-    subtree, so without the pin the tf-idf window recomputes per use."""
+    """text_sparse_cosine_topk's pair plan (catalog.pair_sides): the
+    probe side is hash-partitioned by doc_id and AQE broadcasts the
+    build side, so the pair-level aggregate — the 10M+-row hot spot on a
+    degenerate vocabulary — runs IN PLACE on the join output
+    (HashPartitioning on a.doc_id satisfies the (a.doc_id, b.doc_id)
+    clustering)."""
     df = catalog()["text_sparse_cosine_topk"].spark(spark, sf_dir)
     df.collect()  # AQE: read the final plan
     plan = _plan(df)
@@ -330,130 +327,13 @@ def test_sparse_cosine_pair_agg_needs_no_exchange(spark, sf_dir):
     join_at = plan.index("BroadcastHashJoin [term#", agg_at)
     between = plan[agg_at:join_at]
     assert "Exchange" not in between, "pair aggregate re-shuffles the pair stream"
-    assert "InMemoryTableScan" in plan, "signature frame is not persisted"
-
-
-def test_gated_pair_sides_closed_arm_identical(spark, sf_dir, monkeypatch):
-    """The helper's gate-CLOSED arm (the one a huge corpus actually
-    runs): forcing the gate shut (BROADCAST_GATE_BYTES patched to −1)
-    must return plain aliased sides — no persist, no probe repartition —
-    and the pair aggregate over them must produce results identical to
-    the open arm's exchange-free plan."""
-    import live_data_spark.catalog as cat
-
-    sig = (
-        load(spark, sf_dir, "documents")
-        .select("doc_id", F.split(F.lower("text"), " ")[0].alias("term"))
-        .where(F.length("term") > 0)
-    )
-
-    def pairs(a, b):
-        return (
-            a.join(
-                b,
-                (F.col("a.term") == F.col("b.term"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .groupBy(
-                F.col("a.doc_id").alias("doc_id_1"),
-                F.col("b.doc_id").alias("doc_id_2"),
-            )
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-
-    opened = pairs(*cat.gated_pair_sides(sig, sf_dir, 1))
-    monkeypatch.setattr(cat, "BROADCAST_GATE_BYTES", -1)
-    closed = pairs(*cat.gated_pair_sides(sig, sf_dir, 1))
-    closed_plan = _plan(closed)
-    assert "REPARTITION_BY_COL" not in closed_plan  # no probe pre-partition
-    got_open = sorted(tuple(r) for r in opened.collect())
-    got_closed = sorted(tuple(r) for r in closed.collect())
-    assert got_open == got_closed and got_open  # identical, non-trivial
-
-
-def test_gated_pair_sides_cache_residency_is_lru_bounded(spark, sf_dir):
-    """The open arm persists its build frame (a broadcast build side
-    can't ReuseExchange the probe's subtree), and the caller returns a
-    lazy frame — no unpersist hook. The residency bound must therefore
-    come from the helper itself: at most _PAIR_CACHE_MAX distinct pair
-    plans stay persisted (oldest unpersists), and re-invoking the SAME
-    plan reuses its slot instead of consuming a new one."""
-    from live_data_spark import catalog as cat
-
-    for df in cat._PAIR_CACHE.values():  # don't orphan earlier tests' pins
-        df.unpersist(blocking=False)
-    cat._PAIR_CACHE.clear()
-    base = load(spark, sf_dir, "documents")
-
-    def sig(k):
-        return base.select(
-            "doc_id", F.substring(F.lower("text"), 1, k).alias("term")
-        )
-
-    persisted = {}  # k -> (semantic hash, the helper's persisted frame)
-    for k in (3, 4, 5):
-        cat.gated_pair_sides(sig(k), sf_dir, 1)
-        seen = {h for h, _ in persisted.values()}
-        new = [h for h in cat._PAIR_CACHE if h not in seen]
-        assert len(new) == 1
-        persisted[k] = (new[0], cat._PAIR_CACHE[new[0]])
-        assert len(cat._PAIR_CACHE) <= cat._PAIR_CACHE_MAX
-
-    def is_persisted(df):
-        return df.storageLevel.useMemory or df.storageLevel.useDisk
-
-    # the oldest (k=3) was evicted AND unpersisted; the two newest remain
-    assert persisted[3][0] not in cat._PAIR_CACHE
-    assert not is_persisted(persisted[3][1])
-    assert is_persisted(persisted[4][1]) and is_persisted(persisted[5][1])
-    # re-invoking an already-cached plan reuses its slot — no eviction
-    cat.gated_pair_sides(sig(5), sf_dir, 1)
-    assert set(cat._PAIR_CACHE) == {persisted[4][0], persisted[5][0]}
-    assert is_persisted(persisted[4][1])
-    for df in cat._PAIR_CACHE.values():
-        df.unpersist(blocking=False)
-    cat._PAIR_CACHE.clear()
-
-
-def test_gated_pair_sides_purges_dead_session_entries(spark, sf_dir):
-    """Cache entries keyed to a STOPPED SparkSession hold frames whose
-    context is gone: an LRU eviction calling their unpersist() would
-    raise into the first gated call of the new session, and the dead
-    entries squat the two LRU slots. The helper must purge other-app
-    entries without raising and key its own under the live appId."""
-    from live_data_spark import catalog as cat
-
-    class DeadFrame:
-        def unpersist(self, blocking=False):
-            raise RuntimeError("Cannot call methods on a stopped SparkContext")
-
-    for df in cat._PAIR_CACHE.values():  # don't orphan earlier tests' pins
-        df.unpersist(blocking=False)
-    cat._PAIR_CACHE.clear()
-    cat._PAIR_CACHE[("app-dead", 1)] = DeadFrame()
-    cat._PAIR_CACHE[("app-dead", 2)] = DeadFrame()
-
-    base = load(spark, sf_dir, "documents").select(
-        "doc_id", F.substring(F.lower("text"), 1, 3).alias("term")
-    )
-    cat.gated_pair_sides(base, sf_dir, 1)  # must not raise
-    app = spark.sparkContext.applicationId
-    assert set(cat._PAIR_CACHE) != set() and all(
-        k[0] == app for k in cat._PAIR_CACHE
-    )
-    for df in cat._PAIR_CACHE.values():
-        df.unpersist(blocking=False)
-    cat._PAIR_CACHE.clear()
 
 
 def test_simhash_pair_dedup_needs_no_exchange(spark, sf_dir):
-    """dedup_simhash's side of the shared gated pair plan
-    (catalog.gated_pair_sides): the candidate dropDuplicates — a
-    (doc_id_1, doc_id_2)-keyed aggregate over the band-bucket self-join's
-    fan-out — must run directly on the join output with no pair-level
-    exchange, and the persisted bands frame must appear as an
-    InMemoryTableScan (a broadcast build side can't ReuseExchange the
-    probe's shuffle subtree; without the pin the sketch recomputes)."""
+    """dedup_simhash's side of the shared pair plan (catalog.pair_sides):
+    the candidate dropDuplicates — a (doc_id_1, doc_id_2)-keyed
+    aggregate over the band-bucket self-join's fan-out — must run
+    directly on the join output with no pair-level exchange."""
     df = catalog()["dedup_simhash"].spark(spark, sf_dir)
     df.collect()
     plan = _plan(df)
@@ -462,4 +342,13 @@ def test_simhash_pair_dedup_needs_no_exchange(spark, sf_dir):
     join_at = plan.index("BroadcastHashJoin [band#", m.start())
     between = plan[m.start():join_at]
     assert "Exchange" not in between, "candidate dedup re-shuffles the pair stream"
-    assert "InMemoryTableScan" in plan, "bands frame is not persisted"
+
+
+def test_pair_entries_leave_nothing_cached(spark, sf_dir):
+    """The pair-plan entries persist nothing: after running both, the
+    session's CacheManager holds no plan, so no frame outlives its
+    query."""
+    spark.catalog.clearCache()
+    for name in ("dedup_simhash", "text_sparse_cosine_topk"):
+        assert catalog()[name].spark(spark, sf_dir).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
