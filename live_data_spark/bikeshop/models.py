@@ -37,11 +37,11 @@ from live_data_spark.plans import (
 )
 
 
-def register_sources(project: Project, raw_root: str, fmt: str = "parquet") -> None:
+def register_sources(project: Project, raw_root: str) -> None:
     """Declare the four raw tables (models/sources/_bike_shop.yml:3-55)."""
     for table, schema in RAW_SCHEMAS.items():
         project.add_source(
-            SourceDef("bike_shop", table, f"{raw_root}/{table}", schema=schema, fmt=fmt)
+            SourceDef("bike_shop", table, f"{raw_root}/{table}", schema=schema)
         )
 
 
@@ -261,10 +261,10 @@ def register_tests(project: Project) -> None:
         project.add_test(t)
 
 
-def build_project(spark, warehouse_dir: str, raw_root: str, fmt: str = "parquet") -> Project:
+def build_project(spark, warehouse_dir: str, raw_root: str) -> Project:
     """Assemble the full bike-shop project (sources + models + tests)."""
     project = Project(spark, warehouse_dir=warehouse_dir)
-    register_sources(project, raw_root, fmt=fmt)
+    register_sources(project, raw_root)
     register_models(project)
     register_tests(project)
     return project

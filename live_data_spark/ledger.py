@@ -412,6 +412,10 @@ CHANGED_SINCE_CHECK: tuple[str, ...] = (
     #   and session cache (rows equal at sf0.1, oracle parity green);
     #   text_sparse_cosine_topk, reshaped the same way, is listed above:
     "dedup_simhash",
+    #   (one incremental-store core) the store classification moved into
+    #   classify_against_store, shared with the streaming twin (oracle
+    #   parity green at sf0.001 and sf0.01):
+    "dedup_incremental",
 )
 
 # Within the already-checked class, re-verify these ahead of their round

@@ -1093,6 +1093,31 @@ FROM cls GROUP BY decision
 """
 
 
+def classify_against_store(batch: DataFrame, seen_fps: DataFrame) -> DataFrame:
+    """Classify a batch of ``(doc_id, fp)`` against a fingerprint store:
+    ``(doc_id, fp, decision)`` with decision ``dup_history`` (``fp`` is
+    in ``seen_fps``), ``dup_batch`` (a lower batch doc_id holds the same
+    unseen ``fp``) or ``new``. The store is read as a SET — its ``fp``
+    column goes through ``distinct`` — so a fingerprint appended twice
+    changes no decision. Shared by ``dedup_incremental`` and its
+    streaming twin ``incremental_dedup_stream``.
+    """
+    history = seen_fps.select("fp").distinct().withColumn("seen", F.lit(True))
+    w = Window.partitionBy("fp")
+    return (
+        batch.join(history, "fp", "left")
+        .withColumn("min_batch_id", F.min("doc_id").over(w))
+        .select(
+            "doc_id",
+            "fp",
+            F.when(F.col("seen").isNotNull(), "dup_history")
+            .when(F.col("doc_id") > F.col("min_batch_id"), "dup_batch")
+            .otherwise("new")
+            .alias("decision"),
+        )
+    )
+
+
 @register("dedup_incremental", oracle=_INCR_ORACLE, tags=("dedup", "pipeline"))
 def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental exact dedup: classify an arriving batch against the
@@ -1115,8 +1140,6 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprints append to the store afterward; nothing ever rescans
     ingested text.
     """
-    from pyspark.sql import Window
-
     d = load(spark, sf_dir, "documents").select(
         "doc_id",
         fingerprint("text").alias("fp"),
@@ -1124,19 +1147,8 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             "in_history"
         ),
     )
-    history = d.where("in_history").select("fp").distinct()
-    batch = d.where(~F.col("in_history")).select("doc_id", "fp")
-    w = Window.partitionBy("fp")
-    cls = (
-        batch.join(history.withColumn("seen", F.lit(True)), "fp", "left")
-        .withColumn("min_batch_id", F.min("doc_id").over(w))
-        .select(
-            "doc_id",
-            F.when(F.col("seen").isNotNull(), "dup_history")
-            .when(F.col("doc_id") > F.col("min_batch_id"), "dup_batch")
-            .otherwise("new")
-            .alias("decision"),
-        )
+    cls = classify_against_store(
+        d.where(~F.col("in_history")).select("doc_id", "fp"), d.where("in_history")
     )
     return cls.groupBy("decision").agg(
         F.count(F.lit(1)).alias("n_docs"),

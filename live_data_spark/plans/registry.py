@@ -60,12 +60,6 @@ class SourceDef:
     table: str
     path: str
     schema: StructType | None = None
-    fmt: str = "parquet"
-    # csv-format options (ignored for parquet). Default tab matches the
-    # engine's stage convention; a plain comma-separated seed (reference
-    # S1) registers with sep=",".
-    sep: str = "\t"
-    header: bool = True
 
 
 @dataclass
@@ -82,6 +76,41 @@ class ModelDef:
     n_buckets: int = 0
     observe: dict[str, str] = field(default_factory=dict)  # metric -> agg SQL expr
     deps: set[str] = field(default_factory=set)  # discovered at build time
+
+
+def keep_latest(
+    existing: DataFrame,
+    incoming: DataFrame,
+    unique_key: tuple[str, ...],
+    recency_key: str,
+) -> DataFrame:
+    """Upsert ``incoming`` into ``existing``: per ``unique_key`` the row
+    with the greatest ``recency_key`` wins, an incoming row beating a
+    stored one on ties. Union + ``row_number`` over the key — ONE shuffle
+    on the merge key. Replaying a batch changes nothing (keep-latest is
+    associative and commutative over (recency, src) maxima). The merge
+    behind ``incremental_merge`` and the streaming upsert sink; on an
+    ACID table format it is a MERGE INTO."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    merged = (
+        existing.select(*incoming.columns)
+        .withColumn("__src", F.lit(0))
+        .unionByName(incoming.withColumn("__src", F.lit(1)))
+    )
+    w = Window.partitionBy(*unique_key).orderBy(
+        F.col(recency_key).desc(), F.col("__src").desc()
+    )
+    return (
+        merged.withColumn("__rn", F.row_number().over(w))
+        .where(F.col("__rn") == 1)
+        .drop("__rn", "__src")
+    )
+
+
+def _save_parquet(df: DataFrame, mode: str, out: Path, partition_by: tuple[str, ...]) -> None:
+    df.write.mode(mode).partitionBy(*partition_by).parquet(str(out))
 
 
 class BuildContext:
@@ -196,11 +225,12 @@ class Project:
         ``unique_key`` — the merge strategy) additionally requires
         ``unique_key``: rebuilds upsert — per key the most recent row by
         ``incremental_key`` wins, incoming rows beating existing on
-        ties. Without an ACID table format this is the classic
-        union + row_number-over-key rewrite (one shuffle on the merge
-        key, write-to-temp + atomic swap); on Delta/Iceberg the same
-        model def compiles to MERGE INTO with file skipping, and
-        ``partition_by`` bounds the rewrite either way.
+        ties. Without an ACID table format this is :func:`keep_latest`
+        (union + row_number over the key, one shuffle on the merge key)
+        written through ``files.rewrite_parquet`` (write-to-temp +
+        crash-safe swap, ``partition_by`` kept) — the same two calls the
+        streaming upsert sink makes per micro-batch. On Delta/Iceberg
+        the same model def compiles to MERGE INTO with file skipping.
 
         ``materialized="table_bucketed"`` (requires ``bucket_by`` +
         ``n_buckets``) hash-clusters files by the join key at WRITE time:
@@ -270,12 +300,10 @@ class Project:
         if key not in self._sources:
             raise KeyError(f"source {source_name}.{table} not registered")
         src = self._sources[key]
-        reader = self.spark.read.format(src.fmt)
+        reader = self.spark.read
         if src.schema is not None:
             reader = reader.schema(src.schema)
-        if src.fmt == "csv":
-            reader = reader.option("header", src.header).option("sep", src.sep)
-        return reader.load(src.path)
+        return reader.parquet(src.path)
 
     def build(self, name: str) -> DataFrame:
         """Resolve a model to its DataFrame, building upstreams first.
@@ -367,48 +395,19 @@ class Project:
     def _writer(self, mdef: ModelDef, df: DataFrame) -> Callable[[], DataFrame]:
         """Plan a write materialization of ``df`` on this thread. The
         returned thunk runs its Spark actions and returns the read-back
-        relation. An incremental model's high watermark is read here: the
-        filter it sets must be on the plan."""
+        relation. Each materialization decides only the frame to write
+        and how to write it; an incremental model's high watermark and a
+        merge's stored table are read here, as both shape the plan."""
         out = self._table_path(mdef)
         cols = df.columns
+        save = partial(_save_parquet, mode="overwrite", out=out, partition_by=mdef.partition_by)
 
-        def read_back(written: DataFrame) -> DataFrame:
-            # the written frame's schema spares the footer-reading job that
-            # schema inference runs; Spark reads every field as nullable,
-            # as inference would. Hive layout moves partition columns last
-            # on read-back; re-select so the model's declared column order
-            # is the contract
-            return self.spark.read.schema(written.schema).parquet(str(out)).select(*cols)
-
-        if mdef.materialized == "table":
-            df, obs = self._attach_observation(mdef, df)
-
-            def write() -> DataFrame:
-                self._write_parquet(mdef, df, "overwrite", out)
-                return read_back(df)
-
-        elif mdef.materialized == "table_bucketed":
-            cat_name = f"{self.env}_{mdef.schema}_{mdef.name}"
-            df, obs = self._attach_observation(mdef, df)
-
-            def write() -> DataFrame:
-                self.spark.sql(f"DROP TABLE IF EXISTS {cat_name}")
-                shutil.rmtree(out, ignore_errors=True)
-                (
-                    df.write.mode("overwrite")
-                    .bucketBy(mdef.n_buckets, *mdef.bucket_by)
-                    .sortBy(*mdef.bucket_by)
-                    .option("path", str(out))
-                    .saveAsTable(cat_name)
-                )
-                # read via the catalog — spark.read.parquet(path) would lose
-                # the bucket spec and re-shuffle on join
-                return self.spark.table(cat_name).select(*cols)
+        if mdef.materialized == "table_bucketed":
+            save = partial(self._save_bucketed, mdef, out)
 
         elif mdef.materialized == "incremental":
             from pyspark.sql import functions as F
 
-            mode = "overwrite"
             if (out / "_SUCCESS").exists():
                 existing = self.spark.read.parquet(str(out))
                 hwm = existing.agg(F.max(mdef.incremental_key)).collect()[0][0]
@@ -416,76 +415,60 @@ class Project:
                     # the filter lands on the lazy plan → pushed through
                     # to the model's source scans (row-group pruning)
                     df = df.where(F.col(mdef.incremental_key) > F.lit(hwm))
-                mode = "append"
-            # observed frame = the increment being appended, so
-            # metrics describe THIS build's written rows
-            df, obs = self._attach_observation(mdef, df)
+                save = partial(save, mode="append")
 
-            def write() -> DataFrame:
-                self._write_parquet(mdef, df, mode, out)
-                return read_back(df)
-
-        else:  # incremental_merge
-            from pyspark.sql import Window
-            from pyspark.sql import functions as F
+        elif mdef.materialized == "incremental_merge":
+            from live_data_spark.sources.files import recover_swapped_dir, rewrite_parquet
 
             # heal a swap a prior build may have left interrupted (the
             # table then lives in the backup dir; the _SUCCESS probe
             # below would otherwise silently reinitialize from this
             # batch alone)
-            from live_data_spark.sources.files import recover_swapped_dir, swap_dir
-
             recover_swapped_dir(out)
             if (out / "_SUCCESS").exists():
-                existing = self.spark.read.parquet(str(out)).select(*cols)
-                # upsert = union + keep-latest per key: ONE shuffle on the
-                # merge key; incoming (__src=1) beats existing on recency
-                # ties. Writes to a temp dir then swaps — the target can't
-                # be overwritten while its scan feeds the plan, and the
-                # swap is the crash-recoverable two-rename form (never
-                # rmtree-then-rename, whose kill window loses the table).
-                merged = existing.withColumn("__src", F.lit(0)).unionByName(
-                    df.withColumn("__src", F.lit(1))
-                )
-                w = Window.partitionBy(*mdef.unique_key).orderBy(
-                    F.col(mdef.incremental_key).desc(), F.col("__src").desc()
-                )
-                latest = (
-                    merged.withColumn("__rn", F.row_number().over(w))
-                    .where(F.col("__rn") == 1)
-                    .drop("__rn", "__src")
-                )
-                tmp = out.parent / f"{out.name}.__merge_tmp"
-                # observed frame = the full post-merge table (that IS the
-                # frame this write evaluates)
-                latest, obs = self._attach_observation(mdef, latest)
+                existing = self.spark.read.parquet(str(out))
+                df = keep_latest(existing, df, mdef.unique_key, mdef.incremental_key)
+            # a merge reads out, so the table is rewritten beside it and
+            # swapped in, never overwritten in place
+            save = partial(rewrite_parquet, out=out, partition_by=mdef.partition_by)
 
-                def write() -> DataFrame:
-                    shutil.rmtree(tmp, ignore_errors=True)
-                    self._write_parquet(mdef, latest, "overwrite", tmp)
-                    swap_dir(tmp, out)
-                    return read_back(latest)
+        # observed frame = the frame this write evaluates: the whole
+        # table, the appended increment or the post-merge table
+        df, obs = self._attach_observation(mdef, df)
 
+        def write() -> DataFrame:
+            save(df)
+            if mdef.materialized == "table_bucketed":
+                # read via the catalog — spark.read.parquet(path) would
+                # lose the bucket spec and re-shuffle on join
+                written = self.spark.table(self._qualified_name(mdef))
             else:
-                df, obs = self._attach_observation(mdef, df)
-
-                def write() -> DataFrame:
-                    self._write_parquet(mdef, df, "overwrite", out)
-                    return read_back(df)
-
-        def write_and_harvest() -> DataFrame:
-            written = write()
+                # the written frame's schema spares the footer-reading job
+                # that schema inference runs; Spark reads every field as
+                # nullable, as inference would
+                written = self.spark.read.schema(df.schema).parquet(str(out))
             self._harvest_observation(mdef, obs)
-            return written
+            # Hive layout moves partition columns last on read-back;
+            # re-select so the model's declared column order is the contract
+            return written.select(*cols)
 
-        return write_and_harvest
+        return write
 
-    @staticmethod
-    def _write_parquet(mdef: ModelDef, df: DataFrame, mode: str, path: Path) -> None:
-        writer = df.write.mode(mode)
-        if mdef.partition_by:
-            writer = writer.partitionBy(*mdef.partition_by)
-        writer.parquet(str(path))
+    def _save_bucketed(self, mdef: ModelDef, out: Path, df: DataFrame) -> None:
+        cat_name = self._qualified_name(mdef)
+        self.spark.sql(f"DROP TABLE IF EXISTS {cat_name}")
+        shutil.rmtree(out, ignore_errors=True)
+        (
+            df.write.mode("overwrite")
+            .bucketBy(mdef.n_buckets, *mdef.bucket_by)
+            .sortBy(*mdef.bucket_by)
+            .option("path", str(out))
+            .saveAsTable(cat_name)
+        )
+
+    def _qualified_name(self, mdef: ModelDef) -> str:
+        # the env-prefixed name a model's catalog table and observations carry
+        return f"{self.env}_{mdef.schema}_{mdef.name}"
 
     def _attach_observation(self, mdef: ModelDef, df: DataFrame):
         """Wrap the about-to-be-written frame with ``df.observe`` metrics.
@@ -502,7 +485,7 @@ class Project:
         from pyspark.sql import functions as F
 
         self._obs_seq += 1
-        obs = Observation(f"{self.env}_{mdef.schema}_{mdef.name}_{self._obs_seq}")
+        obs = Observation(f"{self._qualified_name(mdef)}_{self._obs_seq}")
         return (
             df.observe(obs, *[F.expr(e).alias(k) for k, e in mdef.observe.items()]),
             obs,
@@ -620,7 +603,7 @@ class Project:
         """
         return {
             "sources": [
-                {"source": s.source_name, "table": s.table, "path": s.path, "format": s.fmt}
+                {"source": s.source_name, "table": s.table, "path": s.path}
                 for s in self._sources.values()
             ],
             "models": [

@@ -53,14 +53,13 @@ DEFAULT_APP_NAME = "live_data_spark"
 
 def get_spark(
     app_name: str = DEFAULT_APP_NAME,
-    master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Create (or fetch) a SparkSession with the engine's standard config.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` locally; on a real
-    cluster leave it unset and submit via spark-submit/YARN/K8s.
+    The master is ``local[$SPARK_GRAFT_CPUS]``; with ``SPARK_MASTER`` set
+    (a real cluster) it is left to spark-submit/YARN/K8s.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = (
@@ -80,9 +79,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.python.daemon.module", "live_data_spark.worker_daemon")
     )
-    if master is not None:
-        builder = builder.master(master)
-    elif not os.environ.get("SPARK_MASTER"):
+    if not os.environ.get("SPARK_MASTER"):
         builder = builder.master(f"local[{cpus}]")
     if shuffle_partitions is not None:
         builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))

@@ -93,6 +93,7 @@ def clean_dir(path: str) -> None:
 # -- recoverable directory swap ----------------------------------------------
 
 _SWAP_BAK_SUFFIX = ".__swap_bak"
+_REWRITE_TMP_SUFFIX = ".__rewrite_tmp"
 
 
 def recover_swapped_dir(out: str | Path) -> None:
@@ -134,6 +135,21 @@ def swap_dir(tmp: str | Path, out: str | Path) -> None:
     shutil.rmtree(bak, ignore_errors=True)
 
 
+def rewrite_parquet(df: DataFrame, out: str | Path, partition_by: tuple[str, ...] = ()) -> None:
+    """Replace the parquet table at ``out`` with ``df``, crash-safe: write
+    to a temp dir beside ``out`` (dropping one a killed rewrite left),
+    then :func:`swap_dir` it in. ``df`` may read ``out`` itself — a merge
+    of the stored table with a batch — which an in-place overwrite would
+    truncate before its scan runs. The one write-to-temp + swap in the
+    package; callers run :func:`recover_swapped_dir` before they read
+    ``out``."""
+    out = Path(out)
+    tmp = out.parent / (out.name + _REWRITE_TMP_SUFFIX)
+    shutil.rmtree(tmp, ignore_errors=True)
+    df.write.mode("overwrite").partitionBy(*partition_by).parquet(str(tmp))
+    swap_dir(tmp, out)
+
+
 def compact_parquet(
     spark: SparkSession, path: str, target_file_bytes: int = 128 * 1024 * 1024
 ) -> int:
@@ -142,10 +158,9 @@ def compact_parquet(
     Streaming-sink hygiene: micro-batch appends (landing_append_stream,
     foreachBatch sinks) produce one file per trigger per partition, and at
     100 TB a table read pays per-file open/footer costs — periodic
-    compaction to ~``target_file_bytes`` files keeps scans fast. Rewrite
-    is write-to-temp + directory swap so readers never see a half-written
-    table; the swap is atomic on POSIX renames (object stores: swap via
-    table-format commit instead — this utility is the file-layout core).
+    compaction to ~``target_file_bytes`` files keeps scans fast. The
+    rewrite goes through :func:`rewrite_parquet`, so readers never see a
+    half-written table and a killed compaction loses nothing.
 
     Local-filesystem sizing (pathlib); an HDFS/S3 deploy swaps the size
     probe for the Hadoop FileSystem API without changing the rewrite.
@@ -160,10 +175,7 @@ def compact_parquet(
     if len(parts) <= n_files:
         return len(parts)
 
-    df = spark.read.parquet(str(root))
-    tmp = root.with_name(root.name + "__compact_tmp")
-    df.repartition(n_files).write.mode("overwrite").parquet(str(tmp))
-    swap_dir(tmp, root)
+    rewrite_parquet(spark.read.parquet(str(root)).repartition(n_files), root)
     return len(list(root.rglob("*.parquet")))
 
 

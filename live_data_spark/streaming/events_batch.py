@@ -2184,22 +2184,11 @@ def incremental_rollup_update(
     # 3. swap the touched groups in the rollup store (healing a swap a
     # prior repair may have left interrupted — the store then lives in
     # the backup dir and the read below would otherwise fail)
-    from live_data_spark.sources.files import recover_swapped_dir
+    from live_data_spark.sources.files import recover_swapped_dir, rewrite_parquet
 
     recover_swapped_dir(rollup_dir)
-    current = spark.read.parquet(rollup_dir)
-    kept = current.where(~SF.col("window_start").isin(touched))
-    out = kept.unionByName(fresh)
-    import shutil
-    from pathlib import Path
-
-    from live_data_spark.sources.files import swap_dir
-
-    rd = Path(rollup_dir)
-    tmp = rd.parent / f"{rd.name}.__repair_tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    out.write.mode("overwrite").parquet(str(tmp))
-    swap_dir(tmp, rd)
+    kept = spark.read.parquet(rollup_dir).where(~SF.col("window_start").isin(touched))
+    rewrite_parquet(kept.unionByName(fresh), rollup_dir)
     return touched
 
 

@@ -701,9 +701,10 @@ def incremental_dedup_stream(
     append the new fingerprints to the store — continuously-ingested-corpus
     dedup as one restart-safe ``foreachBatch`` job.
 
-    Semantics inside each batch mirror the batch operator exactly: a store
-    hit is ``dup_history``; within the batch the min-doc_id holder of a
-    previously-unseen fingerprint is ``new`` and the rest ``dup_batch``.
+    Each batch is classified by ``classify_against_store``, the batch
+    operator's own classification: a store hit is ``dup_history``; within
+    the batch the min-doc_id holder of a previously-unseen fingerprint is
+    ``new`` and the rest ``dup_batch``.
 
     Guarantees: the file source's checkpoint WAL gives exactly-once per
     input FILE, so a drained landing dir re-drains to zero new decisions.
@@ -721,29 +722,17 @@ def incremental_dedup_stream(
     """
     from pyspark.errors import AnalysisException
 
+    from live_data_spark.operators.dedup import classify_against_store
     from live_data_spark.operators.text import fingerprint
 
     def classify_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import Window
-
         sess = batch_df.sparkSession
-        b = batch_df.select("doc_id", fingerprint("text").alias("fp"))
         try:
-            history = sess.read.parquet(store_dir).select("fp").distinct()
+            history = sess.read.parquet(store_dir)
         except AnalysisException:  # first batch: store not created yet
             history = local_frame(sess, [], "fp string")
-        w = Window.partitionBy("fp")
-        cls = (
-            b.join(history.withColumn("seen", F.lit(True)), "fp", "left")
-            .withColumn("min_id", F.min("doc_id").over(w))
-            .select(
-                "doc_id",
-                "fp",
-                F.when(F.col("seen"), "dup_history")
-                .when(F.col("doc_id") > F.col("min_id"), "dup_batch")
-                .otherwise("new")
-                .alias("decision"),
-            )
+        cls = classify_against_store(
+            batch_df.select("doc_id", fingerprint("text").alias("fp")), history
         )
         # one pass, two sinks: cache the small classified batch, not the store
         cls.persist()
@@ -770,48 +759,28 @@ def merge_upsert_batch(
     unique_key: tuple[str, ...],
     recency_key: str,
 ) -> None:
-    """One keyed upsert: union the batch with the store, keep the latest
-    row per key (recency ties → the incoming row wins), write-to-temp +
-    atomic swap. The same merge shape as the registry's
-    ``incremental_merge`` materialization, factored for ``foreachBatch``
-    — the streaming path into a keep-latest table when the sink isn't an
-    ACID format (with one, this whole function is a MERGE INTO).
+    """One keyed upsert of a micro-batch into the store: the registry's
+    ``keep_latest`` merge (recency ties → the incoming row wins) written
+    through ``rewrite_parquet`` — the ``incremental_merge`` write path,
+    shaped for ``foreachBatch``. The streaming path into a keep-latest
+    table when the sink isn't an ACID format (with one, this whole
+    function is a MERGE INTO).
     """
-    import shutil
     from pathlib import Path
 
-    from pyspark.sql import Window
+    from live_data_spark.plans.registry import keep_latest
+    from live_data_spark.sources.files import recover_swapped_dir, rewrite_parquet
 
-    from live_data_spark.sources.files import recover_swapped_dir, swap_dir
-
-    sess = batch_df.sparkSession
-    out = Path(store_dir)
-    cols = batch_df.columns
     # heal a swap interrupted by a crash: the prior state lives in the
-    # backup dir, not under out — without this, the _SUCCESS probe below
-    # would take the overwrite branch and the store would silently reset
-    # to one batch (the input files are already checkpoint-committed, so
-    # nothing replays the lost history)
-    recover_swapped_dir(out)
-    if (out / "_SUCCESS").exists():
-        existing = sess.read.parquet(store_dir).select(*cols)
-        merged = existing.withColumn("__src", F.lit(0)).unionByName(
-            batch_df.withColumn("__src", F.lit(1))
-        )
-        w = Window.partitionBy(*unique_key).orderBy(
-            F.col(recency_key).desc(), F.col("__src").desc()
-        )
-        latest = (
-            merged.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") == 1)
-            .drop("__rn", "__src")
-        )
-        tmp = out.parent / f"{out.name}.__merge_tmp"
-        shutil.rmtree(tmp, ignore_errors=True)
-        latest.write.mode("overwrite").parquet(str(tmp))
-        swap_dir(tmp, out)
-    else:
-        batch_df.write.mode("overwrite").parquet(store_dir)
+    # backup dir, not under store_dir — without this, the _SUCCESS probe
+    # below would take the first-write branch and the store would
+    # silently reset to one batch (the input files are already
+    # checkpoint-committed, so nothing replays the lost history)
+    recover_swapped_dir(store_dir)
+    if (Path(store_dir) / "_SUCCESS").exists():
+        existing = batch_df.sparkSession.read.parquet(store_dir)
+        batch_df = keep_latest(existing, batch_df, unique_key, recency_key)
+    rewrite_parquet(batch_df, store_dir)
 
 
 def upsert_events_stream(
@@ -823,13 +792,11 @@ def upsert_events_stream(
     recency_key: str = "ts",
 ) -> None:
     """Continuous keep-latest materialization: watch a landing dir of
-    event parquet, upsert each micro-batch into the keyed store — the
-    streaming twin of the registry's ``incremental_merge`` model (same
-    keep-latest semantics, same one-shuffle merge per batch, exactly-once
-    per input file via the checkpoint WAL). A replayed batch is
-    idempotent by construction: re-merging rows already in the store
-    changes nothing (keep-latest is associative and commutative over
-    (recency, src) maxima).
+    event parquet, upsert each micro-batch into the keyed store through
+    ``merge_upsert_batch`` — the registry's ``incremental_merge`` write
+    (its ``keep_latest`` merge and ``rewrite_parquet`` swap) per batch,
+    exactly-once per input file via the checkpoint WAL. A replayed batch
+    is idempotent: re-merging rows already in the store changes nothing.
 
     At 100 TB the store is an ACID table and the merge is a keyed MERGE
     INTO (same plan shape, no temp-swap copy); partition the store by a

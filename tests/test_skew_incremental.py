@@ -123,6 +123,53 @@ def test_incremental_merge_upserts_latest_per_key(spark, tmp_path):
     assert third.count() == 3
 
 
+def test_incremental_merge_rewrite_keeps_partitions_and_observes_merged_table(spark, tmp_path):
+    """The merge's rewrite honours ``partition_by`` (one ``key=value``
+    dir per value after the swap) and its observation rides the
+    post-merge write, so the metrics describe the whole merged table,
+    not the incoming batch."""
+    src = {
+        "rows": [
+            (1, "eu", "a-v1", dt.datetime(2026, 1, 1)),
+            (2, "us", "b-v1", dt.datetime(2026, 1, 1)),
+        ]
+    }
+    proj = Project(spark, warehouse_dir=str(tmp_path))
+
+    @proj.model(
+        materialized="incremental_merge",
+        incremental_key="updated_at",
+        unique_key=("id",),
+        partition_by=("region",),
+        observe={"n_rows": "count(1)", "n_eu": "sum(cast(region = 'eu' as long))"},
+    )
+    def dim_part(ctx):
+        return ctx.spark.createDataFrame(src["rows"], ["id", "region", "val", "updated_at"])
+
+    proj.build("dim_part")
+    assert proj.metrics["dim_part"] == {"n_rows": 2, "n_eu": 1}
+
+    src["rows"] = [
+        (2, "us", "b-v2", dt.datetime(2026, 1, 5)),  # newer → replaces b-v1
+        (3, "ap", "c-v1", dt.datetime(2026, 1, 2)),  # new key, new partition
+        (1, "eu", "a-stale", dt.datetime(2025, 12, 1)),  # older → loses
+    ]
+    proj.invalidate()
+    second = proj.build("dim_part")
+
+    store = next(tmp_path.glob("*/dim_part"))
+    assert sorted(p.name for p in store.iterdir() if p.is_dir()) == [
+        "region=ap",
+        "region=eu",
+        "region=us",
+    ]
+    assert second.columns == ["id", "region", "val", "updated_at"]
+    got = {r["id"]: (r["region"], r["val"]) for r in second.collect()}
+    assert got == {1: ("eu", "a-v1"), 2: ("us", "b-v2"), 3: ("ap", "c-v1")}
+    # three incoming rows, but the write evaluated the three-row merged table
+    assert proj.metrics["dim_part"] == {"n_rows": 3, "n_eu": 1}
+
+
 def test_incremental_merge_requires_unique_key(spark, tmp_path):
     proj = Project(spark, warehouse_dir=str(tmp_path))
     with pytest.raises(ValueError, match="unique_key"):

@@ -12,7 +12,9 @@ Default-deny, like tests/test_plan_hygiene.py: every ``.start(...)`` and
 query) fails here unless its enclosing function is allow-listed with a
 reason. A new streaming job that builds its own ``writeStream`` chain fails
 without anyone having to remember to pin it. The same parse keeps the
-bike-shop DAG on one COPY path: no batch append write in ``bikeshop/``.
+bike-shop DAG on one COPY path: no batch append write in ``bikeshop/``,
+and every crash-safe store rewrite on one swap: ``swap_dir`` is called only
+from ``sources/files.py::rewrite_parquet``.
 """
 
 from __future__ import annotations
@@ -31,20 +33,22 @@ START_OK: set[tuple[str, str]] = {
 }
 
 
-def _method_calls(tree: ast.AST, methods: set[str]):
+def _method_calls(tree: ast.AST, methods: set[str], bare: bool = False):
     """(enclosing function, line) of every ``.<method>(...)`` call in
-    ``tree`` whose method is in ``methods``."""
+    ``tree`` whose method is in ``methods`` — and, with ``bare``, every
+    plain ``<method>(...)`` call too."""
+
+    def called(func: ast.expr) -> str | None:
+        if isinstance(func, ast.Attribute):
+            return func.attr
+        return func.id if bare and isinstance(func, ast.Name) else None
 
     def walk(node: ast.AST, fn: str):
         for child in ast.iter_child_nodes(node):
             scope = fn
             if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 scope = child.name
-            if (
-                isinstance(child, ast.Call)
-                and isinstance(child.func, ast.Attribute)
-                and child.func.attr in methods
-            ):
+            if isinstance(child, ast.Call) and called(child.func) in methods:
                 yield fn, child.lineno
             yield from walk(child, scope)
 
@@ -65,6 +69,29 @@ def test_streams_start_only_in_the_runner():
     )
     # the sweep must see the runner itself, or it is scanning nothing
     assert START_OK <= found, START_OK - found
+
+
+# the one caller of the directory swap: a store rewritten anywhere else
+# would need its own temp dir, stale-temp cleanup and crash healing
+SWAP_OK: set[tuple[str, str]] = {
+    ("sources/files.py", "rewrite_parquet"),
+}
+
+
+def test_directory_swaps_only_in_rewrite_parquet():
+    """Every crash-safe store rewrite (the registry's merge, the upsert
+    sink, the rollup repair, compaction) goes through
+    ``files.rewrite_parquet``; a hand-rolled temp-write + ``swap_dir``
+    elsewhere fails here."""
+    found, offenders = set(), []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        rel = path.relative_to(PACKAGE).as_posix()
+        for fn, line in _method_calls(ast.parse(path.read_text()), {"swap_dir"}, bare=True):
+            found.add((rel, fn))
+            if (rel, fn) not in SWAP_OK:
+                offenders.append(f"{rel}:{line} in {fn}()")
+    assert not offenders, f"swap_dir called outside files.rewrite_parquet: {offenders}"
+    assert SWAP_OK <= found, SWAP_OK - found
 
 
 def _append_writes(tree: ast.AST):
