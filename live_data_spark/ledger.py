@@ -416,6 +416,24 @@ CHANGED_SINCE_CHECK: tuple[str, ...] = (
     #   classify_against_store, shared with the streaming twin (oracle
     #   parity green at sf0.001 and sf0.01):
     "dedup_incremental",
+    #   (one body per query shape) the batch entries call the stream
+    #   transforms; the funnel stage chain, the ANN top-k tail and the
+    #   adjacent-pair guard each got one definition, and the BPE trainer
+    #   lost its session memo (plans and rows unchanged, oracle parity
+    #   green at sf0.001 and sf0.01); the dedup pair subtrees, reshaped
+    #   the same way, are listed above:
+    "events_sliding_rollup",
+    "events_session_window_native",
+    "events_hourly_rollup",
+    "events_funnel",
+    "funnel_latency_quantiles",
+    "ann_cosine_topk",
+    "text_bigram_surprisal",
+    "corpus_perplexity_buckets",
+    "corpus_heldout_perplexity",
+    "bpe_train_merges",
+    "bpe_encode_stats",
+    "bpe_pair_stats",
 )
 
 # Within the already-checked class, re-verify these ahead of their round

@@ -42,15 +42,6 @@ TARGET_LABEL = 0  # positive class for the catalog entry's binary task
 N_NEWTON = 8
 RIDGE = 1e-3  # on coefficients (not the intercept-only path): keeps X'SX+λI PD
 
-# session-lifetime memo of fitted weights keyed by (sf_dir, target, iters,
-# ridge), storing (table_fingerprint, beta): the fit is deterministic, so
-# caching is exact, and the eval + calibration entries share one training
-# run instead of two. Fingerprint in the VALUE (compared, not keyed) so a
-# rewrite at the same sf_dir replaces the entry instead of leaking a dead
-# weight vector per rewrite for the driver's lifetime.
-_FIT_CACHE: dict[tuple, tuple[object, "np.ndarray"]] = {}
-
-
 def _partials_fn(beta: np.ndarray, target: int):
     """mapInPandas fn: per-partition IRLS partials under current beta.
 
@@ -102,22 +93,11 @@ def logreg_fit(
     embeddings table; returns the (d+1) weight vector (intercept first).
 
     Deterministic: beta starts at 0 and every update is a dense solve of
-    driver-merged partials — no sampling, no init randomness. That
-    determinism is what makes the memo below sound: eval and calibration
-    both need THIS weight vector, and without the cache each catalog
-    entry re-paid the full 8-pass fit (train-once/score-everywhere; the
-    durable cross-job form is an artifacts.py table).
+    driver-merged partials — no sampling, no init randomness. Each call
+    fits afresh; the durable train-once/score-everywhere form is an
+    artifacts.py table. ``history``, when given, collects the penalized
+    loss of each round.
     """
-    from live_data_spark.catalog import _table_state
-
-    # fingerprint check: a rewrite at the same sf_dir re-fits instead of
-    # serving pre-rewrite weights (uniform with the trainer/footer
-    # caches), and the re-fit evicts the stale entry
-    key = (sf_dir, target, iters, ridge)
-    fp = _table_state(sf_dir, "embeddings")[1]
-    hit = _FIT_CACHE.get(key)
-    if history is None and hit is not None and hit[0] == fp:
-        return hit[1]
     # pinned across rounds: each Newton round is one Arrow partials pass
     # over this frame — without the pin an ``iters``-round fit re-scans
     # the source ``iters`` times (see pin_for_iteration's scale notes)
@@ -154,8 +134,6 @@ def logreg_fit(
             beta = beta + np.linalg.solve(A + reg, g - reg @ beta)
     finally:
         e.unpersist()
-    if history is None:
-        _FIT_CACHE[key] = (fp, beta)
     return beta
 
 

@@ -233,6 +233,37 @@ WHERE n_common / (n1 + n2 - n_common) >= 0.8
 )
 
 
+def jaccard_pairs(ex: DataFrame, t: float) -> DataFrame:
+    """Exact (doc_id_1 < doc_id_2, j) Jaccard pairs with j >= ``t`` from
+    (doc_id, s) distinct-shingle rows: the inverted-index self-join on
+    shingle, pruned by the lossless size-ratio filter min(n1, n2) >=
+    t·max(n1, n2), counted per pair, with j from the set sizes. ``j`` is
+    unrounded."""
+    sizes = ex.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    exn = ex.join(sizes, "doc_id")  # n rides the exploded rows
+    a, b = exn.alias("a"), exn.alias("b")
+    common = (
+        a.join(
+            b,
+            (F.col("a.s") == F.col("b.s"))
+            & (F.col("a.doc_id") < F.col("b.doc_id"))
+            & (F.least("a.n", "b.n") >= t * F.greatest("a.n", "b.n")),
+        )
+        .groupBy(
+            F.col("a.doc_id").alias("doc_id_1"),
+            F.col("b.doc_id").alias("doc_id_2"),
+        )
+        .agg(F.count(F.lit(1)).alias("n_common"))
+    )
+    # set sizes joined onto the (already aggregated, small) pair table;
+    # one row per doc so Spark broadcasts when it fits
+    pairs = common.join(
+        sizes.select(F.col("doc_id").alias("doc_id_1"), F.col("n").alias("n1")), "doc_id_1"
+    ).join(sizes.select(F.col("doc_id").alias("doc_id_2"), F.col("n").alias("n2")), "doc_id_2")
+    j = F.col("n_common") / (F.col("n1") + F.col("n2") - F.col("n_common"))
+    return pairs.where(j >= t).select("doc_id_1", "doc_id_2", j.alias("j"))
+
+
 @register("dedup_ngram_jaccard", oracle=_JACCARD_PAIRS_ORACLE, tags=("dedup",))
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact word-3-gram Jaccard near-dup pairs (threshold 0.8).
@@ -250,32 +281,8 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     mass. Still exact, still the quadratic ground-truth tier — the
     MinHash variant below is the 100 TB path verified against it.
     """
-    ex = shingle_rows(spark, sf_dir)
-    sizes = ex.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    exn = ex.join(sizes, "doc_id")  # n rides the exploded rows
-    a, b = exn.alias("a"), exn.alias("b")
-    common = (
-        a.join(
-            b,
-            (F.col("a.s") == F.col("b.s"))
-            & (F.col("a.doc_id") < F.col("b.doc_id"))
-            # size-ratio filter: min(n1,n2) >= 0.8 * max(n1,n2)
-            & (F.least("a.n", "b.n") >= 0.8 * F.greatest("a.n", "b.n")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_id_1"),
-            F.col("b.doc_id").alias("doc_id_2"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    # set sizes joined onto the (already aggregated, small) pair table;
-    # one row per doc so Spark broadcasts when it fits
-    pairs = common.join(
-        sizes.select(F.col("doc_id").alias("doc_id_1"), F.col("n").alias("n1")), "doc_id_1"
-    ).join(sizes.select(F.col("doc_id").alias("doc_id_2"), F.col("n").alias("n2")), "doc_id_2")
-    jac = F.col("n_common") / (F.col("n1") + F.col("n2") - F.col("n_common"))
-    return pairs.where(jac >= 0.8).select(
-        "doc_id_1", "doc_id_2", F.round(jac, 4).alias("jaccard")
+    return jaccard_pairs(shingle_rows(spark, sf_dir), 0.8).select(
+        "doc_id_1", "doc_id_2", F.round("j", 4).alias("jaccard")
     )
 
 
@@ -295,6 +302,23 @@ def lsh_bands(sig: Column, band_size: int = BAND_SIZE, num_hashes: int = NUM_HAS
             F.xxhash64(*[F.element_at(sig, b * band_size + r + 1) for r in range(band_size)])
             for b in range(n_bands)
         ]
+    )
+
+
+def band_candidates(banded: DataFrame) -> DataFrame:
+    """Distinct (doc_id_1 < doc_id_2) candidate pairs from (doc_id, band,
+    bucket) rows: the self-join on (band, bucket), so two docs pair once
+    however many bands they share."""
+    a, b = banded.alias("a"), banded.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.bucket") == F.col("b.bucket"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(F.col("a.doc_id").alias("doc_id_1"), F.col("b.doc_id").alias("doc_id_2"))
+        .dropDuplicates()
     )
 
 
@@ -328,17 +352,7 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array(*[F.min(F.xxhash64("s", F.lit(i))) for i in range(NUM_HASHES)]).alias("sig")
     )
     banded = sig.select("doc_id", F.posexplode(lsh_bands(F.col("sig"))).alias("band", "bucket"))
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_id_1"), F.col("b.doc_id").alias("doc_id_2"))
-        .dropDuplicates()
-    )
+    cand = band_candidates(banded)
     # exact-verify on the distinct shingle sets, materialized per doc by
     # the collect_list aggregation (so the arrays are real columns, never
     # re-derived expression trees)
@@ -1042,17 +1056,7 @@ def dedup_containment_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.posexplode(lsh_bands(F.col("sig"), CONT_BAND, CONT_HASHES)).alias("band", "bucket"),
     )
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_id_1"), F.col("b.doc_id").alias("doc_id_2"))
-        .dropDuplicates()
-    )
+    cand = band_candidates(banded)
     sets = shingle_rows(spark, sf_dir).groupBy("doc_id").agg(
         F.collect_list("s").alias("shingles")
     )
@@ -1502,38 +1506,16 @@ def dedup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     this curve is the input to dedup_minhash's banding design (bands ×
     rows trade recall exactly at the chosen t).
 
-    One exact pair subtree (the dedup_ngram_jaccard inverted index with
-    its lossless size-ratio prune, floored at t=0.5) feeds all five
-    thresholds via a broadcast 5-row grid fan-out — the candidate join
-    runs ONCE, not per threshold. Exact ground-truth tier by design
+    One exact pair subtree (``jaccard_pairs``, dedup_ngram_jaccard's
+    inverted index with its lossless size-ratio prune, floored at t=0.5
+    instead of 0.8) feeds all five thresholds via a broadcast 5-row grid
+    fan-out — the candidate join runs ONCE, not per threshold. Exact ground-truth tier by design
     (quadratic DuckDB oracle, sf0.01-verified): at 100 TB the same
     curve comes from the MinHash signatures (estimate Jaccard from
     signature agreement instead of exact set overlap) — the cascade
     accounting in corpus_dedup_cascade is that path's rollup.
     """
-    ex = shingle_rows(spark, sf_dir)
-    sizes = ex.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    exn = ex.join(sizes, "doc_id")
-    a, b = exn.alias("a"), exn.alias("b")
-    floor_t = CURVE_THRESHOLDS[0]
-    common = (
-        a.join(
-            b,
-            (F.col("a.s") == F.col("b.s"))
-            & (F.col("a.doc_id") < F.col("b.doc_id"))
-            & (F.least("a.n", "b.n") >= floor_t * F.greatest("a.n", "b.n")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_id_1"),
-            F.col("b.doc_id").alias("doc_id_2"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    pairs = common.join(
-        sizes.select(F.col("doc_id").alias("doc_id_1"), F.col("n").alias("n1")), "doc_id_1"
-    ).join(sizes.select(F.col("doc_id").alias("doc_id_2"), F.col("n").alias("n2")), "doc_id_2")
-    j = F.col("n_common") / (F.col("n1") + F.col("n2") - F.col("n_common"))
-    jac = pairs.where(j >= floor_t).select("doc_id_1", "doc_id_2", j.alias("j"))
+    jac = jaccard_pairs(shingle_rows(spark, sf_dir), CURVE_THRESHOLDS[0])
 
     grid = local_frame(spark, [(float(t),) for t in CURVE_THRESHOLDS], "threshold double")
     # broadcast hint: keeps the non-equi inner join a broadcast

@@ -14,7 +14,7 @@ product to a ``pandas_udf`` (numpy BLAS) without touching the query shape.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from live_data_spark.catalog import load, register, table_rowcount
@@ -69,6 +69,19 @@ def pin_for_iteration(df: DataFrame) -> DataFrame:
 
 def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))
+
+
+def exact_topk(scored: DataFrame) -> DataFrame:
+    """The exact top-k tail of every ANN path: rank each query's
+    (query_id, neighbor_id, cos) rows by cosine, ties by neighbor id so
+    the order is total, keep TOP_K and round the cosine for output."""
+    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
+    return (
+        scored.withColumn("rnk", F.row_number().over(w))
+        .where(F.col("rnk") <= TOP_K)
+        .select("query_id", "neighbor_id", "rnk", F.round("cos", 4).alias("cosine_sim"))
+    )
+
 
 
 def cosine_pandas(a: Column, b: Column) -> Column:
@@ -135,8 +148,6 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     totally ordered (testdata top-5 cosine gaps ≥5e-5, far above
     engine fp drift, so ranks are stable across engines).
     """
-    from pyspark.sql import Window
-
     e = load(spark, sf_dir, "embeddings")
     q = e.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), as_double("embedding").alias("qe")
@@ -151,12 +162,7 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             cosine(F.col("qe"), F.col("ce")).alias("cos"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= TOP_K)
-        .select("query_id", "neighbor_id", "rnk", F.round("cos", 4).alias("cosine_sim"))
-    )
+    return exact_topk(scored)
 
 
 HAMMING_K = 5  # top-k under Hamming distance
@@ -202,8 +208,6 @@ def embedding_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact, no fp drift anywhere in the ranking.
     """
     import math
-
-    from pyspark.sql import Window
 
     def word(c, start):  # 32 sign bits from dims [start, start+32)
         return F.aggregate(
@@ -303,8 +307,6 @@ def embedding_truncation_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame
     at the k-boundary is fp-safe (cosine gaps at the cut ≳1e-4 on this
     testdata vs ~1e-15 engine drift).
     """
-    from pyspark.sql import Window
-
     e = load(spark, sf_dir, "embeddings")
     half = lambda c: F.slice(c, 1, (F.size(c) / 2).cast("int"))  # noqa: E731
     q = e.where(F.col("vec_id") < N_QUERIES).select(
@@ -812,8 +814,6 @@ def _ivf_assign(vectors: DataFrame, centroids: DataFrame, nprobe: int, id_col: s
     only ever the bounded query side (N_QUERIES rows) — the window
     shuffle there is trivially small.
     """
-    from pyspark.sql import Window
-
     scored = vectors.join(F.broadcast(centroids)).select(
         id_col, "emb", "cid", cosine(F.col("emb"), F.col("cemb")).alias("ccos")
     )
@@ -857,8 +857,6 @@ def ann_ivf_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import math
 
-    from pyspark.sql import Window
-
     e = load(spark, sf_dir, "embeddings").select("vec_id", as_double("embedding").alias("emb"))
     n = table_rowcount(sf_dir, "embeddings")  # footer metadata, no Spark job
     k_lists = max(4, int(math.isqrt(n)))
@@ -889,12 +887,7 @@ def ann_ivf_flat(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicates(["query_id", "neighbor_id"])
     )
     scored = cand.select("query_id", "neighbor_id", cosine(F.col("qe"), F.col("ne")).alias("cos"))
-    wr = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(wr))
-        .where(F.col("rnk") <= TOP_K)
-        .select("query_id", "neighbor_id", "rnk", F.round("cos", 4).alias("cosine_sim"))
-    )
+    return exact_topk(scored)
 
 
 @register("ann_srp_lsh", oracle=None, headline=True, tags=("similarity",))
@@ -920,8 +913,6 @@ def ann_srp_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL-reproducible).
     """
     import math
-
-    from pyspark.sql import Window
 
     # NO spread() here, deliberately (r12): interleaved A/B at sf0.1
     # measured the spread arm 1.74 s vs 1.23 s without — this entry's
@@ -969,12 +960,7 @@ def ann_srp_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicates(["query_id", "neighbor_id"])
     )
     scored = cand.select("query_id", "neighbor_id", cosine(F.col("qe"), F.col("emb")).alias("cos"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= TOP_K)
-        .select("query_id", "neighbor_id", "rnk", F.round("cos", 4).alias("cosine_sim"))
-    )
+    return exact_topk(scored)
 
 
 # ---------------------------------------------------------------------------
@@ -1156,8 +1142,6 @@ def embedding_label_prototypes(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = e.join(F.broadcast(cvecs), "label").select(
         "label", "vec_id", cosine(F.col("emb"), F.col("cvec")).alias("cos")
     )
-    from pyspark.sql import Window
-
     w = Window.partitionBy("label").orderBy(F.col("cos").desc(), "vec_id")
     return (
         scored.withColumn("rnk", F.row_number().over(w))
@@ -1303,6 +1287,28 @@ def _empty_topk(e: DataFrame) -> DataFrame:
     )
 
 
+def refine_adc(e: DataFrame, cand: DataFrame, refine: int) -> DataFrame:
+    """The PQ paths' exact re-rank: keep each query's top-``refine``
+    (query_id, neighbor_id, adc) candidates, re-score that shortlist with
+    the true cosine over ``e``'s (vec_id, emb) rows and take the exact
+    top-k. Returned similarities are exact; only recall is approximate."""
+    wa = Window.partitionBy("query_id").orderBy(F.col("adc").desc(), F.col("neighbor_id"))
+    short = (
+        cand.withColumn("rnk", F.row_number().over(wa))
+        .where(F.col("rnk") <= refine)
+        .select("query_id", "neighbor_id")
+    )
+    qe = e.where(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), F.col("emb").alias("qe")
+    )
+    ne = e.select(F.col("vec_id").alias("neighbor_id"), F.col("emb").alias("ne"))
+    scored = short.join(F.broadcast(qe), "query_id").join(ne, "neighbor_id").select(
+        "query_id", "neighbor_id", cosine(F.col("qe"), F.col("ne")).alias("cos")
+    )
+    return exact_topk(scored)
+
+
+
 @register("ann_pq_adc", oracle=None, tags=("similarity", "vector", "compression"))
 def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate cosine top-k via product quantization + asymmetric
@@ -1326,7 +1332,6 @@ def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import numpy as np
     import pandas as pd
-    from pyspark.sql import Window
 
     e = load(spark, sf_dir, "embeddings").select("vec_id", as_double("embedding").alias("emb"))
     refine = max(PQ_REFINE_MIN, table_rowcount(sf_dir, "embeddings") // PQ_REFINE_FRAC)
@@ -1348,7 +1353,6 @@ def _pq_adc_with_books(spark: SparkSession, e: DataFrame, books, refine: int) ->
     both answer identically for the same books."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql import Window
 
     q_rows = e.where(F.col("vec_id") < N_QUERIES).collect()
     if not q_rows:  # no query vectors: defined empty result
@@ -1389,26 +1393,7 @@ def _pq_adc_with_books(spark: SparkSession, e: DataFrame, books, refine: int) ->
             yield out[out["query_id"] != out["neighbor_id"]]
 
     cand = e.mapInPandas(adc, schema="query_id long, neighbor_id long, adc double")
-    wa = Window.partitionBy("query_id").orderBy(F.col("adc").desc(), F.col("neighbor_id"))
-    short = (
-        cand.withColumn("rnk", F.row_number().over(wa))
-        .where(F.col("rnk") <= refine)
-        .select("query_id", "neighbor_id")
-    )
-    # exact refine: true cosine on the shortlist only
-    qe = e.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("emb").alias("qe")
-    )
-    ne = e.select(F.col("vec_id").alias("neighbor_id"), F.col("emb").alias("ne"))
-    scored = short.join(F.broadcast(qe), "query_id").join(ne, "neighbor_id").select(
-        "query_id", "neighbor_id", cosine(F.col("qe"), F.col("ne")).alias("cos")
-    )
-    wr = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(wr))
-        .where(F.col("rnk") <= TOP_K)
-        .select("query_id", "neighbor_id", "rnk", F.round("cos", 4).alias("cosine_sim"))
-    )
+    return refine_adc(e, cand, refine)
 
 
 # ---------------------------------------------------------------------------
@@ -1449,7 +1434,6 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import numpy as np
     import pandas as pd
-    from pyspark.sql import Window
 
     e = load(spark, sf_dir, "embeddings").select("vec_id", as_double("embedding").alias("emb"))
     n = table_rowcount(sf_dir, "embeddings")
@@ -1517,25 +1501,7 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield out[out["query_id"] != out["neighbor_id"]]
 
     cand = e.mapInPandas(ivfadc, schema="query_id long, neighbor_id long, adc double")
-    wa = Window.partitionBy("query_id").orderBy(F.col("adc").desc(), F.col("neighbor_id"))
-    short = (
-        cand.withColumn("rnk", F.row_number().over(wa))
-        .where(F.col("rnk") <= refine)
-        .select("query_id", "neighbor_id")
-    )
-    qe = e.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("emb").alias("qe")
-    )
-    ne = e.select(F.col("vec_id").alias("neighbor_id"), F.col("emb").alias("ne"))
-    scored = short.join(F.broadcast(qe), "query_id").join(ne, "neighbor_id").select(
-        "query_id", "neighbor_id", cosine(F.col("qe"), F.col("ne")).alias("cos")
-    )
-    wr = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(wr))
-        .where(F.col("rnk") <= TOP_K)
-        .select("query_id", "neighbor_id", "rnk", F.round("cos", 4).alias("cosine_sim"))
-    )
+    return refine_adc(e, cand, refine)
 
 
 def _distributed_moments(e: DataFrame) -> tuple[int, "np.ndarray", "np.ndarray"]:
@@ -2044,8 +2010,6 @@ def query_ivf_index(
     """
     import math
 
-    from pyspark.sql import Window
-
     from live_data_spark.artifacts import read_artifact
 
     e = load(spark, sf_dir, "embeddings").select("vec_id", as_double("embedding").alias("emb"))
@@ -2074,12 +2038,7 @@ def query_ivf_index(
     scored = cand.select(
         "query_id", "neighbor_id", cosine(F.col("qe"), F.col("ne")).alias("cos")
     )
-    wr = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(wr))
-        .where(F.col("rnk") <= TOP_K)
-        .select("query_id", "neighbor_id", "rnk", F.round("cos", 4).alias("cosine_sim"))
-    )
+    return exact_topk(scored)
 
 
 def build_pq_codebook(spark: SparkSession, sf_dir: str, index_dir: str, version: int = 1) -> None:

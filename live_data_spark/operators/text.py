@@ -261,6 +261,17 @@ def normalized_text(col: Column | str = "text") -> Column:
     return F.trim(F.regexp_replace(F.lower(c), r"\s+", " "))
 
 
+def adjacent_pairs(arr: Column | str) -> Column:
+    """1-based index ``i`` of each adjacent (i, i+1) pair of an array
+    column, for ``explode``: a cheap int ``sequence``, empty for arrays
+    shorter than 2 (``sequence(1, 0)`` is DESCENDING in Spark, the ANSI
+    element_at abort; guard like ``shingle_rows``). Callers assemble the
+    pair per exploded row with codegen'd ``element_at``."""
+    return F.when(F.size(arr) >= 2, F.sequence(F.lit(1), F.size(arr) - 1)).otherwise(
+        F.expr("array()").cast("array<int>")
+    )
+
+
 def fingerprint(col: Column | str = "text") -> Column:
     """MD5 content fingerprint over normalized text — the engine-agnostic
     exact-dup key (md5 is bit-identical everywhere, unlike murmur3).
@@ -836,11 +847,7 @@ def text_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id",
             "w",
-            F.explode(
-                F.when(
-                    F.size("w") >= 2, F.sequence(F.lit(1), F.size("w") - 1)
-                ).otherwise(F.expr("array()").cast("array<int>"))
-            ).alias("i"),
+            F.explode(adjacent_pairs("w")).alias("i"),
         )
         .select(
             "doc_id",
@@ -2006,11 +2013,7 @@ def corpus_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id",
             "w",
-            F.explode(
-                F.when(
-                    F.size("w") >= 2, F.sequence(F.lit(1), F.size("w") - 1)
-                ).otherwise(F.expr("array()").cast("array<int>"))
-            ).alias("i"),
+            F.explode(adjacent_pairs("w")).alias("i"),
         )
         .select(
             "doc_id",
@@ -2567,11 +2570,7 @@ def corpus_heldout_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
         base.select(
             "part",
             "w",
-            F.explode(
-                F.when(
-                    F.size("w") >= 2, F.sequence(F.lit(1), F.size("w") - 1)
-                ).otherwise(F.expr("array()").cast("array<int>"))
-            ).alias("i"),
+            F.explode(adjacent_pairs("w")).alias("i"),
         )
         .select(
             "part",

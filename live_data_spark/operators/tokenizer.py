@@ -47,21 +47,11 @@ from pyspark.sql import functions as F
 
 from live_data_spark.catalog import load, register
 from live_data_spark.operators.dedup import _truncate_lineage, spread
-from live_data_spark.operators.text import normalized_text
+from live_data_spark.operators.text import adjacent_pairs, normalized_text
 from live_data_spark.session import local_frame
 
 N_MERGES = 24  # merge table size for the catalog entries (tiny demo vocab)
 END_MARK = "</w>"  # end-of-word sentinel so merges can't cross word ends
-
-# session-lifetime memo keyed by (sf_dir, n_merges), storing
-# (table_fingerprint, merges): training is deterministic, and the
-# trainer + encoder catalog entries share one run instead of re-paying
-# the full merge loop (durable form: artifacts.py). The fingerprint
-# lives in the VALUE, not the key, so a rewrite at the same sf_dir
-# REPLACES the entry instead of accumulating a dead one per rewrite for
-# the driver's lifetime (merge tables are non-trivial payloads).
-_TRAIN_CACHE: dict[tuple, tuple[object, list[tuple[str, str, int]]]] = {}
-
 
 def word_type_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(word, freq) over whitespace words of normalized text.
@@ -76,20 +66,6 @@ def word_type_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
     )
-
-
-def _adjacent_pairs(syms: str = "syms"):
-    """(left, right) adjacent-pair rows from a symbol-array column.
-
-    Generator is a cheap int ``sequence`` (empty for 1-symbol words —
-    ``sequence(1, 0)`` is DESCENDING in Spark, the ANSI element_at
-    abort; guard like ``shingle_rows``), pairs assembled per exploded
-    row via codegen'd ``element_at``.
-    """
-    idx = F.when(
-        F.size(syms) >= 2, F.sequence(F.lit(1), F.size(syms) - 1)
-    ).otherwise(F.expr("array()").cast("array<int>"))
-    return idx
 
 
 def _merge_fold(syms, left: str, right: str):
@@ -119,19 +95,9 @@ def bpe_train(
     """Learn ``n_merges`` BPE merges; returns [(left, right, pair_count)]
     in learned order. Ties break deterministically: max count, then
     lexicographically smallest (left, right) — mirrored by the Python
-    reference in tests.
+    reference in tests. Each call trains afresh; the durable form is an
+    artifacts.py table.
     """
-    from live_data_spark.catalog import _table_state
-
-    # fingerprint check: a rewrite/re-ingest at the same sf_dir re-trains
-    # instead of serving the pre-rewrite merge table (the same staleness
-    # class the footer caches and the hash-rate memo key on), and the
-    # retrain evicts the stale entry (fingerprint compared, not keyed)
-    key = (sf_dir, n_merges)
-    fp = _table_state(sf_dir, "documents")[1]
-    hit = _TRAIN_CACHE.get(key)
-    if hit is not None and hit[0] == fp:
-        return hit[1]
     wt = word_type_table(spark, sf_dir).select(
         "freq",
         F.concat(F.split("word", ""), F.array(F.lit(END_MARK))).alias("syms"),
@@ -141,7 +107,7 @@ def bpe_train(
     merges: list[tuple[str, str, int]] = []
     for it in range(n_merges):
         pairs = (
-            wt.select("freq", F.explode(_adjacent_pairs("syms")).alias("i"), "syms")
+            wt.select("freq", F.explode(adjacent_pairs("syms")).alias("i"), "syms")
             .select(
                 F.element_at("syms", F.col("i")).alias("left"),
                 F.element_at("syms", F.col("i") + 1).alias("right"),
@@ -165,7 +131,6 @@ def bpe_train(
         # sf0.01 where fixed per-job overhead dominates the tiny vocab)
         if it % 3 == 2:
             wt = _truncate_lineage(wt)
-    _TRAIN_CACHE[key] = (fp, merges)
     return merges
 
 
@@ -285,7 +250,7 @@ def bpe_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     wt = word_type_table(spark, sf_dir)
     syms = F.split("word", "")
     pairs = (
-        wt.select("freq", F.explode(_adjacent_pairs(syms)).alias("i"), "word")
+        wt.select("freq", F.explode(adjacent_pairs(syms)).alias("i"), "word")
         .select(
             F.substring(F.col("word"), F.col("i"), F.lit(1)).alias("left_sym"),
             F.substring(F.col("word"), F.col("i") + 1, F.lit(1)).alias("right_sym"),

@@ -1497,26 +1497,16 @@ def funnel_latency_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     qualifying purchase, and to the intermediate click) — the metric
     that turns funnel COUNTS (events_funnel) into funnel SPEED.
 
-    Reuses events_funnel's strictly-after stage frames (min-agg per
-    stage with the previous stage's time on the join condition);
-    latencies are exact epoch-microsecond integers; one 1-row quantile
-    aggregate at the end. The stage joins are user-keyed over
-    1-row-per-user frames — the same linear shape as the funnel itself.
+    Its stage frames are events_funnel's (``events_batch.funnel_stages``:
+    min-agg per stage with the previous stage's time on the join
+    condition); latencies are exact epoch-microsecond integers; one
+    1-row quantile aggregate at the end. The stage joins are user-keyed
+    over 1-row-per-user frames — the same linear shape as the funnel
+    itself.
     """
-    ev = load(spark, sf_dir, "events")
+    from live_data_spark.streaming.events_batch import funnel_stages
 
-    def first_after(step_type: str, prev: DataFrame, prev_t: str, out_t: str) -> DataFrame:
-        e = ev.where(F.col("event_type") == step_type).select("user_id", "ts")
-        return (
-            e.join(prev, "user_id")
-            .where(F.col("ts") > F.col(prev_t))
-            .groupBy("user_id")
-            .agg(F.min("ts").alias(out_t))
-        )
-
-    s1 = ev.where(F.col("event_type") == "view").groupBy("user_id").agg(F.min("ts").alias("t1"))
-    s2 = first_after("click", s1, "t1", "t2")
-    s3 = first_after("purchase", s2, "t2", "t3")
+    s1, s2, s3 = funnel_stages(load(spark, sf_dir, "events"))
     lat = (
         s3.join(s2, "user_id")
         .join(s1, "user_id")

@@ -52,9 +52,7 @@ DEFAULT_APP_NAME = "live_data_spark"
 
 
 def get_spark(
-    app_name: str = DEFAULT_APP_NAME,
-    shuffle_partitions: int | None = None,
-    extra_conf: dict[str, str] | None = None,
+    app_name: str = DEFAULT_APP_NAME, extra_conf: dict[str, str] | None = None
 ) -> SparkSession:
     """Create (or fetch) a SparkSession with the engine's standard config.
 
@@ -75,16 +73,13 @@ def get_spark(
         # at 100 TB that's scan bytes, shuffle spill, and storage cost
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+        .config("spark.sql.shuffle.partitions", "32")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.python.daemon.module", "live_data_spark.worker_daemon")
     )
     if not os.environ.get("SPARK_MASTER"):
         builder = builder.master(f"local[{cpus}]")
-    if shuffle_partitions is not None:
-        builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    else:
-        builder = builder.config("spark.sql.shuffle.partitions", "32")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

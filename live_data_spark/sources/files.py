@@ -58,7 +58,7 @@ def write_jsonl(df: DataFrame, path: str) -> None:
     df.write.mode("overwrite").option("timestampNTZFormat", _TS_NTZ_FMT).json(path)
 
 
-def stage_files(generated_dir: str, stage_dir: str, gzip_files: bool = True) -> list[str]:
+def stage_files(generated_dir: str, stage_dir: str) -> list[str]:
     """S4: PUT generated files into the stage (stage_files.sql:1).
 
     Snowflake's PUT auto-gzips on upload; we mirror that so the ingest
@@ -75,12 +75,8 @@ def stage_files(generated_dir: str, stage_dir: str, gzip_files: bool = True) -> 
         dest = stage / table_dir.name
         dest.mkdir(parents=True, exist_ok=True)
         for i, part in enumerate(sorted(table_dir.glob("*.csv"))):
-            name = f"part-{i:05d}.csv"
-            if gzip_files:
-                with open(part, "rb") as fin, gzip.open(dest / (name + ".gz"), "wb") as fout:
-                    shutil.copyfileobj(fin, fout)
-            else:
-                shutil.copy2(part, dest / name)
+            with open(part, "rb") as fin, gzip.open(dest / f"part-{i:05d}.csv.gz", "wb") as fout:
+                shutil.copyfileobj(fin, fout)
         staged.append(str(dest))
     return staged
 

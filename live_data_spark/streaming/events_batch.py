@@ -1,8 +1,10 @@
 """Batch-mode event analytics over the ``events`` table.
 
-These are the batch equivalents of the Structured Streaming operators in
-``live_data_spark.streaming.jobs`` — same windowing/sessionization semantics,
-expressed so the driver's DuckDB oracle can verify them. The reference's only
+Each entry is checked against a DuckDB oracle. Where a stream transform
+in ``live_data_spark.streaming.jobs`` computes the same shape, the entry
+calls it over the table (``events_sliding_rollup``,
+``events_session_window_native``): Catalyst drops the watermark from a
+batch plan, so batch and stream share one body. The reference's only
 "streaming" is the every-N-minutes append DAG (SURVEY §2.9 O5); the events
 surface is the BASELINE.json extension mandate.
 
@@ -19,6 +21,7 @@ from pyspark.sql import functions as F
 from live_data_spark.catalog import load, register
 from live_data_spark.functions.dialect import money_sum
 from live_data_spark.session import local_frame
+from live_data_spark.streaming import jobs
 
 _HOURLY_ORACLE = """
 SELECT
@@ -32,18 +35,10 @@ GROUP BY 1, 2
 """
 
 
-@register("events_hourly_rollup", oracle=_HOURLY_ORACLE, headline=True, tags=("events", "window"))
-def events_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling 1-hour window aggregate (batch form of a streaming rollup).
-
-    Streaming twin: ``F.window(ts, '1 hour')`` + watermark in
-    streaming/jobs.py. ``date_trunc`` ≡ tumbling window start. Map-side
-    partial agg; at 100 TB the events table is date-partitioned so the
-    scan prunes to the hours in play. count(DISTINCT) shuffles per
-    (window, type) group — swap to approx_count_distinct at scale when
-    exactness isn't contractual.
-    """
-    e = load(spark, sf_dir, "events")
+def hourly_rollup_of(e: DataFrame) -> DataFrame:
+    """The events_hourly_rollup aggregate over any events frame: the
+    catalog entry runs it over the table and ``incremental_rollup_update``
+    over the touched hours only."""
     return (
         e.groupBy(
             F.date_format(F.date_trunc("hour", "ts"), "yyyy-MM-dd HH:mm:ss").alias("window_start"),
@@ -55,6 +50,21 @@ def events_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("user_id").alias("n_users"),
         )
     )
+
+
+@register("events_hourly_rollup", oracle=_HOURLY_ORACLE, headline=True, tags=("events", "window"))
+def events_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Tumbling 1-hour window aggregate (batch form of a streaming rollup).
+
+    ``date_trunc`` ≡ tumbling window start. The stream rollup
+    (``jobs.hourly_rollup``) differs in one column: it counts users with
+    ``approx_count_distinct``, because exact distinct users per window
+    is unbounded stream state. Map-side partial agg; at 100 TB the events
+    table is date-partitioned so the scan prunes to the hours in play.
+    count(DISTINCT) shuffles per (window, type) group — swap to
+    approx_count_distinct at scale when exactness isn't contractual.
+    """
+    return hourly_rollup_of(load(spark, sf_dir, "events"))
 
 
 _JSON_ORACLE = """
@@ -190,27 +200,39 @@ def events_sliding_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``F.window(ts, '1 hour', '15 minutes')`` assigns each event to its 4
     overlapping windows — an Expand (4× fan-out of the tiny grouping
     key), NOT 4 scans; the oracle spells the same assignment with
-    generate_series over the 15-min grid. Streaming twin: identical
-    expression + watermark. The fan-out factor (window/slide) is the
-    state- and shuffle-cost knob at scale.
+    generate_series over the 15-min grid. The body is the stream
+    transform ``jobs.sliding_rollup``: over a table, Catalyst drops its
+    watermark, so batch and stream run one plan. The fan-out factor
+    (window/slide) is the state- and shuffle-cost knob at scale.
     """
-    e = load(spark, sf_dir, "events")
-    return (
-        e.groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            money_sum("value").alias("total_value"),
-        )
-        .select(
-            F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-    )
+    return jobs.sliding_rollup(load(spark, sf_dir, "events"))
 
 
 _FUNNEL_STEPS = ("view", "click", "purchase")
+
+
+def funnel_stages(ev: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The funnel's three stage frames over an events frame: (user_id,
+    t1) first view, (user_id, t2) first click strictly after t1, and
+    (user_id, t3) first purchase strictly after t2. Each stage is a
+    min-aggregate per user with the previous stage's time on the join
+    condition."""
+
+    def first_after(step_type: str, prev: DataFrame, prev_t: str, out_t: str) -> DataFrame:
+        e = ev.where(F.col("event_type") == step_type).select("user_id", "ts")
+        return (
+            e.join(prev, "user_id")
+            .where(F.col("ts") > F.col(prev_t))
+            .groupBy("user_id")
+            .agg(F.min("ts").alias(out_t))
+        )
+
+    view, click, purchase = _FUNNEL_STEPS
+    s1 = ev.where(F.col("event_type") == view).groupBy("user_id").agg(F.min("ts").alias("t1"))
+    s2 = first_after(click, s1, "t1", "t2")
+    s3 = first_after(purchase, s2, "t2", "t3")
+    return s1, s2, s3
+
 
 _FUNNEL_ORACLE = """
 WITH s1 AS (
@@ -245,37 +267,16 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     event scans prune to one event_type each. The stage unions are
     row-count-only aggregates (3 rows out).
     """
-    ev = load(spark, sf_dir, "events")
-
-    def first_after(step_type: str, prev: DataFrame, prev_t: str, out_t: str) -> DataFrame:
-        e = ev.where(F.col("event_type") == step_type).select("user_id", "ts")
-        return (
-            e.join(prev, "user_id")
-            .where(F.col("ts") > F.col(prev_t))
-            .groupBy("user_id")
-            .agg(F.min("ts").alias(out_t))
-        )
-
-    s1 = (
-        ev.where(F.col("event_type") == "view")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t1"))
-    )
-    s2 = first_after("click", s1, "t1", "t2")
-    s3 = first_after("purchase", s2, "t2", "t3")
-
-    def stage(df: DataFrame, step: int, name: str) -> DataFrame:
-        return df.agg(
+    stages = funnel_stages(load(spark, sf_dir, "events"))
+    counts = [
+        df.agg(
             F.lit(step).alias("step"),
             F.lit(name).alias("event_type"),
             F.count(F.lit(1)).alias("n_users"),
         )
-
-    return (
-        stage(s1, 1, "view")
-        .unionByName(stage(s2, 2, "click"))
-        .unionByName(stage(s3, 3, "purchase"))
-    )
+        for step, (df, name) in enumerate(zip(stages, _FUNNEL_STEPS), 1)
+    ]
+    return counts[0].unionByName(counts[1]).unionByName(counts[2])
 
 
 # ---------------------------------------------------------------------------
@@ -755,23 +756,11 @@ def events_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     [start, start+gap)), so the oracle's island flag uses ``>=`` where
     events_sessionize uses ``>``. Physically this is a single
     user_id-partitioned sort + merging-window aggregation — one shuffle,
-    no self-join, and the same plan shape Structured Streaming uses for
-    its session state store.
+    no self-join. The body is the stream transform ``jobs.sessionize``:
+    over a table, Catalyst drops its watermark, so batch and stream run
+    one plan.
     """
-    e = load(spark, sf_dir, "events")
-    return (
-        e.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            money_sum("value").alias("session_value"),
-        )
-        .select(
-            "user_id",
-            F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias("session_start"),
-            "n_events",
-            "session_value",
-        )
-    )
+    return jobs.sessionize(load(spark, sf_dir, "events"))
 
 
 # ---------------------------------------------------------------------------
@@ -2130,24 +2119,6 @@ def events_benford_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Incremental rollup maintenance — late data recomputes only touched hours.
 # ---------------------------------------------------------------------------
-
-
-def hourly_rollup_of(e: DataFrame) -> DataFrame:
-    """The events_hourly_rollup aggregate over an arbitrary events frame
-    (shared by the full build and the incremental repair below)."""
-    return (
-        e.groupBy(
-            F.date_format(F.date_trunc("hour", "ts"), "yyyy-MM-dd HH:mm:ss").alias(
-                "window_start"
-            ),
-            "event_type",
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            money_sum("value").alias("total_value"),
-            F.countDistinct("user_id").alias("n_users"),
-        )
-    )
 
 
 def incremental_rollup_update(

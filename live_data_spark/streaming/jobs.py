@@ -11,9 +11,12 @@ Two reference-derived duties plus the events extension surface:
    analog); a processing-time trigger gives the continuous form.
 
 2. **Event analytics** (BASELINE.json events mandate): windowed rollups,
-   session windows, and watermarked dedup — the streaming twins of the
-   batch queries in ``streaming/events_batch.py`` (same semantics, verified
-   against them in tests/test_streaming.py).
+   session windows, and watermarked dedup. A transform here runs over a
+   stream or a table alike, so the batch entries in
+   ``streaming/events_batch.py`` call ``sliding_rollup`` and
+   ``sessionize`` as their bodies; ``hourly_rollup`` differs from
+   ``events_hourly_rollup`` only in its approximate user count (stream
+   and batch are compared in tests/test_streaming.py).
 
 State & scale notes: every stateful op here carries a watermark so state is
 bounded (late data beyond it is dropped — the contract that makes 100 TB of
@@ -49,6 +52,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from live_data_spark.functions.dialect import money_sum
 from live_data_spark.sources.files import TSV_OPTIONS
 from live_data_spark.session import local_frame
 
@@ -65,10 +69,7 @@ EVENTS_SCHEMA = StructType(
 
 
 def read_events_stream(
-    spark: SparkSession,
-    src_dir: str,
-    fmt: str = "parquet",
-    max_files_per_trigger: int | None = None,
+    spark: SparkSession, src_dir: str, max_files_per_trigger: int | None = None
 ) -> DataFrame:
     """File-source stream over an events directory (schema enforced —
     streaming sources never infer). ``max_files_per_trigger`` splits a
@@ -77,30 +78,35 @@ def read_events_stream(
     eviction, append-mode window finalization): a single AvailableNow
     mega-batch computes the watermark only after everything is consumed,
     and results that need a batch boundary after that never emit."""
-    reader = spark.readStream.format(fmt).schema(EVENTS_SCHEMA)
-    if fmt == "csv":
-        reader = reader.option("header", True).option("sep", "\t")
+    reader = spark.readStream.schema(EVENTS_SCHEMA)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.load(src_dir)
+    return reader.parquet(src_dir)
 
 
 # -- transformations (stream-safe: watermark + windows, no full sorts) -------
+#
+# Each runs over a stream or a table alike. Over a table Catalyst drops the
+# watermark (EliminateEventTimeWatermark), so a batch catalog entry that
+# calls one of these runs the stream's plan.
+
+_WATERMARK = "2 hours"  # event-time lateness the watermarked transforms accept
 
 
-def hourly_rollup(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """Tumbling 1-hour rollup — streaming twin of ``events_hourly_rollup``.
+def hourly_rollup(events: DataFrame) -> DataFrame:
+    """Tumbling 1-hour rollup — the stream form of ``events_hourly_rollup``.
 
-    ``approx_count_distinct`` instead of exact countDistinct: exact
+    ``approx_count_distinct`` instead of the batch entry's exact
+    countDistinct (its only difference from ``hourly_rollup_of``): exact
     per-group distinct users is unbounded state in a stream; HLL keeps
     state O(1) per group (documented drift <2%).
     """
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", _WATERMARK)
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("total_value"),
+            money_sum("value").alias("total_value"),
             F.approx_count_distinct("user_id").alias("approx_users"),
         )
         .select(
@@ -113,19 +119,20 @@ def hourly_rollup(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
     )
 
 
-def sessionize(events: DataFrame, gap: str = "30 minutes", watermark: str = "2 hours") -> DataFrame:
-    """Session-window aggregation — streaming twin of ``events_sessionize``.
+def sessionize(events: DataFrame) -> DataFrame:
+    """Session-window aggregation (30-minute gap) — also the body of the
+    batch entry ``events_session_window_native``.
 
-    ``session_window`` merges events within ``gap`` of each other into one
-    growing window per user; the watermark closes sessions and evicts
-    their state.
+    ``session_window`` merges events within the gap of each other into
+    one growing window per user; the watermark closes sessions and
+    evicts their state.
     """
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        events.withWatermark("ts", _WATERMARK)
+        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("session_value"),
+            money_sum("value").alias("session_value"),
         )
         .select(
             "user_id",
@@ -136,19 +143,19 @@ def sessionize(events: DataFrame, gap: str = "30 minutes", watermark: str = "2 h
     )
 
 
-def sliding_rollup(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """Sliding 1-hour/15-minute rollup — streaming twin of
-    ``events_sliding_rollup``. Same Expand-based 4× window assignment as
-    batch; the watermark bounds how many overlapping windows stay open
+def sliding_rollup(events: DataFrame) -> DataFrame:
+    """Sliding 1-hour/15-minute rollup — also the body of the batch entry
+    ``events_sliding_rollup``. An Expand-based 4× window assignment; in a
+    stream the watermark bounds how many overlapping windows stay open
     per (window, type) — state is (window/slide)·|types| groups per
     active hour, evicted as the watermark passes each window end.
     """
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", _WATERMARK)
         .groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("total_value"),
+            money_sum("value").alias("total_value"),
         )
         .select(
             F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias("window_start"),
@@ -159,14 +166,14 @@ def sliding_rollup(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
     )
 
 
-def dedup_events(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
+def dedup_events(events: DataFrame) -> DataFrame:
     """Exactly-once event stream by id — ``dropDuplicatesWithinWatermark``.
 
     State holds ids only within the watermark horizon (bounded), unlike
     plain ``dropDuplicates`` whose state grows forever. The batch shape of
     this operator is ``events_dedup_latest`` in events_batch.py.
     """
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(["event_id"])
+    return events.withWatermark("ts", _WATERMARK).dropDuplicatesWithinWatermark(["event_id"])
 
 
 def user_running_totals(events: DataFrame) -> DataFrame:
@@ -210,7 +217,7 @@ def user_running_totals(events: DataFrame) -> DataFrame:
     )
 
 
-def enrich_events_stream(events: DataFrame, dim: DataFrame, key: str = "user_id") -> DataFrame:
+def enrich_events_stream(events: DataFrame, dim: DataFrame) -> DataFrame:
     """Stream–static enrichment join: each micro-batch broadcast-joins
     the (bounded, slowly-changing) dimension — STATELESS, unlike
     stream-stream joins: no watermark, no join state, the dim is just
@@ -229,7 +236,7 @@ def enrich_events_stream(events: DataFrame, dim: DataFrame, key: str = "user_id"
     natural naming — pinned in tests/test_streaming.py).
     """
     return events.join(
-        F.broadcast(dim), events[key] == dim[dim.columns[0]], "left"
+        F.broadcast(dim), events["user_id"] == dim[dim.columns[0]], "left"
     ).drop(dim[dim.columns[0]])
 
 
@@ -300,18 +307,19 @@ def value_spike_monitor(events: DataFrame) -> DataFrame:
     )
 
 
-def funnel_tracker(events: DataFrame, steps: tuple[str, ...] = ("view", "click", "purchase")) -> DataFrame:
+def funnel_tracker(events: DataFrame) -> DataFrame:
     """Custom stateful streaming funnel — the streaming twin of the batch
     ``events_funnel`` (strictly-after stage semantics, SURVEY extension
     surface).
 
     Per-user state is a monotone (stage, stage_ts) pair: a user advances
-    to stage k+1 on the first ``steps[k]`` event strictly AFTER the event
-    that completed stage k. Built-in windows can't express a cross-batch
-    ordered state machine, so this is ``applyInPandasWithState``: rows
-    arrive per user as Arrow frames, sorted by (ts, event_id) within the
-    batch; state persists in the checkpoint and restores on restart, so
-    a user can view in one micro-batch and convert days later.
+    to stage k+1 on the first ``steps[k]`` event (the batch funnel's
+    ``_FUNNEL_STEPS``) strictly AFTER the event that completed stage k.
+    Built-in windows can't express a cross-batch ordered state machine,
+    so this is ``applyInPandasWithState``: rows arrive per user as Arrow
+    frames, sorted by (ts, event_id) within the batch; state persists in
+    the checkpoint and restores on restart, so a user can view in one
+    micro-batch and convert days later.
 
     Ordering contract: exact when each user's events arrive in event-time
     order across batches (a user-keyed log guarantees this); under
@@ -325,6 +333,8 @@ def funnel_tracker(events: DataFrame, steps: tuple[str, ...] = ("view", "click",
     """
     import pandas as pd  # local: keep module import light
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+    from live_data_spark.streaming.events_batch import _FUNNEL_STEPS as steps
 
     out_schema = StructType(
         [
@@ -402,9 +412,7 @@ def error_context_join(
     )
 
 
-def error_context_join_outer(
-    events: DataFrame, window: str = "5 minutes", watermark: str = "10 minutes"
-) -> DataFrame:
+def error_context_join_outer(events: DataFrame) -> DataFrame:
     """LEFT OUTER stream-stream interval join — ``error_context_join``
     that also emits errors with NO preceding activity (null-padded
     context columns), which is the interesting cohort for an on-call
@@ -426,7 +434,7 @@ def error_context_join_outer(
     advances only on its OWN rows. A quiet error side (or quiet context
     side) freezes eviction for the whole join; monitor both.
     """
-    return error_context_join(events, window, watermark, "leftOuter")
+    return error_context_join(events, how="leftOuter")
 
 
 def run_available_now_update(result: DataFrame, sink_dir: str, checkpoint_dir: str) -> None:
@@ -784,15 +792,11 @@ def merge_upsert_batch(
 
 
 def upsert_events_stream(
-    spark: SparkSession,
-    landing_dir: str,
-    store_dir: str,
-    checkpoint_dir: str,
-    unique_key: tuple[str, ...] = ("user_id", "event_type"),
-    recency_key: str = "ts",
+    spark: SparkSession, landing_dir: str, store_dir: str, checkpoint_dir: str
 ) -> None:
     """Continuous keep-latest materialization: watch a landing dir of
-    event parquet, upsert each micro-batch into the keyed store through
+    event parquet, upsert each micro-batch into the store keyed by
+    (user_id, event_type), latest ``ts`` winning, through
     ``merge_upsert_batch`` — the registry's ``incremental_merge`` write
     (its ``keep_latest`` merge and ``rewrite_parquet`` swap) per batch,
     exactly-once per input file via the checkpoint WAL. A replayed batch
@@ -804,7 +808,7 @@ def upsert_events_stream(
     """
 
     def work(batch_df: DataFrame, batch_id: int) -> None:
-        merge_upsert_batch(batch_df, store_dir, unique_key, recency_key)
+        merge_upsert_batch(batch_df, store_dir, ("user_id", "event_type"), "ts")
 
     stream = spark.readStream.schema(EVENTS_SCHEMA).parquet(landing_dir)
     _drain_available_now(stream, checkpoint_dir, batch_fn=work)

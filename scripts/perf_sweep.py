@@ -25,11 +25,7 @@ warm-up. The span's counters are the entry's record:
 - informational: ``jvm_cpu_s`` (executor CPU) and ``sec`` (wall). Both
   move with host load; CPU gets only a loose check, wall none.
 
-Only the entry's first run is recorded. Some entries memoize a
-driver-side fit for the session (``classifier._FIT_CACHE``,
-``tokenizer._TRAIN_CACHE``), so a later run skips the fit's jobs and
-reads fewer stages and bytes; a fixed order in a fresh session makes the
-first run reproducible.
+Each entry runs once, in a fixed order in a fresh session.
 
 Usage:
     python scripts/perf_sweep.py            # measure and REWRITE the artifact

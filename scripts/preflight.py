@@ -21,18 +21,15 @@ from pathlib import Path
 
 REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(REPO))
-# the shared canonicalizer lives in tests/conftest, which pytest puts on
-# sys.path but a plain import does not
+# the shared canonicalizer and DuckDB connection live in tests/conftest,
+# which pytest puts on sys.path but a plain import does not
 sys.path.insert(0, str(REPO / "tests"))
-
-import duckdb  # noqa: E402
 
 import __spark_entry__ as se  # noqa: E402
 from conftest import canon_rows as normalize  # noqa: E402
+from conftest import duck_connection  # noqa: E402
 from live_data_spark.catalog import table_rowcount  # noqa: E402
 from live_data_spark.session import get_spark  # noqa: E402
-
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
 # Data-quality tests whose PASS state is zero violations: empty output is
 # the semantically-correct result on clean testdata, not a trivial oracle.
@@ -72,9 +69,7 @@ def main() -> int:
     # a substring, match nothing, and report an all-green empty run
     only = [a for a in sys.argv[1:] if not a.startswith("-")]
     spark = get_spark(extra_conf={"spark.ui.showConsoleProgress": "false"})
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    con = duck_connection(sf_dir)
 
     smoke = se.entry(spark).collect()
     assert len(smoke) > 0, "entry() smoke returned 0 rows"

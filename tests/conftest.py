@@ -13,6 +13,20 @@ if str(REPO) not in sys.path:
     sys.path.insert(0, str(REPO))
 
 SF_SMOKE = "/root/testdata/sf0.001"
+# every testdata table, as the oracle SQL names them
+TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
+
+
+def duck_connection(sf_dir: str):
+    """A DuckDB connection with one view per testdata table of ``sf_dir``
+    — the oracle side of every parity check (tests and preflight)."""
+    import duckdb
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
 
 def canon_rows(rows, columns):
     """THE order-insensitive canonical row form the driver's value hash
@@ -44,7 +58,16 @@ def spark():
     from live_data_spark.session import get_spark
 
     os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
-    spark = get_spark(app_name="live_data_spark-tests", shuffle_partitions=4)
+    spark = get_spark(
+        app_name="live_data_spark-tests",
+        extra_conf={
+            "spark.sql.shuffle.partitions": "4",
+            # as in scripts/perf_sweep.py: past this many stages the status
+            # store drops skipped stages first, and a tracer span in a late
+            # test then fails on a job that lists one
+            "spark.ui.retainedStages": str(1 << 20),
+        },
+    )
     yield spark
     spark.stop()
 

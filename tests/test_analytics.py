@@ -1053,3 +1053,13 @@ def test_laspeyres_recovers_planted_inflation(spark, tmp_path):
     assert got["2026-01"]["laspeyres_index"] == 1.0
     assert got["2026-02"]["laspeyres_index"] == 2.0
     assert got["2026-02"]["n_matched_parts"] == 2
+
+
+def test_funnel_latency_counts_the_funnels_converted_users(spark, sf_dir):
+    """funnel_latency_quantiles measures exactly the users events_funnel
+    counts at step 3: both read one stage chain, so n_converted equals
+    the purchase step's n_users (and is non-zero at the fixture SF)."""
+    cat = catalog()
+    steps = {r["step"]: r["n_users"] for r in cat["events_funnel"].spark(spark, sf_dir).collect()}
+    n_converted = cat["funnel_latency_quantiles"].spark(spark, sf_dir).first()["n_converted"]
+    assert n_converted == steps[3] > 0

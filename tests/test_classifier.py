@@ -130,33 +130,3 @@ def test_logreg_sf01_scale_invariants(spark):
     assert hist[-1] < len(y) * np.log(2), "fit no better than beta=0"
     acc = float((((X @ beta) >= 0) == (y == 1.0)).mean())
     assert acc >= float((y == 0.0).mean())
-
-
-def test_logreg_fit_cache_replaces_on_rewrite(spark, tmp_path):
-    """The fit memo stores (fingerprint, beta) keyed on (sf_dir, params):
-    a rewrite at the same sf_dir must re-fit on the new table AND replace
-    the stale entry instead of leaking it (ADVICE r9)."""
-    import time
-
-    from live_data_spark.operators.classifier import _FIT_CACHE, logreg_fit
-
-    sf = str(tmp_path)
-
-    def write(shift):
-        rows = [
-            (i, [float(i % 5) + shift, float((i * 3) % 7)], i % 2)
-            for i in range(40)
-        ]
-        spark.createDataFrame(
-            rows, "vec_id long, embedding array<float>, label int"
-        ).coalesce(1).write.mode("overwrite").parquet(f"{sf}/embeddings.parquet")
-
-    write(0.0)
-    n0 = len(_FIT_CACHE)
-    b1 = logreg_fit(spark, sf, target=1, iters=2)
-    assert logreg_fit(spark, sf, target=1, iters=2) is b1  # memo hit
-    time.sleep(0.02)  # mtime_ns tick
-    write(2.5)
-    b2 = logreg_fit(spark, sf, target=1, iters=2)
-    assert not (b2 == b1).all()  # re-fit on the new table
-    assert len(_FIT_CACHE) == n0 + 1  # replaced, not accumulated

@@ -147,7 +147,6 @@ def test_fits_leave_no_persisted_blocks(spark, sf_dir):
 
     before = n_cached()
     kmeans_fit(spark, sf_dir)
-    # force a fresh logreg run (memo-independent): history sidesteps the cache
     logreg_fit(spark, sf_dir, iters=2, history=[])
     assert n_cached() == before
 

@@ -30,10 +30,10 @@ import pytest
 # slow lane (`-m slow`); excluded from the default verify lane by pytest.ini.
 pytestmark = pytest.mark.slow
 
+from conftest import TABLES
 from live_data_spark.catalog import catalog
 
 SF_SRC = "/root/testdata/sf0.001"
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
 # Entries that REQUIRE data to produce their result and therefore raise a
 # clean ValueError on an empty corpus (driver-side fit/sample steps with a

@@ -8,25 +8,11 @@ sf0.01 (run here at sf0.001 for speed).
 
 from __future__ import annotations
 
-
-import duckdb
 import pytest
 
-from live_data_spark.catalog import catalog
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings".split()
-)
-
-
-def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    return con
-
-
 from conftest import canon_rows as normalize  # ONE canonicalizer for every sweep
+from conftest import duck_connection
+from live_data_spark.catalog import catalog
 
 
 ORACLE_CASES = sorted(name for name, spec in catalog().items() if spec.oracle is not None)

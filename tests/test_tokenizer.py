@@ -119,34 +119,3 @@ def test_bpe_encode_classic_fixture_handcheck(spark, tmp_path):
     row = tk.bpe_encode_stats(spark, sf).first()
     assert row["n_bpe_tokens"] == 3 and row["n_words"] == 3
     assert row["bpe_per_word"] == pytest.approx(1.0)
-
-
-def test_bpe_train_cache_tracks_on_disk_state(spark, tmp_path):
-    """The trainer memo keys on the documents table's stat fingerprint:
-    a rewrite at the SAME sf_dir must re-train on the new corpus, not
-    serve the pre-rewrite merge table (the footer-cache staleness
-    class)."""
-    import time
-
-    from live_data_spark.operators.tokenizer import bpe_train
-
-    sf = str(tmp_path)
-
-    def write(text):
-        spark.createDataFrame(
-            [(1, text, "en", "s")], "doc_id long, text string, lang string, source string"
-        ).coalesce(1).write.mode("overwrite").parquet(f"{sf}/documents.parquet")
-
-    from live_data_spark.operators.tokenizer import _TRAIN_CACHE
-
-    write("abab abab cdcd")
-    n0 = len(_TRAIN_CACHE)
-    m1 = bpe_train(spark, sf, n_merges=2)
-    assert bpe_train(spark, sf, n_merges=2) is m1  # same state: memo hit
-    time.sleep(0.02)  # mtime_ns tick so the fingerprint must move
-    write("xyxy xyxy qrqr")
-    m2 = bpe_train(spark, sf, n_merges=2)
-    assert m2 != m1 and all("a" not in l + r for l, r, _ in m2)
-    # the retrain REPLACED the stale entry (fingerprint lives in the
-    # value, not the key) — no dead entry leaks per rewrite (ADVICE r9)
-    assert len(_TRAIN_CACHE) == n0 + 1
