@@ -42,6 +42,7 @@ TARGET_LABEL = 0  # positive class for the catalog entry's binary task
 N_NEWTON = 8
 RIDGE = 1e-3  # on coefficients (not the intercept-only path): keeps X'SX+λI PD
 
+
 def _partials_fn(beta: np.ndarray, target: int):
     """mapInPandas fn: per-partition IRLS partials under current beta.
 

@@ -1509,8 +1509,9 @@ def dedup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     One exact pair subtree (``jaccard_pairs``, dedup_ngram_jaccard's
     inverted index with its lossless size-ratio prune, floored at t=0.5
     instead of 0.8) feeds all five thresholds via a broadcast 5-row grid
-    fan-out — the candidate join runs ONCE, not per threshold. Exact ground-truth tier by design
-    (quadratic DuckDB oracle, sf0.01-verified): at 100 TB the same
+    fan-out — the candidate join runs ONCE, not per threshold. Exact
+    ground-truth tier by design (quadratic DuckDB oracle,
+    sf0.01-verified): at 100 TB the same
     curve comes from the MinHash signatures (estimate Jaccard from
     signature agreement instead of exact set overlap) — the cascade
     accounting in corpus_dedup_cascade is that path's rollup.

@@ -83,7 +83,6 @@ def exact_topk(scored: DataFrame) -> DataFrame:
     )
 
 
-
 def cosine_pandas(a: Column, b: Column) -> Column:
     """Arrow-batched numpy cosine — the ≥1k-dims swap-in for ``cosine``.
 
@@ -1306,7 +1305,6 @@ def refine_adc(e: DataFrame, cand: DataFrame, refine: int) -> DataFrame:
         "query_id", "neighbor_id", cosine(F.col("qe"), F.col("ne")).alias("cos")
     )
     return exact_topk(scored)
-
 
 
 @register("ann_pq_adc", oracle=None, tags=("similarity", "vector", "compression"))

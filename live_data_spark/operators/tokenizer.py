@@ -53,6 +53,7 @@ from live_data_spark.session import local_frame
 N_MERGES = 24  # merge table size for the catalog entries (tiny demo vocab)
 END_MARK = "</w>"  # end-of-word sentinel so merges can't cross word ends
 
+
 def word_type_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(word, freq) over whitespace words of normalized text.
 

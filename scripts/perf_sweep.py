@@ -15,8 +15,9 @@ warm-up. The span's counters are the entry's record:
   names the few entries whose bytes alone do not repeat). Run
   ``--check`` on a quiet host: beside another Spark or pytest run,
   ``dedup_incremental_minhash`` has read 2 more jobs and stages and
-  ``dedup_simhash`` 103 more shuffle bytes, which quiet sweeps of the
-  same tree did not;
+  ``dedup_simhash`` 103 more shuffle bytes. Quiet sweeps of one tree
+  have moved them too: the first read 12 or 14 jobs (14 alone in a
+  fresh session), the second's bytes moved by up to 538;
 - plan shape, also exact: ``exchanges`` (shuffle ``Exchange`` nodes)
   and ``broadcasts`` (``BroadcastExchange`` nodes) in the entry frame's
   physical plan. The noop write plans its own query, so the frame's
